@@ -42,18 +42,26 @@ object Bucketing {
       metadata = opts.metadata ++ Map(KeyMeta -> key, CountMeta -> n.toString)))
   }
 
-  /** The table's bucket spec (key column, bucket count), if bucketed —
-    * newest commit carrying the spec wins, so intervening commits
-    * without bucket metadata (OPTIMIZE, coordinated promotes) don't
-    * hide it.
+  /** The table's bucket spec (key column, bucket count), if bucketed.
+    * The search reads commits newest-first, one at a time, and stops at
+    * the first commit carrying the spec: intervening commits without
+    * bucket metadata (OPTIMIZE, coordinated promotes) don't hide it, and
+    * a table bucketed at its head version pays for a few commits, not
+    * the whole history. A table that was never bucketed does read every
+    * commit — callers on the read path check the snapshot's partition
+    * columns for [[BucketCol]] first. `asOf` bounds the search to the
+    * commits at or below a time-travel version.
     */
-  def spec(table: GraftTable): Option[(String, Int)] =
-    table.history().iterator.map { c =>
+  def spec(table: GraftTable, asOf: Option[Long] = None): Option[(String, Int)] = {
+    val log = table.log
+    log.versions().reverseIterator.filter(v => asOf.forall(v <= _)).map { v =>
+      val m = log.readCommit(v).metadata
       for {
-        k <- c.metadata.get(KeyMeta)
-        n <- c.metadata.get(CountMeta)
+        k <- m.get(KeyMeta)
+        n <- m.get(CountMeta)
       } yield (k, n.toInt)
     }.collectFirst { case Some(s) => s }
+  }
 
   /** Bucket id of a literal value (must match the write-side hash). The
     * `pmod(murmur3(v), n)` expression is evaluated directly on the driver

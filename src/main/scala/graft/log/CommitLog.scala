@@ -2,8 +2,6 @@ package graft.log
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.json4s._
-import org.json4s.jackson.{JsonMethods, Serialization}
 
 import org.apache.spark.sql.types.StructType
 
@@ -39,7 +37,7 @@ final case class AddFile(
     modificationTime: Long,
     stats: Map[String, FileColStat] = Map.empty,
     /** Deletion vector; None = every physical row is live (absent in
-      * pre-DV logs — json4s default).
+      * pre-DV logs).
       */
     dv: Option[DvFile] = None,
     /** Cluster layout ("col1,col2") this file was WRITTEN under by an
@@ -107,7 +105,7 @@ final case class Commit(
     /** Change-data files under `_cdc/` for this commit (row-level
       * pre/postimages written by CDF-enabled DML/merge). Never part of
       * the live file set — only [[graft.io.GraftTable.tableChanges]]
-      * reads them. Absent in pre-CDF commits (json4s default).
+      * reads them. Absent in pre-CDF commits.
       */
     cdc: Seq[AddFile] = Nil)
 
@@ -163,8 +161,11 @@ final case class CheckpointManifest(
   * graft.manager).
   *
   * At 100 TB the log stays small: it holds file *metadata* only (a few
-  * hundred bytes per data file), and snapshot replay is O(#commits) on the
-  * driver, same as Delta's.
+  * hundred bytes per data file). Snapshot replay reads the newest
+  * checkpoint at or below the target version plus the commits after it
+  * (at most `checkpointInterval` of them on a healthy log), same as
+  * Delta's; only the full audit trail ([[graft.io.GraftTable.history]])
+  * reads every commit. Every document goes through [[LogJson]].
   */
 final class CommitLog(
     tablePath: String,
@@ -179,8 +180,6 @@ final class CommitLog(
       * older builds can read.
       */
     checkpointShardRecords: Int = CommitLog.DefaultCheckpointShardRecords) {
-
-  private implicit val formats: Formats = DefaultFormats
 
   val root = new Path(tablePath)
   val logDir = new Path(root, "_graft_log")
@@ -225,19 +224,10 @@ final class CommitLog(
 
   def tableExists(): Boolean = latestVersion().isDefined
 
-  private def readAll(in: java.io.InputStream): String =
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toString("UTF-8")
-    } finally in.close()
+  private def gunzip(p: Path): java.io.InputStream =
+    new java.util.zip.GZIPInputStream(fs.open(p), 65536)
 
-  private def readJson(p: Path): String = readAll(fs.open(p))
-
-  def readCommit(v: Long): Commit =
-    JsonMethods.parse(readJson(versionFile(v))).extract[Commit]
+  def readCommit(v: Long): Commit = LogJson.decode[Commit](fs.open(versionFile(v)))
 
   /** Union of `key`'s records folded out of retention-pruned commits
     * (see [[CommitLog.RetentionFoldedKeys]]) across every
@@ -251,7 +241,7 @@ final class CommitLog(
       .map(_.getPath)
       .filter(_.getName.matches("""folded-meta-v\d+\.json"""))
       .flatMap { p =>
-        JsonMethods.parse(readJson(p)).extract[Map[String, String]]
+        LogJson.decode[Map[String, String]](fs.open(p))
           .get(key).iterator
           .flatMap(_.split("\n").iterator.filter(_.nonEmpty))
       }
@@ -285,11 +275,9 @@ final class CommitLog(
 
   def readCheckpoint(v: Long): Checkpoint = {
     if (fs.exists(manifestFile(v))) return readShardedCheckpoint(v)
-    val json =
-      if (fs.exists(checkpointFile(v)))
-        readAll(new java.util.zip.GZIPInputStream(fs.open(checkpointFile(v))))
-      else readJson(legacyCheckpointFile(v))
-    JsonMethods.parse(json).extract[Checkpoint]
+    LogJson.decode[Checkpoint](
+      if (fs.exists(checkpointFile(v))) gunzip(checkpointFile(v))
+      else fs.open(legacyCheckpointFile(v)))
   }
 
   /** Parse a sharded checkpoint's shards in PARALLEL (one thread per
@@ -300,8 +288,7 @@ final class CommitLog(
     * replaying a silently incomplete live set.
     */
   private def readShardedCheckpoint(v: Long): Checkpoint = {
-    val m = JsonMethods.parse(readJson(manifestFile(v)))
-      .extract[CheckpointManifest]
+    val m = LogJson.decode[CheckpointManifest](fs.open(manifestFile(v)))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(m.numShards,
         Runtime.getRuntime.availableProcessors())))
@@ -309,11 +296,7 @@ final class CommitLog(
       import scala.concurrent.{Await, ExecutionContext, Future}
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       val futs = (0 until m.numShards).map { i =>
-        Future {
-          JsonMethods.parse(readAll(
-            new java.util.zip.GZIPInputStream(fs.open(shardFile(v, i)))))
-            .extract[Seq[AddFile]]
-        }
+        Future(LogJson.decode[Seq[AddFile]](gunzip(shardFile(v, i))))
       }
       val files = Await.result(
         Future.sequence(futs), scala.concurrent.duration.Duration.Inf).flatten
@@ -429,8 +412,7 @@ final class CommitLog(
         // silently.
         if (!fs.exists(manifestFile(b)) &&
             !fs.exists(legacyCheckpointFile(b)))
-          writeFileAtomic(
-            Serialization.write(readCheckpoint(b)).getBytes("UTF-8"),
+          writeFileAtomic(LogJson.encode(readCheckpoint(b)),
             legacyCheckpointFile(b))
         // retention-folded metadata (COPY INTO identity records): union
         // the doomed commits' values into the per-boundary sidecar
@@ -456,7 +438,7 @@ final class CommitLog(
           acc.map { case (k, s) => k -> s.toSeq.sorted.mkString("\n") }.toMap
         }
         if (foldable.nonEmpty)
-          writeFileAtomic(Serialization.write(foldable).getBytes("UTF-8"),
+          writeFileAtomic(LogJson.encode(foldable),
             new Path(logDir, s"folded-meta-v$b.json"))
         // checkpoint artifacts are matched by prefix so every form goes
         // (single gzip, legacy JSON, sharded manifest + shard files)
@@ -509,25 +491,24 @@ final class CommitLog(
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
         Await.result(Future.sequence(shards.zipWithIndex.map { case (part, i) =>
           Future {
-            writeFileAtomic(gzipBytes(Serialization.write(part)), shardFile(v, i))
+            writeFileAtomic(gzipped(part), shardFile(v, i))
           }
         }), scala.concurrent.duration.Duration.Inf)
       } finally pool.shutdown()
       val m = CheckpointManifest(v, ts, snap.schema.toDDL,
         snap.partitionColumns, shards.size, snap.files.size.toLong)
-      writeFileAtomic(Serialization.write(m).getBytes("UTF-8"),
-        manifestFile(v))
+      writeFileAtomic(LogJson.encode(m), manifestFile(v))
     } else {
       val c = Checkpoint(v, ts, snap.schema.toDDL,
         snap.partitionColumns, snap.files)
-      writeFileAtomic(gzipBytes(Serialization.write(c)), checkpointFile(v))
+      writeFileAtomic(gzipped(c), checkpointFile(v))
     }
   }
 
-  private def gzipBytes(s: String): Array[Byte] = {
+  private def gzipped[A: LogJson.Codec](a: A): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(out)
-    try gz.write(s.getBytes("UTF-8"))
+    val gz = new java.util.zip.GZIPOutputStream(out, 65536)
+    try LogJson.encodeTo(a, gz)
     finally gz.close()
     out.toByteArray
   }
@@ -685,7 +666,7 @@ final class CommitLog(
       partitionColumns, mergedMeta, operationMetrics, addFinal, remove, cdc)
     val tmp = new Path(logDir, s".tmp-${java.util.UUID.randomUUID()}.json")
     val out = fs.create(tmp, false)
-    try out.write(Serialization.write(c).getBytes("UTF-8"))
+    try LogJson.encodeTo(c, out)
     finally out.close()
     publish(tmp, versionFile(v), v)
     if (checkpointInterval > 0 && v > 0 && v % checkpointInterval == 0) {

@@ -122,14 +122,17 @@ object ConflictCheck {
       if (c.schemaDdl != baseSchemaDdl)
         throw new MetadataChangedException(
           s"concurrent $who changed the table schema")
-      // identity high-water marks are monotone operational counters
-      // advanced by ordinary appends, not shape metadata — comparing
-      // them would kill the rebase fast path on exactly the hot-append
-      // identity tables it serves (stale-hwm safety is commit-time:
-      // CommitLog.advanceHwms never lets a rebase regress one)
+      // identity and row-id high-water marks are monotone operational
+      // counters advanced by ordinary appends, not shape metadata —
+      // comparing them would kill the rebase fast path on exactly the
+      // hot-append identity and row-tracked tables it serves (stale-hwm
+      // safety is commit-time: CommitLog.advanceHwms never lets a rebase
+      // regress an identity hwm, and CommitLog.commit assigns base row
+      // ids from the head's row-id hwm on every attempt)
       def opProps(m: Map[String, String]): Map[String, String] =
         m.filter { case (k, _) =>
-          k.startsWith(CommitLog.ReservedPrefix) && !CommitLog.isHwmKey(k)
+          k.startsWith(CommitLog.ReservedPrefix) && !CommitLog.isHwmKey(k) &&
+            k != CommitLog.RowIdHwmKey
         }
       val props = opProps(c.metadata)
       if (props != opProps(baseProperties)) {

@@ -186,16 +186,21 @@ object GraftNativeRelation {
       case other => other
     }
 
-  /** The table's bucket layout as a Spark BucketSpec — only when every
-    * live file carries a parseable `_NNNNN` bucket suffix (older tables
-    * written before suffixing fall back to a plain scan). The spec is
-    * searched newest-first through history, so intervening commits
-    * without bucket metadata (e.g. OPTIMIZE) don't hide it.
+  /** The table's bucket layout as a Spark BucketSpec — only when the
+    * snapshot is partitioned by the bucket column and every live file
+    * carries a parseable `_NNNNN` bucket suffix matching its bucket
+    * (older tables written before suffixing fall back to a plain scan).
+    * The partition-column check comes first: a table that is not
+    * bucketed at this snapshot (never was, or was replaced without
+    * bucketing) plans from the checkpoint and its replay suffix alone,
+    * without a commit-by-commit spec search (see
+    * [[graft.io.Bucketing.spec]]).
     */
   private[graft] def bucketSpecOf(
       table: graft.io.GraftTable, snap: graft.log.Snapshot): Option[BucketSpec] =
-    for {
-      (key, n) <- graft.io.Bucketing.spec(table)
+    if (!snap.partitionColumns.contains(graft.io.Bucketing.BucketCol)) None
+    else for {
+      (key, n) <- graft.io.Bucketing.spec(table, Some(snap.version))
       if snap.files.forall(f =>
         bucketIdFromName(f.path) ==
           f.partitionValues.get(graft.io.Bucketing.BucketCol).map(_.toInt))

@@ -86,6 +86,46 @@ class BucketingSpec extends SparkSpec {
     assert(plan.contains("Bucketed: "), s"expected a bucket-aware scan:\n$plan")
   }
 
+  test("a table replaced without bucketing plans plain scans") {
+    val p = tmpDir("bkreplace")
+    val orders = spark.read.parquet(s"$sf/orders.parquet")
+      .select("o_orderkey", "o_custkey")
+    Bucketing.write(spark, orders, p, "o_orderkey", 4)
+    val plain = orders.filter(col("o_orderkey") < 200)
+      .withColumn("part", col("o_orderkey") % 3)
+    GraftWriter.write(spark, plain, p,
+      WriteOptions(mode = WriteMode.CreateOrReplace, partitionBy = Seq("part")))
+    val t = GraftTable(spark, p)
+    assert(t.snapshot().partitionColumns == Seq("part"))
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("o_orderkey", "o_custkey").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = rows(plain)
+    val slice = graft.core.TableSlice("s", "t",
+      Seq(graft.core.StaticDimension("part", Seq("1"))))
+    Seq(
+      "toDf" -> t.toDf(),
+      "scan" -> t.scan(slice),
+      "format(graft)" -> spark.read.format("graft").load(p)).foreach { case (how, df) =>
+      // an aggregate on the old bucket key is where a stale BucketSpec
+      // would turn the scan bucketed
+      val grouped = df.groupBy("o_orderkey").count()
+      val plan = grouped.queryExecution.executedPlan.toString
+      assert(!plan.contains("SelectedBucketsCount"), s"$how plans a bucketed scan:\n$plan")
+      val expected = if (how == "scan") want.filter(_._1 % 3 == 1) else want
+      assert(rows(df) == expected, how)
+      assert(grouped.count() == expected.size, how)
+    }
+    // re-bucketed with another count: each version keeps its own layout
+    Bucketing.write(spark, orders, p, "o_orderkey", 8,
+      WriteOptions(mode = WriteMode.CreateOrReplace))
+    def bucketsAt(v: Long): Option[Int] =
+      graft.sources.GraftNativeRelation.bucketSpecOf(t, t.snapshot(Some(v))).map(_.numBuckets)
+    assert(bucketsAt(0L).contains(4) && bucketsAt(1L).isEmpty && bucketsAt(2L).contains(8))
+    assert(rows(t.toDf(Some(1L))) == want)
+    assert(t.toDf(Some(0L)).count() == orders.count())
+  }
+
   test("mismatched bucket counts are rejected") {
     val pa = tmpDir("bka")
     val pb = tmpDir("bkb")

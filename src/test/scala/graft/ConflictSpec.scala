@@ -99,6 +99,43 @@ class ConflictSpec extends SparkSpec {
     }
   }
 
+  test("row-id hwm advances are NOT metadata conflicts; rebased row ids stay disjoint") {
+    val blind = TxnProfile(Set.empty, Set.empty, _ => false, isBlindAppend = true)
+    ConflictCheck.check(blind, baseSchema,
+      Map(CommitLog.RowIdHwmKey -> "9"), Map.empty,
+      Seq(commitOf(1, add = Seq(addFile("f9")),
+        metadata = Map(CommitLog.RowIdHwmKey -> "19"))), "/t")
+
+    // end to end on a row-tracked log: a blind append loses its CAS to
+    // another append and must rebase, taking its ids above the winner's
+    val p = tmpDir("rowid_rebase") + "/t"
+    val log = new CommitLog(p, spark.sessionState.newHadoopConf())
+    def append(name: String, rows: Long, expected: Option[Long] = None): Long =
+      log.commit("WRITE", "Append", baseSchema, Nil,
+        Map(CommitLog.RowTrackingKey -> "true"), Map.empty,
+        Seq(AddFile(name, Map.empty, 1L, rows, 0L)), Nil, expectedVersion = expected)
+    append("a", 10L)
+    val base = log.snapshot()
+    val winner = append("b", 7L)
+    var attempts = 0
+    val v = log.commitOrRebase(blind, base) { exp =>
+      attempts += 1
+      append("c", 5L, Some(exp))
+    }
+    assert(v == winner + 1 && attempts == 2)
+    def ranges(version: Long): Seq[(Long, Long)] =
+      log.readCommit(version).add.map(a =>
+        (a.baseRowId.get, a.baseRowId.get + a.numRecords - 1))
+    val (ws, we) = ranges(winner).head
+    val (rs, re) = ranges(v).head
+    assert(re < ws || rs > we, s"rebased ids [$rs, $re] overlap the winner's [$ws, $we]")
+    // every live file's id range is disjoint from every other's
+    val all = log.snapshot().files.map(a => (a.baseRowId.get, a.baseRowId.get + a.numRecords - 1))
+      .sortBy(_._1)
+    assert(all.size == 3)
+    all.sliding(2).foreach { case Seq((_, e1), (s2, _)) => assert(e1 < s2, all) }
+  }
+
   test("DV repoints: grown DV is a delete, shrunk DV (RESTORE) is an append") {
     val anyRead = TxnProfile(Set("f9"), Set("f9"), _ => true)
     // grown DV on an unrelated file: live rows only shrank — rebase OK

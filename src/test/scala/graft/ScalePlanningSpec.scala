@@ -113,4 +113,34 @@ class ScalePlanningSpec extends SparkSpec {
     assert(tTravel < 30000, s"time-travel replay took ${tTravel}ms")
     info(s"time-travel replay: ${tTravel}ms")
   }
+
+  test("a non-bucketed read plans from the checkpoint and its suffix alone") {
+    import spark.implicits._
+    val p = tmpDir("suffix") + "/t"
+    (0 until 4).foreach { v =>
+      graft.io.GraftWriter.write(spark,
+        Seq((v * 10L, v.toLong % 2), (v * 10L + 1, v.toLong % 2)).toDF("id", "p"), p,
+        graft.io.WriteOptions(partitionBy = Seq("p")))
+    }
+    val t = GraftTable(spark, p)
+    t.log.writeCheckpoint(2L)
+    // a commit BELOW the checkpoint turns unreadable: nothing that plans
+    // a read at or after the checkpoint may parse it
+    val below = new java.io.File(s"$p/_graft_log/v0000000001.json")
+    java.nio.file.Files.write(below.toPath, "{not json".getBytes("UTF-8"))
+    intercept[Exception](t.log.readCommit(1L))
+
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("id").collect().map(_.getLong(0)).toSet
+    val all = Set(0L, 1L, 10L, 11L, 20L, 21L, 30L, 31L)
+    assert(ids(t.toDf()) == all)
+    val slice = graft.core.TableSlice("s", "t",
+      Seq(graft.core.StaticDimension("p", Seq("1"))), Some(Seq("id")))
+    assert(ids(t.scan(slice)) == Set(10L, 11L, 30L, 31L))
+    assert(ids(spark.read.format("graft").load(p)) == all)
+    assert(ids(t.toDf(Some(2L))) == all -- Set(30L, 31L))
+    assert(ids(t.scan(slice, Some(3L))) == Set(10L, 11L, 30L, 31L))
+    assert(ids(spark.read.format("graft").option("versionAsOf", 2L).load(p)) ==
+      all -- Set(30L, 31L))
+  }
 }
