@@ -124,8 +124,8 @@ object DeletionVectors {
     * repointed action carrying the merged DV — `None` when the merged DV
     * would cover every physical row (the file is dropped outright) —
     * plus the newly-deleted row count. Shared by DELETE/UPDATE
-    * ([[graft.merge.Dml]]) and the merge-on-read MERGE paths
-    * ([[graft.merge.MergeExecutor]], [[graft.merge.MergeClausesExecutor]]).
+    * ([[graft.merge.Dml]]) and the merge engine's merge-on-read path
+    * ([[graft.merge.MergeClausesExecutor]]), which every MERGE takes.
     */
   def bitmapUpdates(
       spark: SparkSession,

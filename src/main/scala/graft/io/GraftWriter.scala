@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
 import graft.log.{AddFile, CommitLog, RemoveFile}
 
 /** Write modes — the reference's `WriteMode` enum plus merge handled by
-  * [[graft.merge.MergeExecutor]]
-  * (reference: dagster_delta/io_manager.py:48-56; dispatch
+  * [[graft.merge.MergeExecutor]], which lowers onto the one merge engine
+  * [[graft.merge.MergeClausesExecutor]] (reference: dagster_delta/io_manager.py:48-56; dispatch
   * handler.py:206-235).
   */
 sealed trait WriteMode { def name: String }
@@ -1191,9 +1191,10 @@ object GraftWriter {
 
   /** Copy-on-write commit: stage `df` as new data files and commit them
     * together with an explicit removal list — the file-granular rewrite
-    * primitive behind [[graft.merge.MergeExecutor]] (only the files a
-    * merge actually touches are replaced; everything else stays as-is in
-    * the log). Single attempt by design: a concurrent commit invalidates
+    * primitive behind the merge engine
+    * ([[graft.merge.MergeClausesExecutor]]) and [[graft.merge.Dml]] (only
+    * the files a command actually touches are replaced; everything else
+    * stays as-is in the log). Single attempt by design: a concurrent commit invalidates
     * the caller's removal set, so conflicts surface as
     * ConcurrentModificationException for the caller (or a
     * RetryingCoordinator) to re-derive and re-run.

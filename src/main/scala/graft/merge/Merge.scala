@@ -1,10 +1,8 @@
 package graft.merge
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.io.{DataFilter, DataSkipping, GraftTable, GraftWriter, SkipOp, WriteMode, WriteOptions}
-import graft.log.{AddFile, RemoveFile}
+import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.StructType
 
 /** The reference's four merge strategies
   * (reference: dagster_delta/config.py:190-196, handler.py:70-120).
@@ -64,42 +62,26 @@ final case class MergeStats(
     numSourceRows: Long,
     numOutputRows: Long)
 
-/** Executes merges as declarative join plans over [[GraftTable]] — every
-  * strategy is pure-relational (and therefore oracle-checkable):
+/** The reference's merge API ([[MergeConfig]]) over graft's one merge
+  * engine: each strategy is a clause preset of [[MergeClausesExecutor]],
+  * as delta-rs builds them from its clause builders (reference:
+  * handler.py:70-120):
   *
-  *   - update_only:   (t LEFT JOIN s) project s-if-matched-else-t
-  *   - dedup_insert:  t UNION ALL (s LEFT ANTI JOIN t)
-  *   - upsert:        update_only ∪ (s LEFT ANTI JOIN t)
-  *   - replace_delete_unmatched: s LEFT SEMI JOIN t
+  *   - update_only:   WHEN MATCHED UPDATE ALL
+  *   - dedup_insert:  WHEN NOT MATCHED INSERT ALL
+  *   - upsert:        both
+  *   - replace_delete_unmatched: WHEN MATCHED UPDATE ALL +
+  *                    WHEN NOT MATCHED BY SOURCE DELETE
   *
-  * If the target table doesn't exist it is created empty from the source
-  * schema first (reference: handler.py:241-252).
+  * The config's scope, type check and single-match settings ride along
+  * into the engine. If the target table doesn't exist it is created empty
+  * from the source schema first (reference: handler.py:241-252).
   *
   * Multi-match caveat: when one target row matches several source rows the
-  * update strategies emit one row per match (Delta errors instead). Callers
-  * needing Delta semantics should de-duplicate the source on the merge key
-  * first (e.g. with [[graft.ext.Dedup.latestByKey]]).
-  *
-  * Physical execution is file-granular copy-on-write, the property that
-  * makes merge usable at 100 TB (a 1-row upsert must not be a 100 TB
-  * write — the reference gets this from delta-rs merge internals driven
-  * at handler.py:70-120):
-  *
-  *   1. candidate files = the snapshot, narrowed to `partitionFilter`'s
-  *      partitions when the predicate is partition-aligned (the reference
-  *      ANDs partition conjuncts the same way, handler.py:92-98);
-  *   2. touched files = candidates holding ≥1 in-scope row matching the
-  *      merge predicate, discovered with a semi-join over
-  *      `input_file_name()`;
-  *   3. only touched files are rewritten (their unmatched and
-  *      out-of-scope rows are carried over); everything else stays
-  *      untouched in the commit. `deduplicate_insert` never rewrites at
-  *      all — it appends the anti-joined inserts.
-  *
-  * Scale notes: the joins shuffle on the merge keys; Catalyst picks
-  * broadcast when the source is small (the common CDC case). The source
-  * is persisted for the duration — it is used by both the
-  * touched-file discovery and the rewrite.
+  * update strategies emit one row per match (Delta errors instead, as
+  * `failOnMultipleMatches` does). Callers needing Delta semantics should
+  * de-duplicate the source on the merge key first (e.g. with
+  * [[graft.ext.Dedup.latestByKey]]).
   */
 object MergeExecutor {
 
@@ -108,567 +90,54 @@ object MergeExecutor {
       source: DataFrame,
       path: String,
       config: MergeConfig,
-      partitionBy: Seq[String] = Nil): MergeStats = {
-    if (!GraftTable.exists(spark, path)) {
-      // create empty target with source schema
-      GraftWriter.write(spark, source.limit(0), path,
-        WriteOptions(mode = WriteMode.ErrorIfExists, partitionBy = partitionBy))
-    }
-    val table = GraftTable(spark, path)
-    val src = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val numSource = src.count() // also materializes the cache
-      // a concurrent commit invalidates the derived removal set; re-derive
-      // against the fresh snapshot and retry (bounded)
-      Cow.retryOnConflict() {
-        mergeOnce(spark, table, src, numSource, path, config)
-      }
-    } finally src.unpersist()
-  }
+      partitionBy: Seq[String] = Nil): MergeStats =
+    MergeClausesExecutor.run(spark, source, path, partitionBy, lower(config))
 
-  private def mergeOnce(
-      spark: SparkSession,
-      table: GraftTable,
-      src: DataFrame,
-      numSource: Long,
-      path: String,
-      config: MergeConfig): MergeStats = {
-    val snap = table.snapshot()
-    // merge-on-read (opt-in `graft.dv=true`): matched preimages become
-    // DV entries on their files instead of whole-file rewrites.
-    // DeduplicateInsert is already append-only — nothing to DV.
-    if (graft.io.DeletionVectors.enabled(table.log.tableProperties()) &&
-        config.mergeType != MergeType.DeduplicateInsert)
-      return dvMergeOnce(spark, table, src, numSource, path, config, snap)
-    locally {
-      // schema evolution: the commit's schema is the union; every target
-      // DataFrame below is padded with the new columns as nulls so the
-      // strategies and CDC see one uniform shape
-      val mergedSchema =
-        if (config.schemaEvolution)
-          GraftWriter.mergeSchemas(snap.schema, src.schema)
-        else snap.schema
-      def evolve(df: DataFrame): DataFrame =
-        graft.io.Schemas.padTo(df, mergedSchema)
-      val cols = mergedSchema.map(_.name)
-      val cond = expr(config.predicate)
-      val sa = config.sourceAlias
-      val ta = config.targetAlias
-
-      // 1. Candidate files: partition pruning then footer-stats pruning
-      // (see candidateFiles)
-      val candidates: Seq[AddFile] = candidateFiles(spark, snap, src, config)
-      val candDf = table.dfForFiles(snap, candidates)
-      // row-level scope (exact even when the filter isn't partition-aligned);
-      // filter sits directly on the scan so pruning/pushdown still fire
-      val scoped = config.partitionFilter.map(candDf.filter).getOrElse(candDf)
-      val fileCol = "__graft_file"
-      val scopedWithFile = scoped.withColumn(fileCol, input_file_name())
-
-      def collectFiles(d: DataFrame): Seq[AddFile] =
-        Cow.touchedFiles(spark, path, candidates, d, fileCol)
-
-      // 2. Touched files (metadata-scale driver collect, like Delta's).
-      val touched: Seq[AddFile] = config.mergeType match {
-        case MergeType.DeduplicateInsert => Nil // append-only, nothing rewritten
-        case MergeType.ReplaceDeleteUnmatched =>
-          // every file holding an in-scope row loses its unmatched rows
-          collectFiles(scopedWithFile)
-        case _ =>
-          collectFiles(
-            scopedWithFile.alias(ta).join(src.alias(sa), cond, "left_semi"))
-      }
-
-      // 3. Rewrite only the touched files; carry over their out-of-scope
-      // rows; remove only them. The touched-file frame is shared with
-      // the CDC block below (lazy: the append-only strategy never
-      // builds it). Row tracking: the touched rows are read WITH their
-      // ids, renamed to the physical materialization column so the
-      // rewrite preserves them (carried + updated rows keep ids;
-      // inserts draw fresh ones from the new files' baseRowId default).
-      val rowIds = graft.io.RowTracking.enabled(table.log.tableProperties())
-      lazy val affDf = evolve(
-        table.dfForFilesCarryingIds(snap, touched, carryIds = rowIds))
-      lazy val affScoped =
-        config.partitionFilter.map(affDf.filter).getOrElse(affDf)
-      val (newData, removals) = config.mergeType match {
-        case MergeType.DeduplicateInsert =>
-          val inserts = src.alias(sa)
-            .join(scoped.alias(ta), cond, "left_anti")
-            .select(cols.map(col): _*)
-          (inserts, Nil)
-        case _ =>
-          // matches exist only in touched files, so merging the touched
-          // in-scope rows is equivalent to merging the full scope (and
-          // the anti-join inserts of upsert are likewise unchanged)
-          val merged = apply(affScoped, src, config)
-          // null-safe complement: rows where the scope filter evaluates to
-          // NULL are out of scope and must be carried over, not dropped
-          // (`!p` would be NULL for them and filter both ways)
-          val withKept = config.partitionFilter match {
-            case Some(p) => merged.unionByName(affDf.filter(!coalesce(p, lit(false))))
-            case None    => merged
-          }
-          (withKept, touched.map(f => RemoveFile(f.path)))
-      }
-
-      // change-data feed (opt-in `graft.cdf`): row-level pre/postimages
-      // mirroring each strategy's relational semantics, computed over the
-      // touched files only — change volume scales with the merge's hits,
-      // never the table. DeduplicateInsert commits as a pure append, and
-      // the CDF reader synthesizes its inserts from the add actions.
-      val cdcFiles: Seq[AddFile] =
-        strategyCdc(spark, path, table, affScoped, src, config, cols)
-
-      val readPaths = (config.mergeType match {
-        case MergeType.UpdateOnly => touched
-        case _                    => candidates // anti-join / RDU read them all
-      }).map(_.path).toSet
-      val profile = conflictProfile(spark, snap, src, config.predicate,
-        sa, ta, config.partitionFilter, readPaths,
-        removals.map(_.path).toSet,
-        readsUnmatchedRows = config.mergeType == MergeType.ReplaceDeleteUnmatched)
-      val v = GraftWriter.writeCow(spark, newData, path, snap, removals,
-        operation = "MERGE",
-        metadata = config.metadata ++
-          Map("operation" -> s"MERGE:${config.mergeType.name}"),
-        cdc = cdcFiles,
-        schemaOverride =
-          if (config.schemaEvolution) Some(mergedSchema) else None,
-        profile = Some(profile))
-      val numOut = table.snapshot().files.map(_.liveRecords).sum
-      MergeStats(v, numSource, numOut)
-    }
-  }
-
-  /** Merge-on-read merge (opt-in `graft.dv=true`): the rows a strategy
-    * would replace or delete become deletion-vector entries on their
-    * files; replacement and inserted rows append as new files. An upsert
-    * touching one row per file on a 100 TB table therefore costs
-    * O(matched rows) of compressed bitmap plus the appended rows — never
-    * a rewrite of every touched file (the COW path's write
-    * amplification). Row semantics are IDENTICAL to the COW strategies
-    * (oracle-checked: `merge_upsert_dv` hashes equal to `merge_upsert`):
-    *
-    *   - update_only / upsert: matched target rows are DV'd; one
-    *     postimage per (target,source) match pair appends (the COW
-    *     emit-one-row-per-match contract); upsert also appends the
-    *     anti-joined inserts;
-    *   - replace_delete_unmatched: every in-scope target row is DV'd
-    *     (replaced or deleted); matched source rows append.
-    *
-    * The matched-row discovery scans with `_metadata` row identity
-    * (deterministic — pushdown-friendly, unlike input_file_name), and
-    * existing DVs are anti-filtered by the scan, so re-merging over
-    * already-DV'd files unions bitmaps exactly like [[Dml]].
-    */
-  private def dvMergeOnce(
-      spark: SparkSession,
-      table: GraftTable,
-      src: DataFrame,
-      numSource: Long,
-      path: String,
-      config: MergeConfig,
-      snap: graft.log.Snapshot): MergeStats = {
-    import graft.io.DeletionVectors
-    val mergedSchema =
-      if (config.schemaEvolution)
-        GraftWriter.mergeSchemas(snap.schema, src.schema)
-      else snap.schema
-    val cols = mergedSchema.map(_.name)
-    val cond = expr(config.predicate)
-    val sa = config.sourceAlias
-    val ta = config.targetAlias
-
-    // same contract checks as the relational core (MergeExecutor.apply),
-    // against the same schema apply sees (the evolved one)
-    validateSource(mergedSchema, src, config)
-
-    val candidates = candidateFiles(spark, snap, src, config)
-    // row tracking: matched target rows leave via DV and re-enter as
-    // appended source projections — carry each target row's id into its
-    // replacement so a DV merge preserves ids exactly like COW
-    val rowIds = graft.io.RowTracking.enabled(table.log.tableProperties())
-    val candDfM = table.dfForFilesCarryingIds(snap, candidates,
-      carryIds = rowIds, withRowMeta = true)
-    val scopedM = config.partitionFilter.map(candDfM.filter).getOrElse(candDfM)
-    val fileC = col(graft.sources.GraftNativeRelation.RowMetaFileCol)
-    val idxC = col(graft.sources.GraftNativeRelation.RowMetaIndexCol)
-
-    if (config.failOnMultipleMatches) {
-      // `_metadata` row identity doubles as the target-row id — no
-      // monotonically_increasing_id pass needed on this path
-      requireSingleMatch(
-        scopedM.alias(ta).join(src.alias(sa), cond, "inner"),
-        Seq(fileC, idxC), config.mergeType.name)
-    }
-
-    // rows whose current images leave the table → per-file bitmaps
-    val dvHits = config.mergeType match {
-      case MergeType.ReplaceDeleteUnmatched => scopedM // replaced or deleted
-      case _ => scopedM.alias(ta).join(src.alias(sa), cond, "left_semi")
-    }
-    val (updated, _) = DeletionVectors.bitmapUpdates(
-      spark, path, snap, dvHits.select(fileC, idxC))
-    val touched = updated.map(_._1)
-    val removals = touched.map(f => RemoveFile(f.path))
-    val dvAdds = updated.flatMap(_._2)
-
-    // appended rows are pure source projections (every strategy writes
-    // full source rows for its matches), cast to the commit schema like
-    // the COW when/otherwise projection coerces. `rid` threads the
-    // matched TARGET row's id into its replacement (None = fresh)
-    def proj(df: DataFrame, qualifier: Option[String],
-        rid: Option[Column] = None): DataFrame =
-      df.select(cols.map { c =>
-        val base = qualifier.map(q => col(s"$q.$c")).getOrElse(col(c))
-        base.cast(mergedSchema(c).dataType).as(c)
-      } ++ (if (!rowIds) Nil else Seq(
-        rid.getOrElse(lit(null).cast("long"))
-          .as(graft.io.RowTracking.PhysicalCol))): _*)
-    val keepRid = Some(col(s"$ta.${graft.io.RowTracking.PhysicalCol}"))
-    val appended: DataFrame = config.mergeType match {
-      case MergeType.UpdateOnly =>
-        proj(scopedM.alias(ta).join(src.alias(sa), cond, "inner"), Some(sa),
-          rid = keepRid)
-      case MergeType.Upsert =>
-        proj(scopedM.alias(ta).join(src.alias(sa), cond, "inner"), Some(sa),
-          rid = keepRid)
-          .unionByName(
-            proj(src.alias(sa).join(scopedM.alias(ta), cond, "left_anti"), None))
+  /** A strategy as its clause preset plus the config's settings. */
+  private def lower(config: MergeConfig): MergeClausesExecutor.Spec = {
+    val (matched, notMatched, bySource) = config.mergeType match {
+      case MergeType.UpdateOnly        => (Seq(UpdateAll()), Nil, Nil)
+      case MergeType.DeduplicateInsert => (Nil, Seq(InsertAll()), Nil)
+      case MergeType.Upsert            => (Seq(UpdateAll()), Seq(InsertAll()), Nil)
       case MergeType.ReplaceDeleteUnmatched =>
-        // source rows may match N target rows — no well-defined id
-        proj(src.alias(sa).join(scopedM.alias(ta), cond, "left_semi"), None)
-      case MergeType.DeduplicateInsert =>
-        throw new IllegalStateException("unreachable: dedup insert never takes the DV path")
+        (Seq(UpdateAll()), Nil, Seq(Delete()))
     }
-
-    // CDF: identical change semantics to the COW path, over the touched
-    // scope of the PRE-merge snapshot
-    lazy val affDf = graft.io.Schemas.padTo(
-      table.dfForFiles(snap, touched), mergedSchema)
-    lazy val affScoped =
-      config.partitionFilter.map(affDf.filter).getOrElse(affDf)
-    val cdcFiles = strategyCdc(spark, path, table, affScoped, src, config, cols)
-
-    val readPaths = (config.mergeType match {
-      case MergeType.UpdateOnly => touched
-      case _                    => candidates
-    }).map(_.path).toSet
-    val profile = conflictProfile(spark, snap, src, config.predicate,
-      sa, ta, config.partitionFilter, readPaths,
-      removals.map(_.path).toSet,
-      readsUnmatchedRows = config.mergeType == MergeType.ReplaceDeleteUnmatched)
-    val v = GraftWriter.writeCow(spark, appended, path, snap, removals,
-      operation = "MERGE",
+    MergeClausesExecutor.Spec(config.predicate, matched, notMatched, bySource,
+      config.sourceAlias, config.targetAlias, config.schemaEvolution,
+      scope = config.partitionFilter,
+      typeCheck = config.errorOnTypeMismatch,
+      singleMatch = config.failOnMultipleMatches,
+      label = config.mergeType.name,
       metadata = config.metadata ++
-        Map("operation" -> s"MERGE:${config.mergeType.name}"),
-      cdc = cdcFiles,
-      schemaOverride =
-        if (config.schemaEvolution) Some(mergedSchema) else None,
-      extraAdds = dvAdds,
-      profile = Some(profile))
-    val numOut = table.snapshot().files.map(_.liveRecords).sum
-    MergeStats(v, numSource, numOut)
+        Map("operation" -> s"MERGE:${config.mergeType.name}"))
   }
-
-  /** Candidate files for a strategy merge: prune whole partitions when
-    * the scope predicate resolves against partition columns alone
-    * (non-aligned predicates fall back to all files, scoped per-row by
-    * the caller), then skip files whose footer min/max proves they
-    * cannot hold a source key (plain equi-merges only): a pruned file
-    * provably contains no match, so it is untouched for update/upsert
-    * and cannot suppress a dedup insert — safe to exclude. RDU deletes
-    * unmatched rows everywhere, so no stat pruning there. This is what
-    * keeps the discovery scan O(overlapping files) on a 100 TB table
-    * with a narrow CDC batch.
-    */
-  private def candidateFiles(
-      spark: SparkSession,
-      snap: graft.log.Snapshot,
-      src: DataFrame,
-      config: MergeConfig): Seq[AddFile] = {
-    val partitionPruned: Seq[AddFile] = config.partitionFilter match {
-      case Some(p) if snap.partitionColumns.nonEmpty =>
-        try {
-          val keep = GraftWriter.matchingFiles(
-            spark, snap.files, snap.schema, snap.partitionColumns, p).toSet
-          snap.files.filter(f => keep(f.path))
-        } catch {
-          case _: org.apache.spark.sql.AnalysisException => snap.files
-        }
-      case _ => snap.files
-    }
-    if (config.mergeType == MergeType.ReplaceDeleteUnmatched) partitionPruned
-    else pruneByStats(partitionPruned, snap, src, config.predicate,
-      config.sourceAlias, config.targetAlias)
-  }
-
-  /** Conflict profile of a merge ([[graft.log.CommitLog.commitOrRebase]]):
-    * `readPaths` are the candidate files whose rows influenced the
-    * output — for an update-only merge just the touched files, but for
-    * any strategy with an anti-join or by-source branch every candidate
-    * (the insert decision read them all). A concurrent append conflicts
-    * when it lands inside the merge's partition scope AND its stats
-    * cannot rule out the source's key range; a merge that also touches
-    * UNMATCHED in-scope rows (`readsUnmatchedRows` — RDU, by-source
-    * clauses) conflicts with ANY in-scope append.
-    */
-  private[merge] def conflictProfile(
-      spark: SparkSession,
-      snap: graft.log.Snapshot,
-      src: DataFrame,
-      predicate: String,
-      sa: String,
-      ta: String,
-      partitionFilter: Option[Column],
-      readPaths: Set[String],
-      removePaths: Set[String],
-      readsUnmatchedRows: Boolean): graft.log.TxnProfile = {
-    // lazy: the matchers cost an analysis pass and a (cached-)source
-    // aggregation — only pay on a lost CAS, never on the common
-    // uncontended commit
-    lazy val partMatcher: AddFile => Boolean = partitionFilter match {
-      case Some(p) => DataSkipping.matcherFor(spark, snap, p)
-      case None    => _ => true
-    }
-    lazy val keyMatcher: AddFile => Boolean =
-      if (readsUnmatchedRows) { _ => true }
-      else equiKey(predicate, sa, ta) match {
-        case Some((srcCol, tgtCol)) if src.columns.contains(srcCol) =>
-          val mm = src.agg(min(col(srcCol)), max(col(srcCol))).first()
-          if (mm.isNullAt(0)) { _ => false } // no non-null keys: nothing joins
-          else {
-            val m = graft.io.ColumnMapping.fromSnapshot(snap)
-            val phys = graft.io.ColumnMapping.physicalName(m, tgtCol)
-            val filters = Seq(
-              graft.io.DataFilter(phys, graft.io.SkipOp.Ge, mm.get(0)),
-              graft.io.DataFilter(phys, graft.io.SkipOp.Le, mm.get(1)))
-            val physSchema =
-              graft.io.ColumnMapping.physicalSchema(snap.schema, m)
-            a => filters.forall(DataSkipping.mayMatch(a, physSchema, _))
-          }
-        case _ => _ => true // non-equi predicate: any in-scope add conflicts
-      }
-    graft.log.TxnProfile(readPaths, removePaths,
-      a => partMatcher(a) && keyMatcher(a))
-  }
-
-  /** The strategies' CDF change rows (pre/postimages + strategy-specific
-    * inserts/deletes) over the touched-file scope, written as staged
-    * change files. Shared verbatim by the COW and merge-on-read paths —
-    * the change feed is defined by the merge's relational semantics, not
-    * by how the files were physically updated.
-    */
-  private def strategyCdc(
-      spark: SparkSession,
-      path: String,
-      table: GraftTable,
-      affScoped: => DataFrame,
-      src: DataFrame,
-      config: MergeConfig,
-      cols: Seq[String]): Seq[AddFile] =
-    if (config.mergeType == MergeType.DeduplicateInsert ||
-        !graft.io.Cdc.enabled(table.log.tableProperties())) Nil
-    else {
-      val sa = config.sourceAlias
-      val ta = config.targetAlias
-      val cond = expr(config.predicate)
-      val marker = "__graft_matched"
-      val joined = affScoped.alias(ta)
-        .join(src.withColumn(marker, lit(true)).alias(sa), cond, "left")
-      val isMatched = coalesce(col(s"$sa.$marker"), lit(false))
-      val cc = graft.io.Cdc.ChangeCol
-      val oldCols = cols.map(c => col(s"$ta.$c").as(c))
-      val srcCols = cols.map(c => col(s"$sa.$c").as(c))
-      val pairs = joined.filter(isMatched)
-      val updates = pairs.select(oldCols :+ lit("update_preimage").as(cc): _*)
-        .unionByName(pairs.select(srcCols :+ lit("update_postimage").as(cc): _*))
-      val changes = config.mergeType match {
-        case MergeType.UpdateOnly => updates
-        case MergeType.Upsert =>
-          // anti join against the touched rows is exact: every match
-          // lives in a touched file (same argument as the rewrite)
-          val inserts = src.alias(sa)
-            .join(affScoped.alias(ta), cond, "left_anti")
-            .select(cols.map(col): _*)
-          updates.unionByName(inserts.withColumn(cc, lit("insert")))
-        case MergeType.ReplaceDeleteUnmatched =>
-          updates.unionByName(
-            joined.filter(!isMatched)
-              .select(oldCols :+ lit("delete").as(cc): _*))
-        case MergeType.DeduplicateInsert =>
-          throw new IllegalStateException("unreachable: dedup insert is append-only")
-      }
-      graft.io.Cdc.writeChangeFiles(spark, path, changes)
-    }
-
-  /** The strategies' source contract, shared by the COW relational core
-    * ([[apply]]) and the merge-on-read path so the two can never drift:
-    * every target column must exist in the source (full-row writes), and
-    * overlapping columns must type-match when `errorOnTypeMismatch`.
-    * `targetSchema` is the schema the merge commits (the evolved one
-    * under schemaEvolution).
-    */
-  private[merge] def validateSource(
-      targetSchema: org.apache.spark.sql.types.StructType,
-      source: DataFrame,
-      config: MergeConfig): Unit = {
-    val missing = targetSchema.map(_.name).filterNot(source.columns.contains)
-    require(missing.isEmpty,
-      s"merge ${config.mergeType.name}: source is missing target columns " +
-        s"${missing.mkString(", ")} (every strategy writes full rows; add " +
-        "the columns or use MergeClausesExecutor with UPDATE SET)")
-    if (config.errorOnTypeMismatch) {
-      val tTypes = targetSchema.map(f => f.name -> f.dataType).toMap
-      source.schema.foreach { f =>
-        tTypes.get(f.name).foreach { tt =>
-          require(tt == f.dataType,
-            s"merge type mismatch on '${f.name}': target $tt vs source ${f.dataType}")
-        }
-      }
-    }
-  }
-
-  /** Delta's failOnMultipleMatches contract: no group of `rowKeys` in
-    * `matchedPairs` (target⋈source inner join) may hold more than one
-    * pair. Shared by both execution paths — only the row-identity key
-    * differs (`_metadata` file/index vs a monotonic id).
-    */
-  private[merge] def requireSingleMatch(
-      matchedPairs: DataFrame,
-      rowKeys: Seq[Column],
-      mergeName: String): Unit = {
-    val multi = matchedPairs
-      .groupBy(rowKeys: _*)
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-      .limit(1)
-      .count()
-    require(multi == 0,
-      s"merge $mergeName: a target row matches multiple " +
-        "source rows (Delta semantics); deduplicate the source on the " +
-        "merge key or unset failOnMultipleMatches")
-  }
-
-  /** `(sourceKey, targetKey)` of a plain equi-merge predicate
-    * `s.K = t.C` / `t.C = s.K`; None for anything richer.
-    */
-  private[merge] def equiKeyOf(config: MergeConfig): Option[(String, String)] =
-    equiKey(config.predicate, config.sourceAlias, config.targetAlias)
-
-  private[merge] def equiKey(
-      predicate: String, sa: String, ta: String): Option[(String, String)] = {
-    val re = """(?i)\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*""".r
-    predicate match {
-      case re(a1, c1, a2, c2) =>
-        if (a1 == sa && a2 == ta) Some((c1, c2))
-        else if (a1 == ta && a2 == sa) Some((c2, c1))
-        else None
-      case _ => None
-    }
-  }
-
-  /** Footer-stats candidate pruning for an equi-merge: drop files whose
-    * [min,max] on the target key provably misses every source key.
-    */
-  private[merge] def pruneByStats(
-      candidates: Seq[AddFile],
-      snap: graft.log.Snapshot,
-      src: DataFrame,
-      predicate: String,
-      sa: String,
-      ta: String): Seq[AddFile] =
-    equiKey(predicate, sa, ta) match {
-      case Some((srcCol, tgtCol)) if src.columns.contains(srcCol) =>
-        val mm = src.agg(min(col(srcCol)), max(col(srcCol))).first()
-        if (mm.isNullAt(0)) candidates
-        else {
-          // stats are keyed by physical column names (ColumnMapping)
-          val m = graft.io.ColumnMapping.fromSnapshot(snap)
-          val physTgt = graft.io.ColumnMapping.physicalName(m, tgtCol)
-          val filters = Seq(
-            DataFilter(physTgt, SkipOp.Ge, mm.get(0)),
-            DataFilter(physTgt, SkipOp.Le, mm.get(1)))
-          val physSchema = graft.io.ColumnMapping.physicalSchema(snap.schema, m)
-          candidates.filter(f =>
-            filters.forall(DataSkipping.mayMatch(f, physSchema, _)))
-        }
-      case _ => candidates
-    }
 
   /** The pure-relational core: merge `source` into `target` and return the
-    * new target contents. Public so it can be used (and oracle-checked) as
-    * a standalone transformation without a table on disk.
+    * new target contents — the engine's clause row core over the
+    * strategy's preset, i.e. the same function the on-disk merge runs on
+    * its touched rows. `partitionFilter` is not applied here (the caller
+    * passes the in-scope rows). Public so it can be used (and
+    * oracle-checked) as a standalone transformation without a table on
+    * disk.
+    *
+    * Row tracking: a target carrying the physical id/version columns
+    * threads them through — a surviving target row (updated or carried)
+    * keeps its id; an updated row's version is NULL (it takes the
+    * rewrite commit's version); inserted rows get NULL for both (fresh
+    * defaults at write time).
     */
   def apply(target0: DataFrame, source: DataFrame, config: MergeConfig): DataFrame = {
-    // schema evolution: pad the target with source-only columns (null)
-    // so the strategies project one uniform shape; without the flag the
-    // extra source columns are simply ignored
+    // schema evolution: pad the target with source-only columns (null);
+    // without the flag the extra source columns are simply ignored
     val target =
       if (!config.schemaEvolution) target0
       else graft.io.Schemas.padTo(target0, source.schema)
-    // row tracking: a target carrying the physical id/version columns
-    // threads them through every strategy — the id is preserved from
-    // the target row wherever a target row survives (updated or
-    // carried); the row VERSION is preserved only on carried rows (an
-    // updated row materializes NULL and falls through to the rewrite
-    // commit's version — "last modified" semantics). Inserted source
-    // rows get NULL for both (= fresh defaults at write time). The
-    // columns are plumbing, never part of the merge contract below.
-    val ridCol = graft.io.RowTracking.PhysicalCol
-    val rverCol = graft.io.RowTracking.PhysicalVersionCol
-    val plumbing = Set(ridCol, rverCol)
-    val ridCarry = target.columns.contains(ridCol)
-    validateSource(
-      org.apache.spark.sql.types.StructType(
-        target.schema.filterNot(f => plumbing(f.name))), source, config)
-    val ta = config.targetAlias
-    val sa = config.sourceAlias
-    val cond = expr(config.predicate)
-    val cols = target.columns.toSeq.filterNot(plumbing)
-    val marker = "__graft_matched"
-    val ridKeep: Seq[Column] =
-      if (!ridCarry) Nil
-      else Seq(col(s"$ta.$ridCol").as(ridCol),
-        when(col(marker), lit(null).cast("long"))
-          .otherwise(col(s"$ta.$rverCol")).as(rverCol))
-    val ridPlain: Seq[Column] =
-      if (ridCarry) Seq(col(ridCol), col(rverCol)) else Nil
-    val ridFresh: Seq[Column] =
-      if (ridCarry) Seq(lit(null).cast("long").as(ridCol),
-        lit(null).cast("long").as(rverCol))
-      else Nil
-
-    def t = target.alias(ta)
-    def s = source.alias(sa)
-
-    if (config.failOnMultipleMatches &&
-        config.mergeType != MergeType.DeduplicateInsert) {
-      val tid = "__graft_tid"
-      requireSingleMatch(
-        target.withColumn(tid, monotonically_increasing_id())
-          .alias(ta).join(s, cond, "inner"),
-        Seq(col(tid)), config.mergeType.name)
-    }
-    // NOT EXISTS via anti joins (null-safe matched detection via marker lit)
-    def updated: DataFrame =
-      t.join(s.withColumn(marker, lit(true)), cond, "left")
-        .select(cols.map { c =>
-          when(col(marker), col(s"$sa.$c")).otherwise(col(s"$ta.$c")).as(c)
-        } ++ ridKeep: _*)
-    def sourceOnly: DataFrame =
-      s.join(t, cond, "left_anti").select(cols.map(col) ++ ridFresh: _*)
-
-    config.mergeType match {
-      case MergeType.UpdateOnly => updated
-      case MergeType.DeduplicateInsert =>
-        target.select(cols.map(col) ++ ridPlain: _*).unionByName(sourceOnly)
-      case MergeType.Upsert => updated.unionByName(sourceOnly)
-      case MergeType.ReplaceDeleteUnmatched =>
-        // the output rows are SOURCE projections (possibly 1:N vs the
-        // matched target rows) — no well-defined target id to carry
-        s.join(t, cond, "left_semi").select(cols.map(col) ++ ridFresh: _*)
-    }
+    val plumbing = Set(graft.io.RowTracking.PhysicalCol,
+      graft.io.RowTracking.PhysicalVersionCol)
+    val schema = StructType(target.schema.filterNot(f => plumbing(f.name)))
+    val m = lower(config)
+    MergeClausesExecutor.checkSource(target, schema, source, m)
+    MergeClausesExecutor.rowCore(target, target, source, expr(config.predicate),
+      schema, m)
   }
 }

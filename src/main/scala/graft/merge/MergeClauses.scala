@@ -2,8 +2,9 @@ package graft.merge
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.io.{GraftTable, GraftWriter}
+import graft.io.{DataFilter, DataSkipping, GraftTable, GraftWriter, SkipOp}
 import graft.log.{AddFile, RemoveFile}
 
 /** Delta-style conditional merge clauses. Clause order is significant:
@@ -32,12 +33,31 @@ final case class InsertValues(
 
 /** General conditional merge — the `WHEN MATCHED [AND c] THEN UPDATE/
   * DELETE / WHEN NOT MATCHED THEN INSERT / WHEN NOT MATCHED BY SOURCE`
-  * surface Delta exposes, built on the same file-granular copy-on-write
-  * execution as [[MergeExecutor]]. The reference's four fixed strategies
-  * (dagster_delta/handler.py:70-120, config.py:190-196) are special
-  * cases — see MergeAlgebraSpec's equivalence property. Pure-relational
-  * row logic: one left join, clause dispatch as ordered `when` chains —
-  * fully codegen'd, no UDFs.
+  * surface Delta exposes, and graft's ONE merge engine: the reference's
+  * four fixed strategies (dagster_delta/handler.py:70-120,
+  * config.py:190-196) are clause presets that [[MergeExecutor.merge]]
+  * lowers onto it. Pure-relational row logic: one left join, clause
+  * dispatch as ordered `when` chains — fully codegen'd, no UDFs.
+  *
+  * Physical execution is file-granular copy-on-write, the property that
+  * makes merge usable at 100 TB (a 1-row upsert must not be a 100 TB
+  * write):
+  *
+  *   1. candidate files = the snapshot, narrowed to the scope's
+  *      partitions when the scope is partition-aligned, then by footer
+  *      stats on the merge key (see [[candidateFiles]]);
+  *   2. touched files = candidates holding an in-scope row where some
+  *      matched clause fires, discovered with a semi-join over
+  *      `input_file_name()` — or every file holding an in-scope row
+  *      when by-source clauses are present;
+  *   3. only touched files are rewritten (rows no clause touches and
+  *      out-of-scope rows are carried over); everything else stays
+  *      untouched in the commit. An insert-only merge never rewrites at
+  *      all — it appends the anti-joined inserts.
+  *
+  * With `graft.dv=true` step 3 becomes merge-on-read ([[dvMergeOnce]]).
+  * The source is persisted for the duration — the discovery, the
+  * rewrite and the change feed all read it.
   */
 object MergeClausesExecutor {
 
@@ -69,10 +89,47 @@ object MergeClausesExecutor {
         * carried-forward watermark property that must land ATOMICALLY
         * with the merged rows (see [[graft.ext.MaterializedAgg]]).
         */
-      extraMetadata: Map[String, String] = Map.empty): MergeStats = {
-    require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
+      extraMetadata: Map[String, String] = Map.empty): MergeStats =
+    run(spark, source, path, partitionBy, Spec(predicate, matched, notMatched,
+      notMatchedBySource, sourceAlias, targetAlias, schemaEvolution,
+      metadata = Map("operation" -> "MERGE:clauses") ++ extraMetadata))
+
+  /** One merge: its clauses plus the settings only the [[MergeConfig]]
+    * lowering sets — a partition `scope` (target rows outside it are
+    * untouched), the source type check and Delta's single-match check.
+    * `label` names the merge in errors; `metadata` is the full commit
+    * metadata.
+    */
+  private[merge] final case class Spec(
+      predicate: String,
+      matched: Seq[MatchedClause],
+      notMatched: Seq[NotMatchedClause],
+      bySource: Seq[MatchedClause],
+      sa: String,
+      ta: String,
+      schemaEvolution: Boolean,
+      scope: Option[Column] = None,
+      typeCheck: Boolean = false,
+      singleMatch: Boolean = false,
+      label: String = "clauses",
+      metadata: Map[String, String] = Map.empty) {
+    /** Some clause writes whole source rows (UPDATE ALL / INSERT ALL). */
+    def fullRow: Boolean = matched.exists(_.isInstanceOf[UpdateAll]) ||
+      notMatched.exists(_.isInstanceOf[InsertAll])
+    def scoped(df: DataFrame): DataFrame = scope.map(df.filter).getOrElse(df)
+  }
+
+  private[merge] def run(
+      spark: SparkSession,
+      source: DataFrame,
+      path: String,
+      partitionBy: Seq[String],
+      m: Spec): MergeStats = {
+    require(m.matched.nonEmpty || m.notMatched.nonEmpty || m.bySource.nonEmpty,
       "merge requires at least one clause")
     if (!GraftTable.exists(spark, path)) {
+      // create the empty target with the source schema
+      // (reference: handler.py:241-252)
       GraftWriter.write(spark, source.limit(0), path,
         graft.io.WriteOptions(mode = graft.io.WriteMode.ErrorIfExists,
           partitionBy = partitionBy))
@@ -81,11 +138,10 @@ object MergeClausesExecutor {
     val src = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val numSource = src.count()
-      // re-derive against a fresh snapshot on commit conflicts (bounded)
+      // a concurrent commit invalidates the derived removal set;
+      // re-derive against a fresh snapshot and retry (bounded)
       Cow.retryOnConflict() {
-        mergeOnce(spark, table, src, numSource, path, predicate,
-          matched, notMatched, notMatchedBySource, sourceAlias, targetAlias,
-          schemaEvolution, extraMetadata)
+        mergeOnce(spark, table, src, numSource, path, m)
       }
     } finally src.unpersist()
   }
@@ -96,227 +152,337 @@ object MergeClausesExecutor {
       src: DataFrame,
       numSource: Long,
       path: String,
-      predicate: String,
-      matched: Seq[MatchedClause],
-      notMatched: Seq[NotMatchedClause],
-      notMatchedBySource: Seq[MatchedClause],
-      sourceAlias: String,
-      targetAlias: String,
-      schemaEvolution: Boolean,
-      extraMetadata: Map[String, String]): MergeStats = {
+      m: Spec): MergeStats = {
     val snap = table.snapshot()
-    locally {
-      val cond = expr(predicate)
-      // schema evolution: the commit's schema is the union; target-side
-      // DataFrames are padded with the new columns as nulls below
-      val mergedSchema =
-        if (schemaEvolution) GraftWriter.mergeSchemas(snap.schema, src.schema)
-        else snap.schema
-      def evolve(df: DataFrame): DataFrame =
-        graft.io.Schemas.padTo(df, mergedSchema)
-      // fail fast on clause typos instead of silently keeping target values
-      val colSet = mergedSchema.map(_.name).toSet
-      def checkAll(kind: String): Unit = {
-        val missing = snap.schema.map(_.name).filterNot(src.columns.contains)
-        require(missing.isEmpty,
-          s"$kind requires the source to carry every target column; " +
-            s"missing ${missing.mkString(", ")}")
-      }
-      (matched ++ notMatchedBySource).foreach {
-        case UpdateSet(set, _) =>
-          val unknown = set.keys.filterNot(colSet)
-          require(unknown.isEmpty,
-            s"UPDATE SET names unknown target columns: ${unknown.mkString(", ")}")
-        case _: UpdateAll => checkAll("UPDATE ALL")
-        case _ => ()
-      }
-      // Delta contract: WHEN NOT MATCHED BY SOURCE permits only UPDATE SET /
-      // DELETE, and its expressions may not reference the source (every
-      // source column is NULL there — UPDATE ALL would null the whole row).
-      // A reference is source-side when it is alias-qualified with the
-      // source alias (case-insensitively — Spark's resolver is), or an
-      // unqualified name of a source-only column (it would silently
-      // resolve against the source side of the join; names in neither
-      // side are left for the analyzer — they may be literal functions
-      // like current_timestamp or lambda variables).
-      def ci(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-      val colSetCi = colSet.map(ci)
-      val srcOnlyCi = src.columns.map(ci).toSet -- colSetCi
-      def refsSource(c: Column): Boolean =
-        org.apache.spark.sql.graft.GraftInternal
-          .referencedNameParts(spark, c)
-          .exists { np =>
-            (np.lengthCompare(1) > 0 && ci(np.head) == ci(sourceAlias)) ||
-              (np.lengthCompare(1) == 0 && srcOnlyCi(ci(np.head)))
-          }
-      notMatchedBySource.foreach {
-        case _: UpdateAll =>
-          throw new IllegalArgumentException(
-            "WHEN NOT MATCHED BY SOURCE only supports UPDATE SET and DELETE " +
-              "(source columns are all NULL for those rows)")
-        case c =>
-          val exprs = (c match {
-            case UpdateSet(set, cond) => set.values.toSeq ++ cond
-            case other                => other.condition.toSeq
-          })
-          require(!exprs.exists(refsSource),
-            "WHEN NOT MATCHED BY SOURCE clauses may only reference target " +
-              s"columns ('$sourceAlias.*' is NULL for those rows)")
-      }
-      notMatched.foreach {
-        case InsertValues(values, _) =>
-          val unknown = values.keys.filterNot(colSet)
-          require(unknown.isEmpty,
-            s"INSERT VALUES names unknown target columns: ${unknown.mkString(", ")}")
-        case _: InsertAll => checkAll("INSERT ALL")
-      }
-      val cols = mergedSchema.map(_.name)
-
-      // merge-on-read (opt-in `graft.dv=true`): affected rows become DV
-      // entries instead of whole-file rewrites. Insert-only merges are
-      // pure appends on the COW path already — nothing to DV there.
-      if (graft.io.DeletionVectors.enabled(table.log.tableProperties()) &&
-          (matched.nonEmpty || notMatchedBySource.nonEmpty))
-        return dvMergeOnce(spark, table, src, numSource, path, predicate,
-          matched, notMatched, notMatchedBySource, sourceAlias, targetAlias,
-          schemaEvolution, mergedSchema, snap, extraMetadata)
-
-      // stats pruning is only sound when every row-effect needs a match:
-      // by-source clauses touch unmatched rows, and the insert anti-join
-      // is unaffected (a pruned file provably holds no source key)
-      val candidates =
-        if (notMatchedBySource.nonEmpty) snap.files
-        else MergeExecutor.pruneByStats(
-          snap.files, snap, src, predicate, sourceAlias, targetAlias)
-      val candDf = evolve(table.dfForFiles(snap, candidates))
-      val fileCol = "__graft_file"
-      val withFile = candDf.withColumn(fileCol, input_file_name())
-
-      def collectFiles(d: DataFrame): Seq[AddFile] =
-        Cow.touchedFiles(spark, path, candidates, d, fileCol)
-
-      // by-source clauses touch every row; otherwise only files where a
-      // matched clause actually FIRES for some pair (null-safe: a NULL
-      // clause condition means the clause does not apply) — a file whose
-      // matches all have non-firing conditions is left untouched instead
-      // of being rewritten verbatim
-      val matchedFires: Column = matched
-        .map(_.condition.getOrElse(lit(true)))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      val touched: Seq[AddFile] =
-        if (notMatchedBySource.nonEmpty) candidates
-        else if (matched.isEmpty) Nil // insert-only: pure append
-        else collectFiles(
-          withFile.alias(targetAlias).join(
-            src.alias(sourceAlias), cond && matchedFires, "left_semi"))
-
-      // one target row can join several source pairs where NO clause
-      // fires (all matched clauses conditional, or by-source clauses on a
-      // matched row): the carried target image must be emitted ONCE, not
-      // once per pair — rewriteRows dedups via `_metadata` row identity
-      val needRowLevel = matched.forall(_.condition.isDefined) &&
-        (matched.nonEmpty || notMatchedBySource.nonEmpty)
-      val props = table.log.tableProperties()
-      // row tracking: touched rows read WITH their ids (renamed to the
-      // physical materialization column) — every row the rewrite emits
-      // is a target row (updated or carried), so its id is preserved;
-      // inserted rows get NULL = a fresh default from the new file
-      val rowIds = graft.io.RowTracking.enabled(props)
-      val affDf = evolve(table.dfForFilesCarryingIds(snap, touched,
-        carryIds = rowIds, withRowMeta = needRowLevel))
-      val genCols = graft.io.Generated.generatedOf(props).keys.toSeq
-      val rewritten = rewriteRows(
-        affDf, src, cond, cols, matched, notMatchedBySource, sourceAlias,
-        targetAlias, rowLevel = needRowLevel, genCols = genCols)
-      val inserts = insertRows(
-        // anti join must see ALL candidate rows, not just touched files
-        candDf, src, cond, mergedSchema, notMatched, sourceAlias, targetAlias,
-        genCols = genCols, defaults = graft.io.Generated.defaultsOf(props))
-      // generated columns are recomputed ROW-LEVEL: each row's
-      // dispatched clause decides (a clause that explicitly assigns the
-      // column keeps its value for post-write validation; any other
-      // clause recomputes — Delta parity even when DIFFERENT clauses
-      // assign different columns)
-      val insertsAligned =
-        if (rowIds) inserts
-          .withColumn(graft.io.RowTracking.PhysicalCol, lit(null).cast("long"))
-          .withColumn(graft.io.RowTracking.PhysicalVersionCol,
-            lit(null).cast("long"))
-        else inserts
-      val newData = dropGenFlags(graft.io.Generated.recomputeGated(
-        rewritten.unionByName(insertsAligned), mergedSchema, props, genFlagCol),
-        genCols)
-
-      // change-data feed (opt-in `graft.cdf`): row-level pre/postimages
-      // for the touched files plus the inserted rows — change volume
-      // scales with the clauses' hits, never the table
-      val cdcFiles: Seq[AddFile] =
-        if (!graft.io.Cdc.enabled(props)) Nil
-        else {
-          val changes = changeRows(affDf, src, cond, cols,
-            matched, notMatchedBySource, sourceAlias, targetAlias,
-            mergedSchema, props, genCols)
-            .unionByName(
-              dropGenFlags(graft.io.Generated.recomputeGated(
-                inserts, mergedSchema, props, genFlagCol), genCols)
-                .withColumn(graft.io.Cdc.ChangeCol, lit("insert")))
-          graft.io.Cdc.writeChangeFiles(spark, path, changes)
-        }
-
-      val v = GraftWriter.writeCow(spark, newData, path, snap,
-        touched.map(f => RemoveFile(f.path)),
-        operation = "MERGE",
-        metadata = Map("operation" -> "MERGE:clauses") ++ extraMetadata,
-        cdc = cdcFiles,
-        schemaOverride = if (schemaEvolution) Some(mergedSchema) else None,
-        profile = Some(clauseProfile(spark, snap, src, predicate,
-          sourceAlias, targetAlias, candidates, touched, matched, notMatched,
-          notMatchedBySource)),
-        // validation set = every generated column SOME clause assigns
-        // (rows dispatched elsewhere were recomputed and pass trivially)
-        assignedCols = Some(explicitGenerated(
-          props, matched, notMatched, notMatchedBySource)))
-      val numOut = table.snapshot().files.map(_.liveRecords).sum
-      MergeStats(v, numSource, numOut)
+    // one property read per attempt, at the planned snapshot's version:
+    // the DV, CDF, row-tracking and generated-column decisions all see
+    // the version whose files are being planned
+    val props = table.log.tablePropertiesAt(snap.version)
+    val sa = m.sa
+    val ta = m.ta
+    val cond = expr(m.predicate)
+    // schema evolution: the commit's schema is the union; target-side
+    // DataFrames are padded with the new columns as nulls below
+    val mergedSchema =
+      if (m.schemaEvolution) GraftWriter.mergeSchemas(snap.schema, src.schema)
+      else snap.schema
+    def evolve(df: DataFrame): DataFrame =
+      graft.io.Schemas.padTo(df, mergedSchema)
+    // fail fast on clause typos instead of silently keeping target values
+    val colSet = mergedSchema.map(_.name).toSet
+    (m.matched ++ m.bySource).foreach {
+      case UpdateSet(set, _) =>
+        val unknown = set.keys.filterNot(colSet)
+        require(unknown.isEmpty,
+          s"UPDATE SET names unknown target columns: ${unknown.mkString(", ")}")
+      case _ => ()
     }
+    // Delta contract: WHEN NOT MATCHED BY SOURCE permits only UPDATE SET /
+    // DELETE, and its expressions may not reference the source (every
+    // source column is NULL there — UPDATE ALL would null the whole row).
+    // A reference is source-side when it is alias-qualified with the
+    // source alias (case-insensitively — Spark's resolver is), or an
+    // unqualified name of a source-only column (it would silently
+    // resolve against the source side of the join; names in neither
+    // side are left for the analyzer — they may be literal functions
+    // like current_timestamp or lambda variables).
+    def ci(s: String) = s.toLowerCase(java.util.Locale.ROOT)
+    val colSetCi = colSet.map(ci)
+    val srcOnlyCi = src.columns.map(ci).toSet -- colSetCi
+    def refsSource(c: Column): Boolean =
+      org.apache.spark.sql.graft.GraftInternal
+        .referencedNameParts(spark, c)
+        .exists { np =>
+          (np.lengthCompare(1) > 0 && ci(np.head) == ci(sa)) ||
+            (np.lengthCompare(1) == 0 && srcOnlyCi(ci(np.head)))
+        }
+    m.bySource.foreach {
+      case _: UpdateAll =>
+        throw new IllegalArgumentException(
+          "WHEN NOT MATCHED BY SOURCE only supports UPDATE SET and DELETE " +
+            "(source columns are all NULL for those rows)")
+      case c =>
+        val exprs = (c match {
+          case UpdateSet(set, cond) => set.values.toSeq ++ cond
+          case other                => other.condition.toSeq
+        })
+        require(!exprs.exists(refsSource),
+          "WHEN NOT MATCHED BY SOURCE clauses may only reference target " +
+            s"columns ('$sa.*' is NULL for those rows)")
+    }
+    m.notMatched.foreach {
+      case InsertValues(values, _) =>
+        val unknown = values.keys.filterNot(colSet)
+        require(unknown.isEmpty,
+          s"INSERT VALUES names unknown target columns: ${unknown.mkString(", ")}")
+      case _ => ()
+    }
+    val cols = mergedSchema.map(_.name)
+
+    lazy val candidates = candidateFiles(spark, snap, src, m)
+    checkSource(m.scoped(table.dfForFiles(snap, candidates)), mergedSchema, src, m)
+    val rowIds = graft.io.RowTracking.enabled(props)
+    // a schema-evolution merge must not hijack the id plumbing's names
+    // (the commit would refuse them too, but only after planning on them)
+    if (rowIds) mergedSchema.fieldNames.foreach(c => require(
+      !graft.io.RowTracking.ReservedCols.exists(_.equalsIgnoreCase(c)),
+      s"column name $c is reserved by row tracking"))
+    val genCols = graft.io.Generated.generatedOf(props).keys.toSeq
+    val defaults = graft.io.Generated.defaultsOf(props)
+
+    // merge-on-read (opt-in `graft.dv=true`): affected rows become DV
+    // entries instead of whole-file rewrites. Insert-only merges are
+    // pure appends on the COW path already — nothing to DV there.
+    if (graft.io.DeletionVectors.enabled(props) &&
+        (m.matched.nonEmpty || m.bySource.nonEmpty))
+      return dvMergeOnce(spark, table, src, numSource, path, m, snap, props,
+        mergedSchema, candidates)
+
+    // row-level scope (exact even when the filter isn't partition-aligned);
+    // the filter sits directly on the scan so pruning/pushdown still fire
+    val candDf = evolve(m.scoped(table.dfForFiles(snap, candidates)))
+    val fileCol = "__graft_file"
+    def collectFiles(d: DataFrame): Seq[AddFile] =
+      Cow.touchedFiles(spark, path, candidates, d, fileCol)
+    val withFile = candDf.withColumn(fileCol, input_file_name())
+
+    // by-source clauses touch every in-scope row; otherwise only files
+    // where a matched clause actually FIRES for some pair (null-safe: a
+    // NULL clause condition means the clause does not apply) — a file
+    // whose matches all have non-firing conditions is left untouched
+    // instead of being rewritten verbatim
+    val matchedFires: Column = m.matched
+      .map(_.condition.getOrElse(lit(true)))
+      .reduceOption(_ || _).getOrElse(lit(false))
+    val touched: Seq[AddFile] =
+      if (m.bySource.nonEmpty)
+        if (m.scope.isEmpty) candidates else collectFiles(withFile)
+      else if (m.matched.isEmpty) Nil // insert-only: pure append
+      else collectFiles(
+        withFile.alias(ta).join(src.alias(sa), cond && matchedFires, "left_semi"))
+
+    // one target row can join several source pairs where NO clause
+    // fires (all matched clauses conditional, or by-source clauses on a
+    // matched row): the carried target image must be emitted ONCE, not
+    // once per pair — rewriteRows dedups via `_metadata` row identity
+    val needRowLevel = m.matched.forall(_.condition.isDefined) &&
+      (m.matched.nonEmpty || m.bySource.nonEmpty)
+    // row tracking: touched rows read WITH their ids (renamed to the
+    // physical materialization column) — every row the rewrite emits
+    // is a target row (updated or carried), so its id is preserved;
+    // inserted rows get NULL = a fresh default from the new file
+    val affDf = evolve(table.dfForFilesCarryingIds(snap, touched,
+      carryIds = rowIds, withRowMeta = needRowLevel))
+    val affScoped = m.scoped(affDf)
+    // an unconditional matched clause fires on every matched pair (and
+    // by-source clauses touch every in-scope file), so every match lives
+    // in a touched file: the insert anti-join then reads only the
+    // touched in-scope rows instead of every candidate again
+    val insertTarget =
+      if (m.bySource.nonEmpty || m.matched.exists(_.condition.isEmpty)) affScoped
+      else candDf
+    val merged = rowCore(affScoped, insertTarget, src, cond, mergedSchema, m,
+      rowLevel = needRowLevel, genCols = genCols, defaults = defaults)
+    // out-of-scope rows of touched files are carried over. Null-safe
+    // complement: rows where the scope evaluates to NULL are out of
+    // scope (`!p` would be NULL for them and filter both ways)
+    val carried = m.scope.map(p => affDf.filter(!coalesce(p, lit(false)))
+      .select((cols ++ (if (rowIds) RidCols else Nil)).map(col) ++
+        genCols.map(g => lit(true).as(genFlagName(g))): _*))
+    // generated columns are recomputed ROW-LEVEL: each row's
+    // dispatched clause decides (a clause that explicitly assigns the
+    // column keeps its value for post-write validation; any other
+    // clause recomputes — Delta parity even when DIFFERENT clauses
+    // assign different columns)
+    val newData = dropGenFlags(graft.io.Generated.recomputeGated(
+      carried.fold(merged)(merged.unionByName), mergedSchema, props, genFlagCol),
+      genCols)
+
+    // change-data feed (opt-in `graft.cdf`): row-level pre/postimages
+    // for the touched in-scope rows plus the inserted rows — change
+    // volume scales with the clauses' hits, never the table. A merge
+    // that touches no file commits a pure append, whose inserts the CDF
+    // reader takes from the add actions.
+    val cdcFiles: Seq[AddFile] =
+      if (touched.isEmpty || !graft.io.Cdc.enabled(props)) Nil
+      else graft.io.Cdc.writeChangeFiles(spark, path,
+        changeRows(affScoped, src, cond, cols, m, mergedSchema, props, genCols)
+          .unionByName(insertChanges(insertTarget, src, cond, mergedSchema, m,
+            props, genCols, defaults)))
+
+    val v = GraftWriter.writeCow(spark, newData, path, snap,
+      touched.map(f => RemoveFile(f.path)),
+      operation = "MERGE",
+      metadata = m.metadata,
+      cdc = cdcFiles,
+      schemaOverride = if (m.schemaEvolution) Some(mergedSchema) else None,
+      profile = Some(conflictProfile(spark, snap, src, m, candidates, touched)),
+      // validation set = every generated column SOME clause assigns
+      // (rows dispatched elsewhere were recomputed and pass trivially)
+      assignedCols = Some(explicitGenerated(props, m)))
+    val numOut = table.snapshot().files.map(_.liveRecords).sum
+    MergeStats(v, numSource, numOut)
   }
 
-  /** Conflict profile of a clause merge — same shape as
-    * [[MergeExecutor.conflictProfile]]: the insert anti-join reads every
-    * candidate, by-source clauses touch unmatched in-scope rows (so any
-    * concurrent append conflicts), and otherwise only appends inside the
-    * source's key range can invalidate the derivation.
+  private val RidCols =
+    Seq(graft.io.RowTracking.PhysicalCol, graft.io.RowTracking.PhysicalVersionCol)
+
+  /** Candidate files: prune whole partitions when the scope resolves
+    * against partition columns alone (non-aligned scopes fall back to
+    * all files, scoped per-row by the caller), then skip files whose
+    * footer min/max proves they cannot hold a source key: a pruned file
+    * provably contains no match, so no matched clause fires in it and
+    * it cannot suppress an insert. By-source clauses touch unmatched
+    * rows, so no stats pruning with them. This keeps the discovery scan
+    * O(overlapping files) on a 100 TB table with a narrow CDC batch.
     */
-  private def clauseProfile(
+  private def candidateFiles(
       spark: SparkSession,
       snap: graft.log.Snapshot,
       src: DataFrame,
-      predicate: String,
-      sa: String,
-      ta: String,
-      candidates: Seq[AddFile],
-      touched: Seq[AddFile],
-      matched: Seq[MatchedClause],
-      notMatched: Seq[NotMatchedClause],
-      notMatchedBySource: Seq[MatchedClause]): graft.log.TxnProfile = {
-    val readPaths =
-      (if (notMatched.nonEmpty || notMatchedBySource.nonEmpty) candidates
-       else touched).map(_.path).toSet
-    MergeExecutor.conflictProfile(spark, snap, src, predicate, sa, ta,
-      partitionFilter = None, readPaths = readPaths,
-      removePaths = touched.map(_.path).toSet,
-      readsUnmatchedRows = notMatchedBySource.nonEmpty)
+      m: Spec): Seq[AddFile] = {
+    val partitionPruned: Seq[AddFile] = m.scope match {
+      case Some(p) if snap.partitionColumns.nonEmpty =>
+        try {
+          val keep = GraftWriter.matchingFiles(
+            spark, snap.files, snap.schema, snap.partitionColumns, p).toSet
+          snap.files.filter(f => keep(f.path))
+        } catch {
+          case _: org.apache.spark.sql.AnalysisException => snap.files
+        }
+      case _ => snap.files
+    }
+    if (m.bySource.nonEmpty) partitionPruned
+    else keyRangeMatcher(snap, src, m).fold(partitionPruned)(partitionPruned.filter)
   }
 
-  /** Merge-on-read clause merge (opt-in `graft.dv=true`): joined rows
+  /** For a plain equi-merge `s.K = t.C`: a footer-stats test of whether
+    * a file's [min,max] on the target key may hold one of the source's
+    * keys (always false when the source has no non-null key — nothing
+    * joins). None for any richer predicate.
+    */
+  private def keyRangeMatcher(
+      snap: graft.log.Snapshot,
+      src: DataFrame,
+      m: Spec): Option[AddFile => Boolean] =
+    equiKey(m.predicate, m.sa, m.ta).collect {
+      case (srcCol, tgtCol) if src.columns.contains(srcCol) =>
+        val mm = src.agg(min(col(srcCol)), max(col(srcCol))).first()
+        if (mm.isNullAt(0)) (_: AddFile) => false
+        else {
+          // stats are keyed by physical column names (ColumnMapping)
+          val cm = graft.io.ColumnMapping.fromSnapshot(snap)
+          val phys = graft.io.ColumnMapping.physicalName(cm, tgtCol)
+          val filters = Seq(DataFilter(phys, SkipOp.Ge, mm.get(0)),
+            DataFilter(phys, SkipOp.Le, mm.get(1)))
+          val physSchema = graft.io.ColumnMapping.physicalSchema(snap.schema, cm)
+          (f: AddFile) => filters.forall(DataSkipping.mayMatch(f, physSchema, _))
+        }
+    }
+
+  /** `(sourceKey, targetKey)` of a plain equi-merge predicate
+    * `s.K = t.C` / `t.C = s.K`; None for anything richer.
+    */
+  private def equiKey(
+      predicate: String, sa: String, ta: String): Option[(String, String)] = {
+    val re = """(?i)\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*""".r
+    predicate match {
+      case re(a1, c1, a2, c2) =>
+        if (a1 == sa && a2 == ta) Some((c1, c2))
+        else if (a1 == ta && a2 == sa) Some((c2, c1))
+        else None
+      case _ => None
+    }
+  }
+
+  /** Conflict profile of a merge ([[graft.log.CommitLog.commitOrRebase]]):
+    * the read set is the touched files for a matched-only merge, but
+    * every candidate once an insert anti-join or a by-source clause
+    * read them all. A concurrent append conflicts when it lands inside
+    * the merge's scope AND its stats cannot rule out the source's key
+    * range; a merge with by-source clauses touches UNMATCHED in-scope
+    * rows, so ANY in-scope append conflicts with it.
+    */
+  private def conflictProfile(
+      spark: SparkSession,
+      snap: graft.log.Snapshot,
+      src: DataFrame,
+      m: Spec,
+      candidates: Seq[AddFile],
+      touched: Seq[AddFile]): graft.log.TxnProfile = {
+    val readPaths =
+      (if (m.notMatched.nonEmpty || m.bySource.nonEmpty) candidates
+       else touched).map(_.path).toSet
+    // lazy: the matchers cost an analysis pass and a (cached-)source
+    // aggregation — only pay on a lost CAS, never on the common
+    // uncontended commit
+    lazy val partMatcher: AddFile => Boolean = m.scope match {
+      case Some(p) => DataSkipping.matcherFor(spark, snap, p)
+      case None    => _ => true
+    }
+    lazy val keyMatcher: AddFile => Boolean =
+      if (m.bySource.nonEmpty) _ => true
+      else keyRangeMatcher(snap, src, m).getOrElse(_ => true)
+    graft.log.TxnProfile(readPaths, touched.map(_.path).toSet,
+      a => partMatcher(a) && keyMatcher(a))
+  }
+
+  /** The source contract, checked before anything is written: a merge
+    * with a full-row clause (UPDATE ALL / INSERT ALL) needs every column
+    * of `schema` (the schema the merge commits — the evolved one under
+    * schema evolution) in the source; with `typeCheck` overlapping
+    * columns must type-match; with `singleMatch` (Delta's
+    * failOnMultipleMatches) no row of `target` may match more than one
+    * source row.
+    */
+  private[merge] def checkSource(
+      target: => DataFrame,
+      schema: StructType,
+      source: DataFrame,
+      m: Spec): Unit = {
+    if (m.fullRow) {
+      val missing = schema.map(_.name).filterNot(source.columns.contains)
+      require(missing.isEmpty,
+        s"merge ${m.label}: source is missing target columns " +
+          s"${missing.mkString(", ")} (UPDATE ALL / INSERT ALL write full " +
+          "rows; add the columns or use UPDATE SET / INSERT VALUES)")
+    }
+    if (m.typeCheck) {
+      val tTypes = schema.map(f => f.name -> f.dataType).toMap
+      source.schema.foreach { f =>
+        tTypes.get(f.name).foreach { tt =>
+          require(tt == f.dataType,
+            s"merge type mismatch on '${f.name}': target $tt vs source ${f.dataType}")
+        }
+      }
+    }
+    if (m.singleMatch && m.matched.nonEmpty) {
+      val tid = "__graft_tid"
+      val multi = target.withColumn(tid, monotonically_increasing_id())
+        .alias(m.ta).join(source.alias(m.sa), expr(m.predicate), "inner")
+        .groupBy(col(tid))
+        .agg(count(lit(1)).as("n"))
+        .filter(col("n") > 1)
+        .limit(1)
+        .count()
+      require(multi == 0,
+        s"merge ${m.label}: a target row matches multiple " +
+          "source rows (Delta semantics); deduplicate the source on the " +
+          "merge key or unset failOnMultipleMatches")
+    }
+  }
+
+  /** Merge-on-read merge (opt-in `graft.dv=true`): joined rows
     * where any clause fires mark their target row's physical index into
     * a per-file deletion vector; non-Delete dispatch outputs and the
     * not-matched inserts append as new files. Unaffected rows stay in
     * place (not DV'd) instead of being carried over into rewritten
-    * files — so a clause merge touching one row per file costs
+    * files — so a merge touching one row per file costs
     * O(affected rows) of compressed bitmap plus the appended rows,
     * never a rewrite of every touched file. Row semantics are identical
-    * to the COW path (oracle-checked: `merge_clauses_dv`).
+    * to the COW path (oracle-checked: `merge_upsert_dv`,
+    * `merge_clauses_dv`). Out-of-scope rows are never dispatched, so
+    * they stay in place.
     *
     * Multi-match subtlety: with CONDITIONAL matched clauses, one target
     * row can join several source rows where only some pairs fire. COW
@@ -334,45 +500,35 @@ object MergeClausesExecutor {
       src: DataFrame,
       numSource: Long,
       path: String,
-      predicate: String,
-      matched: Seq[MatchedClause],
-      notMatched: Seq[NotMatchedClause],
-      notMatchedBySource: Seq[MatchedClause],
-      sa: String,
-      ta: String,
-      schemaEvolution: Boolean,
-      mergedSchema: org.apache.spark.sql.types.StructType,
+      m: Spec,
       snap: graft.log.Snapshot,
-      extraMetadata: Map[String, String]): MergeStats = {
+      props: Map[String, String],
+      mergedSchema: StructType,
+      candidates: Seq[AddFile]): MergeStats = {
     import graft.io.DeletionVectors
-    val cond = expr(predicate)
+    val sa = m.sa
+    val ta = m.ta
+    val cond = expr(m.predicate)
     val cols = mergedSchema.map(_.name)
     def evolve(df: DataFrame): DataFrame =
       graft.io.Schemas.padTo(df, mergedSchema)
 
-    // same candidate rules as the COW path: by-source clauses touch
-    // unmatched rows everywhere, so stats pruning is only sound without
-    // them
-    val candidates =
-      if (notMatchedBySource.nonEmpty) snap.files
-      else MergeExecutor.pruneByStats(
-        snap.files, snap, src, predicate, sa, ta)
     // row tracking: affected target rows leave via DV and re-enter as
     // rewrites — carry each row's id into its replacement (same
     // preservation contract as the COW path; rewriteRows picks the
     // column up from the target frame by name)
-    val rowIds = graft.io.RowTracking.enabled(table.log.tableProperties())
-    val candDfM = evolve(table.dfForFilesCarryingIds(snap, candidates,
-      carryIds = rowIds, withRowMeta = true))
+    val rowIds = graft.io.RowTracking.enabled(props)
+    val candDfM = evolve(m.scoped(table.dfForFilesCarryingIds(snap, candidates,
+      carryIds = rowIds, withRowMeta = true)))
     val fileC = col(graft.sources.GraftNativeRelation.RowMetaFileCol)
     val idxC = col(graft.sources.GraftNativeRelation.RowMetaIndexCol)
 
-    val d = Dispatch(candDfM, src, cond, matched, notMatchedBySource, sa, ta)
+    val d = Dispatch(candDfM, src, cond, m.matched, m.bySource, sa, ta)
     // pair-affected can differ from row-affected only when every matched
     // clause is conditional (an unconditional clause fires every matched
     // pair, and by-source rows have exactly one pair)
     val affRow: Column =
-      if (matched.nonEmpty && matched.forall(_.condition.isDefined))
+      if (m.matched.nonEmpty && m.matched.forall(_.condition.isDefined))
         max(d.affected.cast("int"))
           .over(org.apache.spark.sql.expressions.Window
             .partitionBy(fileC, idxC)) === 1
@@ -391,8 +547,8 @@ object MergeClausesExecutor {
 
     // non-Delete dispatch outputs append (unaffected sibling pairs of an
     // affected row re-emit the target image through the fold's default)
-    val props = table.log.tableProperties()
     val genCols = graft.io.Generated.generatedOf(props).keys.toSeq
+    val defaults = graft.io.Generated.defaultsOf(props)
     val dvRidKeep: Seq[Column] =
       if (rowIds) Seq(
         col(s"$ta.${graft.io.RowTracking.PhysicalCol}")
@@ -408,48 +564,35 @@ object MergeClausesExecutor {
       .filter(col("__graft_keep"))
       .select(cols.map(d.outCol) ++ dvRidKeep ++
         genCols.map(g => matchedAssignFlag(d, g).as(genFlagName(g))): _*)
-    val inserts0 = insertRows(
-      // anti join must see ALL candidate rows, not just touched files
-      candDfM, src, cond, mergedSchema, notMatched, sa, ta,
-      genCols = genCols, defaults = graft.io.Generated.defaultsOf(props))
+    // anti join must see ALL in-scope candidate rows, not just touched files
+    val inserts0 = insertRows(candDfM, src, cond, mergedSchema, m.notMatched,
+      sa, ta, genCols = genCols, defaults = defaults)
     val inserts =
-      if (rowIds) inserts0
-        .withColumn(graft.io.RowTracking.PhysicalCol, lit(null).cast("long"))
-        .withColumn(graft.io.RowTracking.PhysicalVersionCol,
-          lit(null).cast("long"))
+      if (rowIds) RidCols.foldLeft(inserts0)(_.withColumn(_, lit(null).cast("long")))
       else inserts0
     val newData = dropGenFlags(graft.io.Generated.recomputeGated(
       rewrites.unionByName(inserts), mergedSchema, props, genFlagCol),
       genCols)
 
     // CDF: identical change semantics to the COW path, over the touched
-    // scope of the PRE-merge snapshot
+    // in-scope rows of the PRE-merge snapshot
     val cdcFiles: Seq[AddFile] =
-      if (!graft.io.Cdc.enabled(props)) Nil
-      else {
-        val affDf = evolve(table.dfForFiles(snap, touched))
-        // change rows carry the DECLARED schema — use the pre-rid
-        // insert projection, never the id-plumbing one
-        val changes = changeRows(affDf, src, cond, cols,
-          matched, notMatchedBySource, sa, ta, mergedSchema, props, genCols)
-          .unionByName(
-            dropGenFlags(graft.io.Generated.recomputeGated(
-              inserts0, mergedSchema, props, genFlagCol), genCols)
-              .withColumn(graft.io.Cdc.ChangeCol, lit("insert")))
-        graft.io.Cdc.writeChangeFiles(spark, path, changes)
-      }
+      if (touched.isEmpty || !graft.io.Cdc.enabled(props)) Nil
+      else graft.io.Cdc.writeChangeFiles(spark, path,
+        changeRows(evolve(m.scoped(table.dfForFiles(snap, touched))), src,
+          cond, cols, m, mergedSchema, props, genCols)
+          .unionByName(insertChanges(candDfM, src, cond, mergedSchema, m,
+            props, genCols, defaults)))
 
     val v = GraftWriter.writeCow(spark, newData, path, snap,
       touched.map(f => RemoveFile(f.path)),
       operation = "MERGE",
-      metadata = Map("operation" -> "MERGE:clauses") ++ extraMetadata,
+      metadata = m.metadata,
       cdc = cdcFiles,
-      schemaOverride = if (schemaEvolution) Some(mergedSchema) else None,
+      schemaOverride = if (m.schemaEvolution) Some(mergedSchema) else None,
       extraAdds = updated.flatMap(_._2),
-      profile = Some(clauseProfile(spark, snap, src, predicate, sa, ta,
-        candidates, touched, matched, notMatched, notMatchedBySource)),
-      assignedCols = Some(explicitGenerated(
-        props, matched, notMatched, notMatchedBySource)))
+      profile = Some(conflictProfile(spark, snap, src, m, candidates, touched)),
+      assignedCols = Some(explicitGenerated(props, m)))
     val numOut = table.snapshot().files.map(_.liveRecords).sum
     MergeStats(v, numSource, numOut)
     } finally affected.unpersist()
@@ -511,18 +654,6 @@ object MergeClausesExecutor {
         .foldLeft(lit(false))(_ || _)
   }
 
-  /** Target-side rewrite: ordered clause dispatch per row.
-    *
-    * With `rowLevel` (set when every matched clause is conditional, so a
-    * matched pair can leave its row unaffected), `target` carries
-    * `_metadata` row identity and rows where NO pair fires keep exactly
-    * one joined pair — without it a multi-matched row whose pairs all
-    * miss their clause conditions would be emitted once per pair
-    * (silent duplication vs the merge-on-read path and Delta).
-    * Affected rows still emit every pair through the dispatch (the
-    * documented emit-one-row-per-match contract, shared with the DV
-    * path's `affRow` lift).
-    */
   /** Flag-column name carrying "the dispatched clause explicitly
     * assigned generated column g" per row.
     */
@@ -550,6 +681,18 @@ object MergeClausesExecutor {
       when(guard, lit(assigns)).otherwise(rest)
     }
 
+  /** Target-side rewrite: ordered clause dispatch per row.
+    *
+    * With `rowLevel` (set when every matched clause is conditional, so a
+    * matched pair can leave its row unaffected), `target` carries
+    * `_metadata` row identity and rows where NO pair fires keep exactly
+    * one joined pair — without it a multi-matched row whose pairs all
+    * miss their clause conditions would be emitted once per pair
+    * (silent duplication vs the merge-on-read path and Delta).
+    * Affected rows still emit every pair through the dispatch (the
+    * documented emit-one-row-per-match contract, shared with the DV
+    * path's `affRow` lift).
+    */
   private def rewriteRows(
       target: DataFrame,
       source: DataFrame,
@@ -561,6 +704,12 @@ object MergeClausesExecutor {
       ta: String,
       rowLevel: Boolean = false,
       genCols: Seq[String] = Nil): DataFrame = {
+    if (matched.isEmpty && bySource.isEmpty)
+      // no clause touches a target row: they pass through as they are
+      // (the dispatch join would repeat a multi-matched row)
+      return target.select(cols.map(col) ++
+        RidCols.filter(target.columns.contains).map(col) ++
+        genCols.map(g => lit(true).as(genFlagName(g))): _*)
     val d = Dispatch(target, source, cond, matched, bySource, sa, ta)
     val pruned =
       if (!rowLevel) d.joined
@@ -608,16 +757,13 @@ object MergeClausesExecutor {
       source: DataFrame,
       cond: Column,
       cols: Seq[String],
-      matched: Seq[MatchedClause],
-      bySource: Seq[MatchedClause],
-      sa: String,
-      ta: String,
-      schema: org.apache.spark.sql.types.StructType,
+      m: Spec,
+      schema: StructType,
       props: Map[String, String],
       genCols: Seq[String]): DataFrame = {
-    val d = Dispatch(target, source, cond, matched, bySource, sa, ta)
+    val d = Dispatch(target, source, cond, m.matched, m.bySource, m.sa, m.ta)
     val tagged = d.joined.withColumn("__graft_kind", d.kind)
-    val oldCols = cols.map(c => col(s"$ta.$c").as(c))
+    val oldCols = cols.map(c => col(s"${m.ta}.$c").as(c))
     val cc = graft.io.Cdc.ChangeCol
     val updates = tagged.filter(col("__graft_kind") === "update")
     updates.select(oldCols :+ lit("update_preimage").as(cc): _*)
@@ -633,6 +779,24 @@ object MergeClausesExecutor {
         .select(oldCols :+ lit("delete").as(cc): _*))
   }
 
+  /** The insert rows as `insert` change rows (declared schema, no id
+    * plumbing; generated columns recomputed like the written rows).
+    */
+  private def insertChanges(
+      target: DataFrame,
+      source: DataFrame,
+      cond: Column,
+      schema: StructType,
+      m: Spec,
+      props: Map[String, String],
+      genCols: Seq[String],
+      defaults: Map[String, String]): DataFrame =
+    dropGenFlags(graft.io.Generated.recomputeGated(
+      insertRows(target, source, cond, schema, m.notMatched, m.sa, m.ta,
+        genCols = genCols, defaults = defaults),
+      schema, props, genFlagCol), genCols)
+      .withColumn(graft.io.Cdc.ChangeCol, lit("insert"))
+
   /** Generated columns at least one clause EXPLICITLY assigns (UPDATE
     * SET / INSERT VALUES naming them, or any full-row UPDATE ALL /
     * INSERT ALL clause — the source supplies every column there). The
@@ -642,21 +806,43 @@ object MergeClausesExecutor {
     */
   private def explicitGenerated(
       props: Map[String, String],
-      matched: Seq[MatchedClause],
-      notMatched: Seq[NotMatchedClause],
-      bySource: Seq[MatchedClause]): Set[String] = {
+      m: Spec): Set[String] = {
     val gens = graft.io.Generated.generatedOf(props).keySet
     if (gens.isEmpty) return Set.empty
-    val fullRow = (matched ++ bySource).exists(_.isInstanceOf[UpdateAll]) ||
-      notMatched.exists(_.isInstanceOf[InsertAll])
-    if (fullRow) gens
+    if (m.fullRow) gens
     else {
       val named =
-        (matched ++ bySource).collect { case UpdateSet(s, _) => s.keys }
+        (m.matched ++ m.bySource).collect { case UpdateSet(s, _) => s.keys }
           .flatten.toSet ++
-          notMatched.collect { case InsertValues(v, _) => v.keys }.flatten
+          m.notMatched.collect { case InsertValues(v, _) => v.keys }.flatten
       gens.filter(g => named.exists(_.equalsIgnoreCase(g)))
     }
+  }
+
+  /** The clause row core: the dispatch rewrite of `target` ∪ the insert
+    * rows (source rows with no match in `insertTarget` — the same rows as
+    * `target` unless the caller knows a smaller frame holds every match).
+    * The COW path runs it on the touched in-scope rows;
+    * [[MergeExecutor.apply]] is this function over the strategy presets.
+    * Inserts get NULL row-id plumbing (fresh ids at write time) when the
+    * target carries it.
+    */
+  private[merge] def rowCore(
+      target: DataFrame,
+      insertTarget: DataFrame,
+      source: DataFrame,
+      cond: Column,
+      schema: StructType,
+      m: Spec,
+      rowLevel: Boolean = false,
+      genCols: Seq[String] = Nil,
+      defaults: Map[String, String] = Map.empty): DataFrame = {
+    val inserts = insertRows(insertTarget, source, cond, schema, m.notMatched,
+      m.sa, m.ta, genCols = genCols, defaults = defaults)
+    rewriteRows(target, source, cond, schema.map(_.name), m.matched, m.bySource,
+      m.sa, m.ta, rowLevel = rowLevel, genCols = genCols)
+      .unionByName(RidCols.filter(target.columns.contains)
+        .foldLeft(inserts)(_.withColumn(_, lit(null).cast("long"))))
   }
 
   /** Insert side: first applicable not-matched clause per unmatched
@@ -666,7 +852,7 @@ object MergeClausesExecutor {
       target: DataFrame,
       source: DataFrame,
       cond: Column,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       notMatched: Seq[NotMatchedClause],
       sa: String,
       ta: String,

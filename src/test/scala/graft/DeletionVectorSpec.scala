@@ -251,6 +251,40 @@ class DeletionVectorSpec extends SparkSpec {
     }
   }
 
+  test("DV scoped merges match COW, including NULL-scope rows") {
+    import spark.implicits._
+    import graft.merge._
+    // one file mixes in-scope rows (k <= 3), out-of-scope rows and a row
+    // where the scope is NULL (out of scope: never dispatched, kept)
+    val t0 = (Seq(1L, 2L, 3L, 5L, 6L).map(k => (Option(k), s"t$k")) :+
+      ((Option.empty[Long], "tn"))).toDF("k", "v")
+    val s0 = Seq((2L, "s2"), (5L, "s5"), (9L, "s9")).toDF("k", "v")
+    def run(mt: MergeType, dv: Boolean): Seq[(Option[Long], String)] = {
+      val p = tmpDir(s"dv_scope_${mt.name}_$dv") + "/t"
+      GraftWriter.write(spark, t0.coalesce(1), p, WriteOptions(
+        mode = WriteMode.Overwrite,
+        metadata = if (dv) Map(DeletionVectors.PropKey -> "true") else Map.empty))
+      MergeExecutor.merge(spark, s0, p, MergeConfig(mt, "s.k = t.k",
+        partitionFilter = Some(col("k") <= 3L)))
+      GraftTable(spark, p).toDf().collect()
+        .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getString(1)))
+        .toSeq.sortBy(_.toString)
+    }
+    // upsert: k=2 updated; k=5 lies outside the scope, so its source row
+    // finds no in-scope match and inserts next to the untouched t5
+    val upsert = Seq((Some(1L), "t1"), (Some(2L), "s2"), (Some(3L), "t3"),
+      (Some(5L), "t5"), (Some(5L), "s5"), (Some(6L), "t6"), (Some(9L), "s9"),
+      (None, "tn")).sortBy(_.toString)
+    // RDU: in scope only k=2 matches; k=1,3 are deleted, the rest kept
+    val rdu = Seq((Some(2L), "s2"), (Some(5L), "t5"), (Some(6L), "t6"),
+      (None, "tn")).sortBy(_.toString)
+    for ((mt, want) <- Seq(MergeType.Upsert -> upsert,
+        MergeType.ReplaceDeleteUnmatched -> rdu)) {
+      assert(run(mt, dv = false) == want, s"${mt.name} COW")
+      assert(run(mt, dv = true) == want, s"${mt.name} DV")
+    }
+  }
+
   test("DV clause merge matches COW, including multi-match mixed pairs") {
     import spark.implicits._
     import graft.merge._

@@ -16,8 +16,8 @@ class MergeAlgebraSpec extends SparkSpec {
 
   private val rnd = new Random(42)
 
-  private def randomTable(maxKey: Int): DataFrame = {
-    val n = 1 + rnd.nextInt(20)
+  private def randomTable(maxKey: Int, minRows: Int = 1): DataFrame = {
+    val n = minRows + rnd.nextInt(21 - minRows)
     // distinct keys (merge contract: unique on merge key)
     val keys = rnd.shuffle((0 to maxKey).toList).take(n)
     keys.map(k => (k.toLong, rnd.nextInt(100).toLong)).toDF("k", "v")
@@ -90,6 +90,40 @@ class MergeAlgebraSpec extends SparkSpec {
         clauses(Nil, Seq(InsertAll()), Nil), s"dedup_insert equiv (case $i)")
       assert(strat(MergeType.ReplaceDeleteUnmatched) ==
         clauses(Seq(UpdateAll()), Nil, Seq(Delete())), s"rdu equiv (case $i)")
+    }
+  }
+
+  test("on-disk merge equals the relational core, scoped and unscoped (3 random multi-file pairs)") {
+    import graft.io.{GraftTable, GraftWriter, WriteMode, WriteOptions}
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    // pt = k % 3 partitions the table; `k <= 15` is not partition-aligned
+    // (candidates fall back to every file, scoped per row), `pt = 1` is
+    def withPt(df: DataFrame): DataFrame = df.withColumn("pt", col("k") % 3)
+    def triples(df: DataFrame): Seq[(Long, Long, Long)] =
+      df.select("k", "v", "pt").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    val scopes: Seq[Option[Column]] = Seq(None, Some(col("k") <= 15), Some(col("pt") === 1L))
+    val strategies = Seq(MergeType.UpdateOnly, MergeType.DeduplicateInsert,
+      MergeType.Upsert, MergeType.ReplaceDeleteUnmatched)
+    (1 to 3).foreach { i =>
+      val t0 = withPt(randomTable(30, minRows = 4))
+      val s0 = withPt(randomTable(30))
+      for (mt <- strategies; (scope, j) <- scopes.zipWithIndex) {
+        val p = tmpDir(s"mcore${i}_$j") + s"/${mt.name}"
+        GraftWriter.write(spark, t0.repartition(2), p,
+          WriteOptions(mode = WriteMode.Overwrite, partitionBy = Seq("pt")))
+        assert(GraftTable(spark, p).snapshot().files.size > 1)
+        val config = cfg(mt).copy(partitionFilter = scope)
+        MergeExecutor.merge(spark, s0, p, config)
+        val want = scope match {
+          case None => MergeExecutor(t0, s0, config)
+          case Some(f) => MergeExecutor(t0.filter(f), s0, config)
+            .unionByName(t0.filter(!coalesce(f, lit(false))))
+        }
+        assert(triples(GraftTable(spark, p).toDf()) == triples(want),
+          s"${mt.name} scope=$scope (case $i)")
+      }
     }
   }
 }

@@ -243,6 +243,28 @@ class RowTrackingSpec extends SparkSpec {
     assert(t.toDf().filter(col("k") === 1L).head().getLong(1) == 11L)
   }
 
+  test("replace_delete_unmatched keeps the target ids of the rows it replaces") {
+    // RDU is UPDATE ALL + BY SOURCE DELETE: a replaced row is a matched
+    // UPDATE, so it keeps its id (COW and DV alike); unmatched rows go
+    for (dv <- Seq(false, true)) {
+      val p = tmpDir(s"rt_rdu_$dv")
+      GraftWriter.write(spark,
+        (0L until 30L).map(i => (i, i)).toDF("k", "x").repartition(2), p,
+        WriteOptions(mode = WriteMode.Overwrite,
+          metadata = Map(CommitLog.RowTrackingKey -> "true") ++
+            (if (dv) Map(DeletionVectors.PropKey -> "true") else Map.empty)))
+      val t = GraftTable(spark, p)
+      val ids0 = idsByKey(t.toDfWithRowIds())
+      graft.merge.MergeExecutor.merge(spark,
+        (10L until 20L).map(i => (i, i * 100)).toDF("k", "x"), p,
+        graft.merge.MergeConfig(
+          graft.merge.MergeType.ReplaceDeleteUnmatched, "s.k = t.k"))
+      assert(idsByKey(t.toDfWithRowIds()) ==
+        ids0.filter { case (k, _) => k >= 10L && k < 20L }, s"dv=$dv")
+      assert(t.toDf().filter(col("x") === col("k") * 100).count() == 10)
+    }
+  }
+
   test("DV-mode UPDATE and merge preserve ids on their appended postimages") {
     val p = tmpDir("rt_dv_update")
     GraftWriter.write(spark,

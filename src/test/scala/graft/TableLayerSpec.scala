@@ -654,6 +654,41 @@ class TableLayerSpec extends SparkSpec {
     assert(contents(p) == Set((2L, "s2"), (3L, "t3")))
   }
 
+  test("replace_delete_unmatched replaces per matched target row (clause semantics)") {
+    val p = tmpDir("mrddup")
+    // the target holds k=1 twice: UPDATE ALL replaces each matched target
+    // row, so the source row comes out once per match (delta-rs / Delta)
+    GraftWriter.write(spark,
+      Seq((1L, "a"), (1L, "b"), (2L, "c"), (3L, "d")).toDF("k", "v"), p,
+      WriteOptions(mode = WriteMode.Overwrite))
+    MergeExecutor.merge(spark, Seq((1L, "s1"), (2L, "s2")).toDF("k", "v"), p,
+      cfg(MergeType.ReplaceDeleteUnmatched))
+    val rows = GraftTable(spark, p).toDf().collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    assert(rows == Seq((1L, "s1"), (1L, "s1"), (2L, "s2")))
+  }
+
+  test("a scoped replace_delete_unmatched rewrites only files holding in-scope rows") {
+    val p = tmpDir("mrdscope")
+    // four single-key files; the scope k <= 2 is not partition-aligned
+    Seq(1L, 2L, 3L, 4L).foreach { k =>
+      GraftWriter.write(spark, Seq((k, s"t$k")).toDF("k", "v"), p,
+        WriteOptions(mode = WriteMode.Append))
+    }
+    val snap0 = GraftTable(spark, p).snapshot()
+    val before = snap0.files
+    val inScope = before.filter(f => GraftTable(spark, p)
+      .dfForFiles(snap0, Seq(f)).filter(col("k") <= 2).count() > 0)
+    assert(before.size == 4 && inScope.size == 2)
+    MergeExecutor.merge(spark, Seq((2L, "s2")).toDF("k", "v"), p,
+      cfg(MergeType.ReplaceDeleteUnmatched).copy(partitionFilter = Some(col("k") <= 2)))
+    val t = GraftTable(spark, p)
+    assert(contents(p) == Set((2L, "s2"), (3L, "t3"), (4L, "t4")))
+    assert(t.history().head.operationMetrics("num_removed_files") == inScope.size.toLong)
+    val after = t.snapshot().files.map(_.path).toSet
+    assert(before.filterNot(inScope.contains).map(_.path).forall(after))
+  }
+
   test("partition-scoped merge rewrites only in-scope partitions' files") {
     val p = tmpDir("mcowp")
     val part = Seq((1L, "t1", "a"), (2L, "t2", "a"), (3L, "t3", "b"), (4L, "t4", "c"))
