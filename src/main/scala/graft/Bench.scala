@@ -51,17 +51,23 @@ object Bench {
     // 10-13s phantoms re-measured 0.3-1.3s). Sweeping separates a query's
     // samples by the full suite duration (~40s at sf0.1), so load lasting
     // less than a sweep can contaminate at most one sample of each query.
+    val failedQs = scala.collection.mutable.LinkedHashSet[String]()
     val sampled: Seq[(String, Seq[Double])] = {
       val acc = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
       headline.foreach(n => acc(n) = Vector.empty)
       for (_ <- 1 to runs; name <- headline) {
         val fn = SparkEntry.queries(name)
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        acc(name) = acc(name) :+ (System.nanoTime() - t0) / 1e9
+        val ok =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            false
+          }
+        // a failed run is not a sample: a query that fails fast would
+        // otherwise read as a speed-up (same rule as maintenanceBench)
+        if (ok) acc(name) = acc(name) :+ (System.nanoTime() - t0) / 1e9
+        else failedQs += name
         // release pair-generator scratch checkpoints between queries
         // (outside the timed region) so blocks can't accumulate across
         // the suite's ~200 materializations and skew later samples
@@ -69,7 +75,7 @@ object Bench {
       }
       acc.toSeq
     }
-    val results = sampled.map { case (name, raw) =>
+    val results = sampled.collect { case (name, raw) if raw.nonEmpty =>
       val times = raw.sorted
       (name, times(times.length / 2), times.head)
     }
@@ -90,7 +96,11 @@ object Bench {
     // SEPARATE section so the read-only headline medians stay
     // round-comparable while OPTIMIZE / ZORDER / DV DELETE / vacuum /
     // checkpoint-replay regressions get the same per-round scrutiny.
-    val maint = maintenanceBench(spark, sfDir, runs)
+    val (maint, failedMaint) = maintenanceBench(spark, sfDir, runs)
+    // every query or maintenance entry with at least one failed run,
+    // named: the loud counterpart of the samples dropped above
+    val failed = (failedQs.toSeq ++ failedMaint).map("\"" + _ + "\"")
+      .mkString("[", ",", "]")
     val maintJson = maint.map { case (k, med, _) => "\"" + k + "\":" + med }
       .mkString("{", ",", "}")
     val maintMins = maint.map { case (k, _, mn) => "\"" + k + "\":" + mn }
@@ -103,7 +113,7 @@ object Bench {
     val maintNoisy = maint.collect {
       case (k, med, mn) if mn > 0 && med / mn > 3.0 => "\"" + k + "\""
     }.mkString("[", ",", "]")
-    val detailed = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"min_queries":$mins,"noisy":$noisy,"maintenance":$maintJson,"maintenance_min":$maintMins,"maintenance_noisy":$maintNoisy,"sf":"$sfDir","runs":$runs,"agg":"median"}"""
+    val detailed = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"min_queries":$mins,"noisy":$noisy,"maintenance":$maintJson,"maintenance_min":$maintMins,"maintenance_noisy":$maintNoisy,"failed":$failed,"sf":"$sfDir","runs":$runs,"agg":"median"}"""
     println(detailed)
     // The detailed line above is ~5000 chars; the round driver captures
     // only the LAST 2000 chars of stdout, so a truncated head makes it
@@ -132,7 +142,8 @@ object Bench {
     // a query can never flap in/out of the driver's comparison because
     // its timing moved. Maintenance medians and per-query mins live in
     // bench_detail.json per the r17 verdict (worst-case line length with
-    // this envelope: 1857 chars, measured).
+    // this envelope: 1857 chars, measured, plus at most 15 for the
+    // failed-run count; the failed NAMES live in bench_detail.json).
     val totalR = math.round(total * 1000).toDouble / 1000
     val noisyN = results.count { case (_, med, mn) => mn > 0 && med / mn > 3.0 }
     val maintNoisyN = maint.count { case (_, med, mn) => mn > 0 && med / mn > 3.0 }
@@ -141,7 +152,7 @@ object Bench {
       .map { case (k, med, _) => "\"" + k + "\":" + f"$med%.2f" }
       .mkString("{", ",", "}")
     val omittedN = results.count { case (k, _, _) => compactOmit(k) }
-    println(s"""{"metric":"total","value":$totalR,"unit":"sec","queries_n":${results.length},"noisy_n":$noisyN,"queries_omitted_n":$omittedN,"queries":$compactQs,"maintenance_noisy_n":$maintNoisyN,"sf":"$sfDir","runs":$runs,"agg":"median","detail":"bench_detail.json"}""")
+    println(s"""{"metric":"total","value":$totalR,"unit":"sec","queries_n":${results.length},"noisy_n":$noisyN,"queries_omitted_n":$omittedN,"queries":$compactQs,"maintenance_noisy_n":$maintNoisyN,"failed":${failedQs.size + failedMaint.size},"sf":"$sfDir","runs":$runs,"agg":"median","detail":"bench_detail.json"}""")
     spark.stop()
   }
 
@@ -169,14 +180,16 @@ object Bench {
     * the SF's orders table: fragmented appends, bin-pack OPTIMIZE,
     * Z-order, a DV point delete, checkpoint write, a COLD snapshot
     * replay, retention vacuum, and the orphan sweep. Median of `runs`
-    * fresh-table rounds (each round its own temp table, deleted after).
+    * fresh-table rounds (each round its own temp table, deleted after),
+    * plus the names of the entries with a failed run.
     */
   private def maintenanceBench(
       spark: SparkSession, sfDir: String, runs: Int)
-      : Seq[(String, Double, Double)] = {
+      : (Seq[(String, Double, Double)], Seq[String]) = {
     import org.apache.spark.sql.functions.col
     import graft.io.{GraftTable, GraftWriter, WriteMode, WriteOptions}
     val acc = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     def time(name: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime()
       val ok =
@@ -192,6 +205,7 @@ object Bench {
       if (ok)
         acc(name) = acc.getOrElse(name, Vector.empty) :+
           (System.nanoTime() - t0) / 1e9
+      else failed += name
     }
     for (_ <- 1 to runs) {
       val root = java.nio.file.Files.createTempDirectory("graft_maint").toString
@@ -279,9 +293,9 @@ object Bench {
       graft.ext.Scratch.drain()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     }
-    acc.toSeq.map { case (k, raw) =>
+    (acc.toSeq.map { case (k, raw) =>
       val s = raw.sorted
       (k, s(s.length / 2), s.head)
-    }
+    }, failed.toSeq)
   }
 }

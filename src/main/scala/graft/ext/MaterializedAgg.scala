@@ -9,8 +9,14 @@ import graft.merge.{Delete, InsertValues, MergeClausesExecutor, UpdateSet}
 /** Materialized-view-style incremental aggregate maintenance over the
   * change feed — the composition users actually build from CDF + MERGE:
   * a summary table `GROUP BY keys → (sum, count)` kept in sync with its
-  * source by applying per-key DELTAS from `tableChanges`, never
-  * rescanning the source.
+  * source by applying per-key DELTAS from the source's change feed,
+  * never rescanning the source.
+  *
+  * Views of sums and counts alone read the source's signed churn scan
+  * ([[GraftTable.signedChanges]]): those aggregates are linear in the
+  * row multiset, so the rows a rewrite carries over cancel inside the
+  * per-key sums and no EXCEPT ALL nets the churned rows first. Views
+  * with min/max read the exact feed (`tableChanges`).
   *
   * Exactly-once: the last-applied source version rides the SAME merge
   * commit as the deltas (a carried-forward table property on the
@@ -127,7 +133,12 @@ object MaterializedAgg {
   /** [[refresh]] generalized to MULTIPLE summed columns — the
     * `SELECT k, sum(a), sum(b) ... GROUP BY k` materialized view. The
     * incremental math is per-column independent, so one change-feed
-    * scan and ONE merge commit maintain every sum together.
+    * scan and ONE merge commit maintain every sum together. A view
+    * without `minMaxCols` (sum, count, and the count-distinct support
+    * relations, which are count(*) views) reads the signed churn scan
+    * [[GraftTable.signedChanges]]; a view with min/max reads the exact
+    * `tableChanges` feed, since a carried-over row read as a removal
+    * would send its group to the extremum recompute.
     */
   def refreshSums(
       spark: SparkSession,
@@ -292,8 +303,19 @@ object MaterializedAgg {
     // null the accumulated sum through `t.sum + s.d_sum`); exact sum()
     // NULL semantics are restored from the non-null value count: a sum
     // is NULL iff no non-null value remains, exactly as a recompute's.
+    //
+    // sum, count(*) and count(col) are LINEAR in the row multiset, so a
+    // view without extrema reads the signed churn scan: a row a rewrite
+    // carried over enters at +1 and -1 and cancels inside the groupBy
+    // below, with no EXCEPT ALL over the churned rows. An extremum is not
+    // linear — a carried-over row read as a removal would flag its group
+    // for the bounded recompute after every rewrite — so min/max views
+    // read the exact (netted) feed.
+    val linear = minMaxCols.isEmpty
     val changes =
-      try src.tableChanges(lastV, curV) // EXCLUSIVE from
+      try
+        if (linear) src.signedChanges(lastV, curV) // EXCLUSIVE from
+        else src.tableChanges(lastV, curV)
       catch {
         case e: IllegalStateException
             if e.getMessage != null && e.getMessage.contains("log retention") =>
@@ -305,8 +327,9 @@ object MaterializedAgg {
               "it; the incremental path cannot recover a pruned change " +
               "range.", e)
       }
-    val sign = when(col(graft.io.Cdc.ChangeCol)
-      .isin("insert", "update_postimage"), 1L).otherwise(-1L)
+    val sign =
+      if (linear) col(graft.io.Cdc.SignCol)
+      else graft.io.Cdc.signOf(col(graft.io.Cdc.ChangeCol))
     def dv(i: Int) = s"__dv_$i"
     def nv(i: Int) = s"__nv_$i"
     val perCol = specs.zipWithIndex.flatMap { case ((c, _, _), i) =>
@@ -353,7 +376,7 @@ object MaterializedAgg {
     // — semi-joined to the affected keys (bounded by changed keys, so
     // the flag set broadcasts); untouched groups never rescan.
     val deltas =
-      if (minMaxCols.isEmpty) deltas0
+      if (linear) deltas0
       else {
         // the delta aggregation feeds BOTH sides of the recompute join
         // (directly, and through the flagged set) — pin it once or the
@@ -666,7 +689,7 @@ object MaterializedAgg {
 
   /** Continuous maintenance: a change-feed stream whose every
     * micro-batch triggers one [[refresh]]. The stream is the TRIGGER,
-    * not the data path — refresh reads `tableChanges` against its own
+    * not the data path — refresh reads the change feed against its own
     * committed watermark, so a replayed micro-batch (crash/restart
     * re-delivery) finds the watermark already advanced and applies
     * nothing: exactly-once without coupling to Spark's batch ids. Call

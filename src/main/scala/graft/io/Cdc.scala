@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.log.{AddFile, CommitLog}
 
@@ -39,6 +39,20 @@ object Cdc {
     import org.apache.spark.sql.functions.lit
     df.withColumn(VersionCol, lit(version))
       .withColumn(TimestampCol, lit(new java.sql.Timestamp(timestampMs)))
+  }
+
+  /** The row-multiplicity column of the signed net-change feed
+    * ([[GraftTable.signedChanges]]): +1 for a row the range added, −1
+    * for a row it removed.
+    */
+  val SignCol = "__sign"
+
+  /** A change kind as its multiplicity: `insert` / `update_postimage`
+    * add a row (+1), `delete` / `update_preimage` remove one (−1).
+    */
+  def signOf(changeType: Column): Column = {
+    import org.apache.spark.sql.functions.when
+    when(changeType.isin("insert", "update_postimage"), 1L).otherwise(-1L)
   }
   val Dir = "_cdc"
 

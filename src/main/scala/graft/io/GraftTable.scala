@@ -350,7 +350,27 @@ final class GraftTable(val spark: SparkSession, val path: String) {
     * the churn, not the table (a one-partition backfill diff on a
     * 100 TB table reads one partition's worth of files).
     */
-  def tableChanges(fromVersion: Long, toVersion: Long): DataFrame = {
+  def tableChanges(fromVersion: Long, toVersion: Long): DataFrame =
+    changes(fromVersion, toVersion, signed = false)
+
+  /** Signed net-change feed over `(fromVersion, toVersion]`: the
+    * source's logical columns plus [[Cdc.SignCol]], +1 for a row the
+    * range added and −1 for a row it removed. It reads what
+    * [[tableChanges]] reads, but never nets a churned pair with EXCEPT
+    * ALL: a row a rewrite carried over appears once at +1 and once at
+    * −1. So the feed is exact for aggregates LINEAR in the row multiset
+    * (sum, count(*), count(col)): Σ over the signed rows equals the same
+    * sum over [[tableChanges]], and the carried-over rows cancel inside
+    * the consumer's own `groupBy` — where partial aggregation shuffles
+    * per-key partials instead of every churned row. Not for extrema or
+    * row-level consumers: those need [[tableChanges]]. Change files are
+    * signed by kind (see [[Cdc.signOf]]); same loud retention error as
+    * [[tableChanges]].
+    */
+  private[graft] def signedChanges(fromVersion: Long, toVersion: Long): DataFrame =
+    changes(fromVersion, toVersion, signed = true)
+
+  private def changes(fromVersion: Long, toVersion: Long, signed: Boolean): DataFrame = {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion must be <= toVersion $toVersion")
     // same loud retention contract as changesForCommits: the range is
@@ -367,8 +387,8 @@ final class GraftTable(val spark: SparkSession, val path: String) {
             "retention (cleanOldLogs); the change range " +
             s"($fromVersion, $toVersion] is no longer fully available.")
       }
-    cdcChanges(fromVersion, toVersion).getOrElse(
-      diffChanges(fromVersion, toVersion))
+    cdcChanges(fromVersion, toVersion, signed).getOrElse(
+      diffChanges(fromVersion, toVersion, signed))
   }
 
   /** Exact per-commit change feed — available once any commit in the
@@ -384,13 +404,14 @@ final class GraftTable(val spark: SparkSession, val path: String) {
     * all fall back to the single whole-range diff below (one EXCEPT ALL
     * instead of one per commit).
     */
-  private def cdcChanges(fromVersion: Long, toVersion: Long): Option[DataFrame] = {
+  private def cdcChanges(
+      fromVersion: Long, toVersion: Long, signed: Boolean): Option[DataFrame] = {
     val surviving = log.versions().toSet
     val commits = ((fromVersion + 1) to toVersion)
       .filter(surviving).map(v => log.readCommit(v))
     val covered = commits.nonEmpty && commits.exists(_.cdc.nonEmpty)
     if (!covered) return None
-    Some(changesOf(commits, surviving, snapshot(Some(toVersion))))
+    Some(changesOf(commits, surviving, snapshot(Some(toVersion)), signed))
   }
 
   /** Exact per-commit changes of commits `[fromCommit, toCommit]`,
@@ -423,17 +444,20 @@ final class GraftTable(val spark: SparkSession, val path: String) {
       }
     val set = surviving.toSet
     changesOf((fromCommit to toCommit).filter(set)
-      .map(v => log.readCommit(v)), set, alignTo)
+      .map(v => log.readCommit(v)), set, alignTo, signed = false)
   }
 
   /** Core of the change feed over pre-read commits (callers pass the
     * commit objects so ranges are not read twice from the log — commit
-    * reads are the metadata hot path on object stores).
+    * reads are the metadata hot path on object stores). `signed` emits
+    * the [[signedChanges]] shape: an overwrite-family commit's churned
+    * files signed as they are, not netted.
     */
   private def changesOf(
       commits: Seq[graft.log.Commit],
       surviving: Set[Long],
-      alignTo: Snapshot): DataFrame = {
+      alignTo: Snapshot,
+      signed: Boolean): DataFrame = {
     def metadataOnly(c: graft.log.Commit) =
       c.add.isEmpty && c.remove.isEmpty && c.cdc.isEmpty
     def pureAppend(c: graft.log.Commit) =
@@ -442,16 +466,18 @@ final class GraftTable(val spark: SparkSession, val path: String) {
     def alignData(df: DataFrame): DataFrame =
       Schemas.conformTo(df, alignTo.schema)
     // every change row carries its commit's provenance (Delta's CDF
-    // contract): version + wall-clock commit timestamp
-    def stamp(df: DataFrame, c: graft.log.Commit): DataFrame =
-      Cdc.stamp(df, c.version, c.timestampMs)
-    def align(df: DataFrame): DataFrame =
-      Schemas.padTo(df, alignTo.schema)
-        .select(alignTo.schema.map(f => col(f.name)) ++
-          Seq(col(cc), col(Cdc.VersionCol), col(Cdc.TimestampCol)): _*)
+    // contract): version + wall-clock commit timestamp; the signed feed
+    // carries only the multiplicity
+    def finish(df: DataFrame, c: graft.log.Commit): DataFrame = {
+      val data = Schemas.padTo(df, alignTo.schema)
+      val dataCols = alignTo.schema.map(f => col(f.name))
+      if (signed) data.select(dataCols :+ Cdc.signOf(col(cc)).as(Cdc.SignCol): _*)
+      else Cdc.stamp(data, c.version, c.timestampMs).select(dataCols ++
+        Seq(col(cc), col(Cdc.VersionCol), col(Cdc.TimestampCol)): _*)
+    }
     // change files carry PHYSICAL column names (like data files) —
     // project them back to the target snapshot's logical names; columns
-    // of since-dropped fields are discarded (align pads/selects the rest)
+    // of since-dropped fields are discarded (finish pads/selects the rest)
     val mapping = ColumnMapping.fromSnapshot(alignTo)
     val physToLogical = alignTo.schema.map(f =>
       ColumnMapping.physicalName(mapping, f.name)
@@ -464,14 +490,14 @@ final class GraftTable(val spark: SparkSession, val path: String) {
       }: _*)
     val parts = commits.flatMap { c =>
       if (c.cdc.nonEmpty)
-        Some(align(stamp(logicalize(spark.read.parquet(
-          c.cdc.map(f => new Path(path, f.path).toString): _*)), c)))
+        Some(finish(logicalize(spark.read.parquet(
+          c.cdc.map(f => new Path(path, f.path).toString): _*)), c))
       else if (pureAppend(c))
         // read through the TARGET snapshot: files of any generation carry
         // physical names, so alignTo's mapping projects them to the
         // output (logical) names even across renames
-        Some(align(stamp(dfForFiles(alignTo, c.add)
-          .withColumn(cc, lit("insert")), c)))
+        Some(finish(dfForFiles(alignTo, c.add)
+          .withColumn(cc, lit("insert")), c))
       else if (metadataOnly(c)) None
       else {
         // overwrite-family: per-commit net diff over its churned files —
@@ -486,28 +512,44 @@ final class GraftTable(val spark: SparkSession, val path: String) {
         val prev = snapshot(Some(c.version - 1))
         val prevByPath = prev.files.map(f => f.path -> f).toMap
         val removedFiles = c.remove.flatMap(r => prevByPath.get(r.path))
-        val added = alignData(dfForFiles(alignTo, c.add))
-        val removed = alignData(dfForFiles(alignTo, removedFiles))
-        Some(align(stamp(
-          added.exceptAll(removed).withColumn(cc, lit("insert"))
-            .unionByName(
-              removed.exceptAll(added).withColumn(cc, lit("delete"))), c)))
+        Some(finish(churnRows(alignData(dfForFiles(alignTo, c.add)),
+          alignData(dfForFiles(alignTo, removedFiles)), signed), c))
       }
     }
     parts.reduceOption(_ unionByName _).getOrElse {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(alignTo.schema.fields ++ Seq(
+      val tail =
+        if (signed) Seq(StructField(Cdc.SignCol, LongType, nullable = false))
+        else Seq(
           StructField(cc, StringType, nullable = false),
           StructField(Cdc.VersionCol, LongType, nullable = false),
-          StructField(Cdc.TimestampCol, TimestampType, nullable = false))))
+          StructField(Cdc.TimestampCol, TimestampType, nullable = false))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(alignTo.schema.fields ++ tail))
     }
+  }
+
+  /** The change rows of one churned-file pair (rows of added files vs
+    * rows of removed files, same schema), tagged with `_change_type`:
+    * netted by a two-way EXCEPT ALL — carried-over rows cancel — or,
+    * for the signed feed, every added row an insert and every removed
+    * row a delete.
+    */
+  private def churnRows(
+      added: DataFrame, removed: DataFrame, signed: Boolean): DataFrame = {
+    val cc = Cdc.ChangeCol
+    val (ins, del) =
+      if (signed) (added, removed)
+      else (added.exceptAll(removed), removed.exceptAll(added))
+    ins.withColumn(cc, lit("insert"))
+      .unionByName(del.withColumn(cc, lit("delete")))
   }
 
   /** Net row diff between two versions, from the CHURNED FILES ONLY —
     * the fallback feed (insert/delete; an update is its delete+insert
-    * pair).
+    * pair), or its signed form.
     */
-  private def diffChanges(fromVersion: Long, toVersion: Long): DataFrame = {
+  private def diffChanges(
+      fromVersion: Long, toVersion: Long, signed: Boolean): DataFrame = {
     val fromSnap = snapshot(Some(fromVersion))
     val toSnap = snapshot(Some(toVersion))
     // file identity includes the deletion vector: a DV-only delete keeps
@@ -522,15 +564,16 @@ final class GraftTable(val spark: SparkSession, val path: String) {
     // logical names even across renames; evolution-added columns read as
     // nulls, dropped columns are projected away
     val removedRows = dfForFiles(toSnap, fromSnap.files.filterNot(f => toIds(ident(f))))
-    // the whole-range diff spans several commits; provenance is pinned
-    // to the range END ("net change as of toVersion")
-    val endCommit = log.readCommit(toVersion)
-    Cdc.stamp(
-      addedRows.exceptAll(removedRows).withColumn(Cdc.ChangeCol, lit("insert"))
-        .unionByName(
-          removedRows.exceptAll(addedRows)
-            .withColumn(Cdc.ChangeCol, lit("delete"))),
-      endCommit.version, endCommit.timestampMs)
+    val rows = churnRows(addedRows, removedRows, signed)
+    if (signed)
+      rows.select(toSnap.schema.map(f => col(f.name)) :+
+        Cdc.signOf(col(Cdc.ChangeCol)).as(Cdc.SignCol): _*)
+    else {
+      // the whole-range diff spans several commits; provenance is pinned
+      // to the range END ("net change as of toVersion")
+      val endCommit = log.readCommit(toVersion)
+      Cdc.stamp(rows, endCommit.version, endCommit.timestampMs)
+    }
   }
 
   /** Deep clean: physically delete data files under the table root that

@@ -57,7 +57,10 @@ final case class InsertValues(
   *
   * With `graft.dv=true` step 3 becomes merge-on-read ([[dvMergeOnce]]).
   * The source is persisted for the duration — the discovery, the
-  * rewrite and the change feed all read it.
+  * rewrite and the change feed all read it. One aggregate over it (row
+  * count plus, for a plain equi-merge, the key's min/max) materializes
+  * the persisted source before the first attempt and serves stats
+  * pruning, the conflict profile and every retry.
   */
 object MergeClausesExecutor {
 
@@ -137,20 +140,42 @@ object MergeClausesExecutor {
     val table = GraftTable(spark, path)
     val src = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val numSource = src.count()
+      val agg = aggregateSource(src, m)
       // a concurrent commit invalidates the derived removal set;
       // re-derive against a fresh snapshot and retry (bounded)
       Cow.retryOnConflict() {
-        mergeOnce(spark, table, src, numSource, path, m)
+        mergeOnce(spark, table, src, agg, path, m)
       }
     } finally src.unpersist()
+  }
+
+  /** The merge's one source aggregate, run once per merge before any
+    * attempt (it is also the action that materializes the persisted
+    * source): the row count and, for a plain equi-merge `s.K = t.C`, the
+    * target key `C` with the source key's `[min, max]` — None when no
+    * source key is non-NULL. Stats pruning, the conflict profile and
+    * every retry read the key range from here instead of re-aggregating
+    * the source.
+    */
+  private final case class SourceAgg(
+      rows: Long,
+      keyRange: Option[(String, Option[(Any, Any)])])
+
+  private def aggregateSource(src: DataFrame, m: Spec): SourceAgg = {
+    val key = equiKey(m.predicate, m.sa, m.ta)
+      .filter { case (srcCol, _) => src.columns.contains(srcCol) }
+    val r = src.agg(count(lit(1)), key.toSeq.flatMap { case (srcCol, _) =>
+      Seq(min(col(srcCol)), max(col(srcCol))) }: _*).first()
+    SourceAgg(r.getLong(0), key.map { case (_, tgtCol) =>
+      (tgtCol, if (r.isNullAt(1)) None else Some((r.get(1), r.get(2))))
+    })
   }
 
   private def mergeOnce(
       spark: SparkSession,
       table: GraftTable,
       src: DataFrame,
-      numSource: Long,
+      agg: SourceAgg,
       path: String,
       m: Spec): MergeStats = {
     val snap = table.snapshot()
@@ -219,7 +244,7 @@ object MergeClausesExecutor {
     }
     val cols = mergedSchema.map(_.name)
 
-    lazy val candidates = candidateFiles(spark, snap, src, m)
+    lazy val candidates = candidateFiles(spark, snap, agg, m)
     checkSource(m.scoped(table.dfForFiles(snap, candidates)), mergedSchema, src, m)
     val rowIds = graft.io.RowTracking.enabled(props)
     // a schema-evolution merge must not hijack the id plumbing's names
@@ -235,7 +260,7 @@ object MergeClausesExecutor {
     // pure appends on the COW path already — nothing to DV there.
     if (graft.io.DeletionVectors.enabled(props) &&
         (m.matched.nonEmpty || m.bySource.nonEmpty))
-      return dvMergeOnce(spark, table, src, numSource, path, m, snap, props,
+      return dvMergeOnce(spark, table, src, agg, path, m, snap, props,
         mergedSchema, candidates)
 
     // row-level scope (exact even when the filter isn't partition-aligned);
@@ -316,12 +341,12 @@ object MergeClausesExecutor {
       metadata = m.metadata,
       cdc = cdcFiles,
       schemaOverride = if (m.schemaEvolution) Some(mergedSchema) else None,
-      profile = Some(conflictProfile(spark, snap, src, m, candidates, touched)),
+      profile = Some(conflictProfile(spark, snap, agg, m, candidates, touched)),
       // validation set = every generated column SOME clause assigns
       // (rows dispatched elsewhere were recomputed and pass trivially)
       assignedCols = Some(explicitGenerated(props, m)))
     val numOut = table.snapshot().files.map(_.liveRecords).sum
-    MergeStats(v, numSource, numOut)
+    MergeStats(v, agg.rows, numOut)
   }
 
   private val RidCols =
@@ -339,7 +364,7 @@ object MergeClausesExecutor {
   private def candidateFiles(
       spark: SparkSession,
       snap: graft.log.Snapshot,
-      src: DataFrame,
+      agg: SourceAgg,
       m: Spec): Seq[AddFile] = {
     val partitionPruned: Seq[AddFile] = m.scope match {
       case Some(p) if snap.partitionColumns.nonEmpty =>
@@ -353,7 +378,7 @@ object MergeClausesExecutor {
       case _ => snap.files
     }
     if (m.bySource.nonEmpty) partitionPruned
-    else keyRangeMatcher(snap, src, m).fold(partitionPruned)(partitionPruned.filter)
+    else keyRangeMatcher(snap, agg).fold(partitionPruned)(partitionPruned.filter)
   }
 
   /** For a plain equi-merge `s.K = t.C`: a footer-stats test of whether
@@ -363,21 +388,17 @@ object MergeClausesExecutor {
     */
   private def keyRangeMatcher(
       snap: graft.log.Snapshot,
-      src: DataFrame,
-      m: Spec): Option[AddFile => Boolean] =
-    equiKey(m.predicate, m.sa, m.ta).collect {
-      case (srcCol, tgtCol) if src.columns.contains(srcCol) =>
-        val mm = src.agg(min(col(srcCol)), max(col(srcCol))).first()
-        if (mm.isNullAt(0)) (_: AddFile) => false
-        else {
-          // stats are keyed by physical column names (ColumnMapping)
-          val cm = graft.io.ColumnMapping.fromSnapshot(snap)
-          val phys = graft.io.ColumnMapping.physicalName(cm, tgtCol)
-          val filters = Seq(DataFilter(phys, SkipOp.Ge, mm.get(0)),
-            DataFilter(phys, SkipOp.Le, mm.get(1)))
-          val physSchema = graft.io.ColumnMapping.physicalSchema(snap.schema, cm)
-          (f: AddFile) => filters.forall(DataSkipping.mayMatch(f, physSchema, _))
-        }
+      agg: SourceAgg): Option[AddFile => Boolean] =
+    agg.keyRange.map {
+      case (_, None) => (_: AddFile) => false
+      case (tgtCol, Some((lo, hi))) =>
+        // stats are keyed by physical column names (ColumnMapping)
+        val cm = graft.io.ColumnMapping.fromSnapshot(snap)
+        val phys = graft.io.ColumnMapping.physicalName(cm, tgtCol)
+        val filters = Seq(DataFilter(phys, SkipOp.Ge, lo),
+          DataFilter(phys, SkipOp.Le, hi))
+        val physSchema = graft.io.ColumnMapping.physicalSchema(snap.schema, cm)
+        (f: AddFile) => filters.forall(DataSkipping.mayMatch(f, physSchema, _))
     }
 
   /** `(sourceKey, targetKey)` of a plain equi-merge predicate
@@ -406,23 +427,22 @@ object MergeClausesExecutor {
   private def conflictProfile(
       spark: SparkSession,
       snap: graft.log.Snapshot,
-      src: DataFrame,
+      agg: SourceAgg,
       m: Spec,
       candidates: Seq[AddFile],
       touched: Seq[AddFile]): graft.log.TxnProfile = {
     val readPaths =
       (if (m.notMatched.nonEmpty || m.bySource.nonEmpty) candidates
        else touched).map(_.path).toSet
-    // lazy: the matchers cost an analysis pass and a (cached-)source
-    // aggregation — only pay on a lost CAS, never on the common
-    // uncontended commit
+    // lazy: the partition matcher costs an analysis pass — only pay on a
+    // lost CAS, never on the common uncontended commit
     lazy val partMatcher: AddFile => Boolean = m.scope match {
       case Some(p) => DataSkipping.matcherFor(spark, snap, p)
       case None    => _ => true
     }
     lazy val keyMatcher: AddFile => Boolean =
       if (m.bySource.nonEmpty) _ => true
-      else keyRangeMatcher(snap, src, m).getOrElse(_ => true)
+      else keyRangeMatcher(snap, agg).getOrElse(_ => true)
     graft.log.TxnProfile(readPaths, touched.map(_.path).toSet,
       a => partMatcher(a) && keyMatcher(a))
   }
@@ -498,7 +518,7 @@ object MergeClausesExecutor {
       spark: SparkSession,
       table: GraftTable,
       src: DataFrame,
-      numSource: Long,
+      agg: SourceAgg,
       path: String,
       m: Spec,
       snap: graft.log.Snapshot,
@@ -591,10 +611,10 @@ object MergeClausesExecutor {
       cdc = cdcFiles,
       schemaOverride = if (m.schemaEvolution) Some(mergedSchema) else None,
       extraAdds = updated.flatMap(_._2),
-      profile = Some(conflictProfile(spark, snap, src, m, candidates, touched)),
+      profile = Some(conflictProfile(spark, snap, agg, m, candidates, touched)),
       assignedCols = Some(explicitGenerated(props, m)))
     val numOut = table.snapshot().files.map(_.liveRecords).sum
-    MergeStats(v, numSource, numOut)
+    MergeStats(v, agg.rows, numOut)
     } finally affected.unpersist()
   }
 

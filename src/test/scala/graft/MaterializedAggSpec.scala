@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ext.MaterializedAgg
@@ -727,5 +728,130 @@ class MaterializedAggSpec extends SparkSpec {
     assert(!hinted(false),
       "past the bound the hint must be absent — Spark/AQE picks the " +
         "strategy (a boundary-deleting batch can flag every changed group)")
+  }
+
+  /** Per-key (sum, rows, non-null values) of a signed change frame,
+    * all-zero keys dropped (carried-over rows cancel to zero).
+    */
+  private def signedTotals(df: DataFrame, sign: Column) =
+    df.groupBy("cat").agg(
+        sum(coalesce(col("v"), lit(0L)) * sign).as("s"),
+        sum(sign).as("n"),
+        sum(when(col("v").isNotNull, sign).otherwise(0L)).as("nv"))
+      .filter(col("s") =!= 0L || col("n") =!= 0L || col("nv") =!= 0L)
+      .collect().map(r => r.get(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
+      .toMap
+
+  test("signed churn feed: per-key sums equal the exact feed's over random commit sequences") {
+    for ((cdf, seed) <- Seq(false -> 7, true -> 11)) {
+      val rnd = new scala.util.Random(seed)
+      val src = tmpDir(s"mv_sign_src_${cdf}_$seed")
+      val sum = tmpDir(s"mv_sign_sum_${cdf}_$seed")
+      var nextId = 0L
+      // pt = id % 3 everywhere, so replaceWhere rows satisfy their predicate
+      def rowsOf(ids: Seq[Long]): DataFrame =
+        ids.map { id =>
+          val cat = if (rnd.nextInt(5) == 0) null else Seq("a", "b", "c")(rnd.nextInt(3))
+          val v: java.lang.Long =
+            if (rnd.nextInt(4) == 0) null else java.lang.Long.valueOf(rnd.nextInt(50).toLong)
+          (id, (id % 3).toInt, cat, v)
+        }.toDF("id", "pt", "cat", "v").repartition(2)
+      def rows(n: Int, pt: Option[Int] = None): DataFrame =
+        rowsOf((1 to n).map { _ =>
+          while (pt.exists(p => nextId % 3 != p)) nextId += 1
+          nextId += 1
+          nextId - 1
+        })
+      GraftWriter.write(spark, rows(24), src, WriteOptions(mode = WriteMode.Overwrite,
+        partitionBy = Seq("pt"), metadata = Map(Cdc.PropKey -> cdf.toString)))
+      MaterializedAgg.refreshSums(spark, src, sum, Seq("cat"), Seq("v"),
+        distinctCols = Seq("v"))
+      def op(kind: Int): Unit = kind match {
+        case 0 => GraftWriter.write(spark, rows(6), src, WriteOptions())
+        case 1 =>
+          val p = rnd.nextInt(3)
+          GraftWriter.write(spark, rows(5, Some(p)), src, WriteOptions(
+            mode = WriteMode.Overwrite, replaceWhere = Some(col("pt") === p)))
+        case 2 =>
+          // upsert: earlier ids (live or deleted) take new values, fresh
+          // ids insert
+          val old = Seq.fill(4)(rnd.nextLong(nextId)).distinct
+          merge.MergeExecutor.merge(spark, rowsOf(old).unionByName(rows(2)), src,
+            merge.MergeConfig(merge.MergeType.Upsert, "s.id = t.id"))
+        case 3 => Dml.update(spark, src, col("id") % 4 === rnd.nextInt(4),
+          Map("v" -> (col("v") + 1L), "cat" -> lit("b")))
+        case 4 => Dml.delete(spark, src, col("id") % 5 === rnd.nextInt(5))
+        case _ => GraftWriter.optimize(spark, src)
+      }
+      def refreshAndCheck(): Unit = {
+        val t = GraftTable(spark, src)
+        val lastV = GraftTable(spark, sum).log.tableProperties()(
+          MaterializedAgg.SourceVersionKey).toLong
+        val curV = t.version()
+        if (curV > lastV) {
+          val signed = signedTotals(t.signedChanges(lastV, curV), col(Cdc.SignCol))
+          val exact = signedTotals(t.tableChanges(lastV, curV),
+            Cdc.signOf(col(Cdc.ChangeCol)))
+          assert(signed == exact, s"cdf=$cdf seed=$seed ($lastV, $curV]")
+        }
+        MaterializedAgg.refreshSums(spark, src, sum, Seq("cat"), Seq("v"),
+          distinctCols = Seq("v"))
+        def set(df: DataFrame) =
+          df.select("cat", "sum_val", "n_rows", "n_vals").collect().map(_.toSeq).toSet
+        assert(set(GraftTable(spark, sum).toDf()) ==
+          set(MaterializedAgg.summarizeSums(t.toDf(), Seq("cat"), Seq("v"))),
+          s"cdf=$cdf seed=$seed at v$curV")
+        def aux(df: DataFrame) =
+          df.select("cat", "v", "n_rows").collect().map(_.toSeq).toSet
+        assert(aux(GraftTable(spark,
+          MaterializedAgg.distinctAuxPath(sum, "v")).toDf()) ==
+          aux(MaterializedAgg.summarizeSums(t.toDf(), Seq("cat", "v"), Nil)))
+      }
+      // every operation kind once, in a seeded order, plus one more
+      val kinds = rnd.shuffle((0 to 5).toList) :+ rnd.nextInt(6)
+      kinds.zipWithIndex.foreach { case (kind, i) =>
+        op(kind)
+        // midway the table switches to deletion vectors and takes a DV
+        // delete (same path, new DV: the churn is the file's identity)
+        if (i == 3) {
+          GraftWriter.write(spark, rows(3), src,
+            WriteOptions(metadata = Map(DeletionVectors.PropKey -> "true")))
+          Dml.delete(spark, src, col("id") % 7 === 1L)
+        }
+        if (rnd.nextBoolean()) refreshAndCheck()
+      }
+      refreshAndCheck()
+    }
+  }
+
+  test("linear views refresh without EXCEPT ALL; min/max views keep the exact feed") {
+    import org.apache.spark.sql.graft.ExecutionRecorder
+    val src = tmpDir("mv_plan_src")
+    GraftWriter.write(spark,
+      Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "a", 30L), (4L, "c", 5L))
+        .toDF("id", "cat", "v").repartition(2),
+      src, WriteOptions(mode = WriteMode.Overwrite))
+    val sumV = tmpDir("mv_plan_sum")
+    val mmV = tmpDir("mv_plan_mm")
+    MaterializedAgg.refresh(spark, src, sumV, Seq("cat"), "v")
+    MaterializedAgg.refreshSums(spark, src, mmV, Seq("cat"), Seq("v"),
+      minMaxCols = Seq("v"))
+    // a COW rewrite: the range removes a file and adds its rewrite
+    Dml.update(spark, src, col("id") === 1L, Map("v" -> lit(11L)))
+    val (_, sumRuns) = ExecutionRecorder.record(spark) {
+      MaterializedAgg.refresh(spark, src, sumV, Seq("cat"), "v")
+    }
+    assert(sumRuns.nonEmpty)
+    assert(sumRuns.count(ExecutionRecorder.replicatesRows) == 0,
+      "a sum view reads the signed churn scan — no EXCEPT ALL")
+    val (_, mmRuns) = ExecutionRecorder.record(spark) {
+      MaterializedAgg.refreshSums(spark, src, mmV, Seq("cat"), Seq("v"),
+        minMaxCols = Seq("v"))
+    }
+    assert(mmRuns.count(ExecutionRecorder.replicatesRows) > 0,
+      "a min/max view reads the exact (EXCEPT ALL) feed")
+    val expect = MaterializedAgg.summarizeSums(
+      GraftTable(spark, src).toDf(), Seq("cat"), Seq("v")).collect().map(_.toSeq).toSet
+    assert(GraftTable(spark, sumV).toDf().collect().map(_.toSeq).toSet == expect)
   }
 }

@@ -126,4 +126,40 @@ class MergeAlgebraSpec extends SparkSpec {
       }
     }
   }
+
+  test("an equi-key upsert aggregates its source once: count and key range in one execution") {
+    import graft.io.{GraftTable, GraftWriter, WriteMode, WriteOptions}
+    import org.apache.spark.sql.graft.ExecutionRecorder
+    val p = tmpDir("merge_one_agg") + "/t"
+    GraftWriter.write(spark, (0L until 40L).map(k => (k, k * 10)).toDF("k", "v")
+      .repartition(4), p, WriteOptions(mode = WriteMode.Overwrite))
+    val src = Seq((5L, 1L), (6L, 2L), (100L, 3L)).toDF("k", "v")
+    val (stats, runs) = ExecutionRecorder.record(spark) {
+      MergeExecutor.merge(spark, src, p, cfg(MergeType.Upsert))
+    }
+    assert(stats.numSourceRows == 3L)
+    // the source aggregate (count + key min/max in one pass), the
+    // touched-file discovery, and the rewrite commit
+    assert(runs.size == 3, runs.map(_.logical.nodeName).mkString(", "))
+    val got = GraftTable(spark, p).toDf().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(got(5L) == 1L && got(6L) == 2L && got(100L) == 3L && got.size == 41)
+  }
+
+  test("a source whose merge keys are all NULL prunes every candidate file") {
+    import graft.io.{GraftTable, GraftWriter, WriteMode, WriteOptions}
+    val p = tmpDir("merge_null_keys") + "/t"
+    GraftWriter.write(spark, (0L until 10L).map(k => (k, k)).toDF("k", "v")
+      .repartition(2), p, WriteOptions(mode = WriteMode.Overwrite))
+    val src = Seq((None: Option[Long], 1L), (None: Option[Long], 2L)).toDF("k", "v")
+    val before = GraftTable(spark, p).snapshot().files.map(_.path).toSet
+    val (_, runs) = org.apache.spark.sql.graft.ExecutionRecorder.record(spark) {
+      MergeExecutor.merge(spark, src, p, cfg(MergeType.Upsert))
+    }
+    // nothing joins a NULL key: the stats test drops every target file
+    // before the discovery scan, no file is rewritten, both rows append
+    assert(runs.map(org.apache.spark.sql.graft.ExecutionRecorder.filesScanned).sum == 0L)
+    assert(before.subsetOf(GraftTable(spark, p).snapshot().files.map(_.path).toSet))
+    assert(GraftTable(spark, p).toDf().count() == 12L)
+  }
 }
