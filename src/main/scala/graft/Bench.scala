@@ -143,7 +143,8 @@ object Bench {
     // its timing moved. Maintenance medians and per-query mins live in
     // bench_detail.json per the r17 verdict (worst-case line length with
     // this envelope: 1857 chars, measured, plus at most 15 for the
-    // failed-run count; the failed NAMES live in bench_detail.json).
+    // failed-run count and about 25 for the omitted-median sum; the failed
+    // NAMES live in bench_detail.json).
     val totalR = math.round(total * 1000).toDouble / 1000
     val noisyN = results.count { case (_, med, mn) => mn > 0 && med / mn > 3.0 }
     val maintNoisyN = maint.count { case (_, med, mn) => mn > 0 && med / mn > 3.0 }
@@ -152,7 +153,11 @@ object Bench {
       .map { case (k, med, _) => "\"" + k + "\":" + f"$med%.2f" }
       .mkString("{", ",", "}")
     val omittedN = results.count { case (k, _, _) => compactOmit(k) }
-    println(s"""{"metric":"total","value":$totalR,"unit":"sec","queries_n":${results.length},"noisy_n":$noisyN,"queries_omitted_n":$omittedN,"queries":$compactQs,"maintenance_noisy_n":$maintNoisyN,"failed":${failedQs.size + failedMaint.size},"sf":"$sfDir","runs":$runs,"agg":"median","detail":"bench_detail.json"}""")
+    // the omit-set's median sum, so a collective regression among the
+    // omitted queries stays visible on this line
+    val omittedTotal =
+      f"${results.collect { case (k, med, _) if compactOmit(k) => med }.sum}%.2f"
+    println(s"""{"metric":"total","value":$totalR,"unit":"sec","queries_n":${results.length},"noisy_n":$noisyN,"queries_omitted_n":$omittedN,"omitted_total":$omittedTotal,"queries":$compactQs,"maintenance_noisy_n":$maintNoisyN,"failed":${failedQs.size + failedMaint.size},"sf":"$sfDir","runs":$runs,"agg":"median","detail":"bench_detail.json"}""")
     spark.stop()
   }
 

@@ -85,7 +85,7 @@ object Alter {
         s"column $to already exists")
       require(!snap.partitionColumns.exists(_.equalsIgnoreCase(from)),
         s"cannot rename partition column $from (directory layout is physical)")
-      require(!Bucketing.spec(table).exists(_._1.equalsIgnoreCase(from)),
+      require(!Bucketing.spec(table, snap).exists(_._1.equalsIgnoreCase(from)),
         s"cannot rename bucket key $from (bucket layout is keyed by name)")
       requireNoConstraintOn(table, from, "rename")
       val mapping = ColumnMapping.fromProps(
@@ -168,7 +168,7 @@ object Alter {
       // bucket layout is keyed by the column's HASH — hash(1:int) and
       // hash(1L:long) differ, so widening a bucket key would silently
       // scatter existing keys across wrong buckets
-      require(!Bucketing.spec(table).exists(_._1.equalsIgnoreCase(name)),
+      require(!Bucketing.spec(table, snap).exists(_._1.equalsIgnoreCase(name)),
         s"cannot widen bucket key $name (bucket hashing is type-sensitive)")
       schema = StructType(schema.fields.map { f =>
         if (f.name.equalsIgnoreCase(name)) f.copy(dataType = to) else f

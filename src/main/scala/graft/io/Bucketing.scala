@@ -42,26 +42,31 @@ object Bucketing {
       metadata = opts.metadata ++ Map(KeyMeta -> key, CountMeta -> n.toString)))
   }
 
-  /** The table's bucket spec (key column, bucket count), if bucketed.
-    * The search reads commits newest-first, one at a time, and stops at
-    * the first commit carrying the spec: intervening commits without
-    * bucket metadata (OPTIMIZE, coordinated promotes) don't hide it, and
-    * a table bucketed at its head version pays for a few commits, not
-    * the whole history. A table that was never bucketed does read every
-    * commit — callers on the read path check the snapshot's partition
-    * columns for [[BucketCol]] first. `asOf` bounds the search to the
-    * commits at or below a time-travel version.
+  /** The table's bucket spec (key column, bucket count) at `snap`, if
+    * bucketed there. A snapshot not partitioned by [[BucketCol]] is not
+    * bucketed (never was, or was replaced without bucketing) and answers
+    * from its partition columns alone. Otherwise the search reads the
+    * commits at or below `snap`'s version newest-first, one at a time,
+    * and stops at the first commit carrying the spec: intervening commits
+    * without bucket metadata (OPTIMIZE, coordinated promotes) don't hide
+    * it, and a table bucketed at its head version pays for a few commits,
+    * not the whole history.
     */
-  def spec(table: GraftTable, asOf: Option[Long] = None): Option[(String, Int)] = {
-    val log = table.log
-    log.versions().reverseIterator.filter(v => asOf.forall(v <= _)).map { v =>
-      val m = log.readCommit(v).metadata
-      for {
-        k <- m.get(KeyMeta)
-        n <- m.get(CountMeta)
-      } yield (k, n.toInt)
-    }.collectFirst { case Some(s) => s }
-  }
+  def spec(table: GraftTable, snap: graft.log.Snapshot): Option[(String, Int)] =
+    if (!snap.partitionColumns.contains(BucketCol)) None
+    else {
+      val log = table.log
+      log.versions().reverseIterator.filter(_ <= snap.version).map { v =>
+        val m = log.readCommit(v).metadata
+        for {
+          k <- m.get(KeyMeta)
+          n <- m.get(CountMeta)
+        } yield (k, n.toInt)
+      }.collectFirst { case Some(s) => s }
+    }
+
+  /** The bucket spec at the table's latest snapshot. */
+  def spec(table: GraftTable): Option[(String, Int)] = spec(table, table.snapshot())
 
   /** Bucket id of a literal value (must match the write-side hash). The
     * `pmod(murmur3(v), n)` expression is evaluated directly on the driver
@@ -77,10 +82,10 @@ object Bucketing {
 
   /** Equality point-lookup reading only the matching bucket's files. */
   def lookup(table: GraftTable, value: Any): DataFrame = {
-    val (key, n) = spec(table).getOrElse(
+    val snap = table.snapshot()
+    val (key, n) = spec(table, snap).getOrElse(
       throw new IllegalArgumentException(s"${table.path} is not bucketed"))
     val b = bucketOf(table.spark, value, n).toString
-    val snap = table.snapshot()
     val files = snap.files.filter(_.partitionValues.get(BucketCol).contains(b))
     table.dfForFiles(snap, files).filter(col(key) === lit(value))
       .drop(BucketCol)
@@ -88,9 +93,10 @@ object Bucketing {
 
   /** Number of files a lookup would read (tests/diagnostics). */
   def filesForLookup(table: GraftTable, value: Any): Int = {
-    val (_, n) = spec(table).getOrElse(return table.snapshot().files.size)
+    val snap = table.snapshot()
+    val (_, n) = spec(table, snap).getOrElse(return snap.files.size)
     val b = bucketOf(table.spark, value, n).toString
-    table.snapshot().files.count(_.partitionValues.get(BucketCol).contains(b))
+    snap.files.count(_.partitionValues.get(BucketCol).contains(b))
   }
 
   /** Equi-join of two tables bucketed identically on their join keys, as

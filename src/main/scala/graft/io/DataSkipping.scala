@@ -102,15 +102,8 @@ private[graft] object DataSkipping {
       condition: Column): AddFile => Boolean = {
     val filters: Seq[DataFilter] =
       try {
-        val analyzed = spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), snap.schema)
-          .filter(condition)
-          .queryExecution.analyzed
         val m = ColumnMapping.fromSnapshot(snap)
-        analyzed.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            toSkipFilters(f.condition)
-        }.flatten
+        toSkipFilters(PartitionPredicate.analyze(spark, snap.schema, condition))
           .map(f => f.copy(column = ColumnMapping.physicalName(m, f.column)))
       } catch {
         case scala.util.control.NonFatal(_) => Nil // unresolvable → conservative

@@ -41,8 +41,9 @@ final case class WriteOptions(
     mode: WriteMode = WriteMode.Append,
     partitionBy: Seq[String] = Nil,
     /** Partition-scoped overwrite predicate — the Delta `replaceWhere`
-      * pattern (reference: dagster_delta/handler.py:190-225). Only valid
-      * with `Overwrite`.
+      * pattern (reference: dagster_delta/handler.py:190-225), decided per
+      * partition on the driver by [[PartitionPredicate]] (a NULL
+      * partition matches `isNull`). Only valid with `Overwrite`.
       */
     replaceWhere: Option[Column] = None,
     schemaMode: Option[SchemaMode] = None,
@@ -246,34 +247,23 @@ object GraftWriter {
         "dynamicPartitionOverwrite and replaceWhere are mutually exclusive")
     }
 
-    // replaceWhere: constrain + compute removals from partition values.
-    // (Dynamic partition overwrite derives removals AFTER the physical
-    // write, from the added files' partition values — see below.)
-    val (removals, effectiveDf) = (opts.mode, opts.replaceWhere) match {
-      case (WriteMode.Overwrite, None) if opts.dynamicPartitionOverwrite =>
-        (Nil, df)
-      case (WriteMode.Overwrite, Some(pred)) =>
-        if (opts.enforceReplaceWhere) {
-          val violating = df.filter(!pred).limit(1).count()
-          require(violating == 0,
-            s"rows violate replaceWhere predicate $pred")
-        }
-        val toRemove = snapOpt match {
-          case Some(snap) => matchingFiles(spark, snap.files, snap.schema,
-            snap.partitionColumns, pred)
-          case None => Nil // replaceWhere on a fresh table = plain create
-        }
-        (toRemove.map(RemoveFile), df)
-      case (WriteMode.Overwrite, None) | (WriteMode.CreateOrReplace, _) =>
-        (snapOpt.map(_.files.map(f => RemoveFile(f.path))).getOrElse(Nil), df)
-      case _ => (Nil, df)
-    }
+    // replaceWhere: removals from partition values, derived before the
+    // write so a predicate with no per-partition answer fails before
+    // anything is staged; then the incoming rows must satisfy it.
+    val replaced = for {
+      pred <- opts.replaceWhere if opts.mode == WriteMode.Overwrite
+      snap <- snapOpt // replaceWhere on a fresh table = plain create
+    } yield replaceWhereRemovals(spark, snap, pred)
+    for (pred <- opts.replaceWhere
+         if opts.mode == WriteMode.Overwrite && opts.enforceReplaceWhere)
+      require(df.filter(!pred).limit(1).count() == 0,
+        s"rows violate replaceWhere predicate $pred")
 
     // Physical write to staging, then rename into place.
     val writeDf =
       if (partitionCols.nonEmpty && opts.clusterByPartition)
-        effectiveDf.repartition(partitionCols.map(col): _*)
-      else effectiveDf
+        df.repartition(partitionCols.map(col): _*)
+      else df
     val added =
       stageAndPromote(spark, fs, conf, writeDf, path, partitionCols,
         opts.compression, opts.maxRecordsPerFile, extraProps = declProps)
@@ -287,18 +277,23 @@ object GraftWriter {
       declProps,
       validateGenerated = Some(dfIn.columns.toSet))
 
-    // Dynamic partition overwrite: drop exactly the live files in the
-    // partitions the new files landed in (metadata-only set intersection;
-    // an unpartitioned table degenerates to a full overwrite, matching
-    // Spark's own semantics).
-    def dynamicRemovals(liveFiles: Seq[AddFile]): Seq[RemoveFile] = {
-      val touched = added.map(_.partitionValues).toSet
-      liveFiles.filter(f => touched(f.partitionValues)).map(f => RemoveFile(f.path))
-    }
-    val removals0 =
-      if (opts.dynamicPartitionOverwrite)
-        snapOpt.map(s => dynamicRemovals(s.files)).getOrElse(Nil)
-      else removals
+    // The removal set a snapshot implies: the replaceWhere partitions;
+    // under dynamic partition overwrite exactly the live files in the
+    // partitions the new files landed in (metadata-only set
+    // intersection; an unpartitioned table degenerates to a full
+    // overwrite, matching Spark's own semantics); every file for a
+    // plain overwrite or a replace.
+    def removalsFrom(s: graft.log.Snapshot): Seq[RemoveFile] =
+      (opts.mode, opts.replaceWhere) match {
+        case (WriteMode.Overwrite, Some(pred)) => replaceWhereRemovals(spark, s, pred)
+        case (WriteMode.Overwrite, None) if opts.dynamicPartitionOverwrite =>
+          val touched = added.map(_.partitionValues).toSet
+          s.files.filter(f => touched(f.partitionValues)).map(f => RemoveFile(f.path))
+        case (WriteMode.Overwrite, None) | (WriteMode.CreateOrReplace, _) =>
+          s.files.map(f => RemoveFile(f.path))
+        case _ => Nil
+      }
+    val removals0 = replaced.getOrElse(snapOpt.map(removalsFrom).getOrElse(Nil))
 
     // Commit with bounded retry: on a concurrent-commit conflict the
     // staged files stay valid — only the log actions (removals, evolved
@@ -341,18 +336,7 @@ object GraftWriter {
               }
             case _ => df.schema
           }
-          val rm = (opts.mode, opts.replaceWhere, fresh) match {
-            case (WriteMode.Overwrite, None, Some(s))
-                if opts.dynamicPartitionOverwrite =>
-              dynamicRemovals(s.files)
-            case (WriteMode.Overwrite, Some(pred), Some(s)) =>
-              matchingFiles(spark, s.files, s.schema, s.partitionColumns, pred)
-                .map(RemoveFile)
-            case (WriteMode.Overwrite, None, Some(s)) => s.files.map(f => RemoveFile(f.path))
-            case (WriteMode.CreateOrReplace, _, Some(s)) => s.files.map(f => RemoveFile(f.path))
-            case _ => Seq.empty[RemoveFile]
-          }
-          (schema2.toDDL, rm)
+          (schema2.toDDL, fresh.map(removalsFrom).getOrElse(Nil))
         }
       val metrics = Map(
         "num_added_files" -> added.size.toLong,
@@ -809,16 +793,7 @@ object GraftWriter {
     val fs = new Path(path).getFileSystem(conf)
     val snap = log.snapshot()
     val sizeFloor = minFileSizeBytes.getOrElse(sizeFloorOf(spark))
-    val eligible0 = where match {
-      case None => snap.files
-      case Some(pred) =>
-        require(snap.partitionColumns.nonEmpty,
-          "OPTIMIZE ... WHERE requires a partitioned table " +
-            "(the predicate scopes by partition values)")
-        val keep = matchingFiles(
-          spark, snap.files, snap.schema, snap.partitionColumns, pred).toSet
-        snap.files.filter(f => keep(f.path))
-    }
+    val eligible0 = scopedFiles(spark, snap, where)
     val eligible = onlyPartitions match {
       case Some(pvs) => eligible0.filter(f => pvs(f.partitionValues))
       case None      => eligible0
@@ -961,23 +936,11 @@ object GraftWriter {
       incremental: Boolean = false): Long = {
     require(cols.nonEmpty, "clustering requires at least one column")
     retryDerived {
-      optimizeClusterOnce(spark, path, cols, maxRecordsPerFile, where,
-        incremental)
+      clusterOnce(spark, path, cols, maxRecordsPerFile, where, incremental,
+        zorder = false)
     }
   }
 
-  /** The candidate set of an incremental clustering pass over `scoped`
-    * files: everything not yet written under `layout`, plus
-    * already-clustered files that are small (the tail folds into the
-    * layout) or MUST rewrite (DV'd / external refs). Returns Nil when
-    * the pass would accomplish nothing, so a second maintenance pass
-    * right after a first is a clean no-op. A candidate set that is
-    * ONLY the already-clustered small tail re-packs solely when it
-    * actually SHRINKS the file count — otherwise a steady state whose
-    * sorted outputs all land under the size floor (narrow rows capped
-    * by maxRecordsPerFile) would rewrite the whole table on every
-    * routine pass, forever.
-    */
   /** Rewrite source for maintenance (compaction / cluster / Z-order /
     * REORG PURGE): when row tracking is on, the rows carry their ids
     * MATERIALIZED as a physical `__graft_row_id` column — rewrites
@@ -992,6 +955,18 @@ object GraftWriter {
     table.dfForFilesCarryingIds(snap, files,
       carryIds = RowTracking.enabled(log.tableProperties()))
 
+  /** The candidate set of an incremental clustering pass over `scoped`
+    * files: everything not yet written under `layout`, plus
+    * already-clustered files that are small (the tail folds into the
+    * layout) or MUST rewrite (DV'd / external refs). Returns Nil when
+    * the pass would accomplish nothing, so a second maintenance pass
+    * right after a first is a clean no-op. A candidate set that is
+    * ONLY the already-clustered small tail re-packs solely when it
+    * actually SHRINKS the file count — otherwise a steady state whose
+    * sorted outputs all land under the size floor (narrow rows capped
+    * by maxRecordsPerFile) would rewrite the whole table on every
+    * routine pass, forever.
+    */
   private def clusterCandidates(
       scoped: Seq[AddFile], layout: String, sizeFloor: Long,
       maxRecordsPerFile: Long): Seq[AddFile] = {
@@ -1016,29 +991,25 @@ object GraftWriter {
     if (mustWork || packs) candidates else Nil
   }
 
-  private def optimizeClusterOnce(
+  /** One clustering rewrite of the scoped files, for [[optimizeCluster]]
+    * (rows range-sorted by `cols`) and [[optimizeZOrder]] (`zorder`: by
+    * the Morton key of `cols`).
+    */
+  private def clusterOnce(
       spark: SparkSession,
       path: String,
       cols: Seq[String],
       maxRecordsPerFile: Long,
       where: Option[Column],
-      incremental: Boolean): Long = {
+      incremental: Boolean,
+      zorder: Boolean): Long = {
     val conf = spark.sessionState.newHadoopConf()
     val log = new CommitLog(path, conf)
     val fs = new Path(path).getFileSystem(conf)
     val snap = log.snapshot()
     val table = new GraftTable(spark, path)
     val layout = cols.mkString(",")
-    val scoped = where match {
-      case None => snap.files
-      case Some(pred) =>
-        require(snap.partitionColumns.nonEmpty,
-          "OPTIMIZE ... WHERE requires a partitioned table " +
-            "(the predicate scopes by partition values)")
-        val keep = matchingFiles(
-          spark, snap.files, snap.schema, snap.partitionColumns, pred).toSet
-        snap.files.filter(f => keep(f.path))
-    }
+    val scoped = scopedFiles(spark, snap, where)
     val toSort =
       if (incremental) clusterCandidates(scoped, layout, sizeFloorOf(spark),
           maxRecordsPerFile)
@@ -1046,9 +1017,17 @@ object GraftWriter {
     if (toSort.isEmpty) return snap.version
     val totalRows = toSort.map(_.liveRecords).sum
     val nOut = math.max(1, math.ceil(totalRows.toDouble / maxRecordsPerFile).toInt)
-    val clustered = rewriteSource(table, log, snap, toSort)
-      .repartitionByRange(nOut, cols.map(col): _*)
-      .sortWithinPartitions(cols.map(col): _*)
+    val df = rewriteSource(table, log, snap, toSort)
+    val clustered =
+      if (zorder) {
+        val zCol = "__graft_z"
+        df.withColumn(zCol, mortonKey(df, cols))
+          .repartitionByRange(nOut, col(zCol))
+          .sortWithinPartitions(col(zCol))
+          .drop(zCol)
+      } else
+        df.repartitionByRange(nOut, cols.map(col): _*)
+          .sortWithinPartitions(cols.map(col): _*)
     val added = stageAndPromote(
       spark, fs, conf, clustered, path, snap.partitionColumns, "zstd")
       .map(_.copy(clusteredBy = Some(layout)))
@@ -1058,10 +1037,10 @@ object GraftWriter {
     log.commitOrRebase(maintenanceProfile(toSort), snap) { expected =>
       log.commit(
         operation = "OPTIMIZE",
-        mode = "cluster",
+        mode = if (zorder) "zorder" else "cluster",
         schemaDdl = snap.schema.toDDL,
         partitionColumns = snap.partitionColumns,
-        metadata = Map("cluster_by" -> layout),
+        metadata = Map((if (zorder) "zorder_by" else "cluster_by") -> layout),
         operationMetrics = Map(
           "num_clustered_files" -> toSort.size.toLong,
           "num_added_files" -> added.size.toLong),
@@ -1140,53 +1119,8 @@ object GraftWriter {
         */
       incremental: Boolean = false): Long =
     retryDerived {
-      val conf = spark.sessionState.newHadoopConf()
-      val log = new CommitLog(path, conf)
-      val fs = new Path(path).getFileSystem(conf)
-      val snap = log.snapshot()
-      val table = new GraftTable(spark, path)
-      val layout = cols.mkString(",")
-      val scoped = where match {
-        case None => snap.files
-        case Some(pred) =>
-          require(snap.partitionColumns.nonEmpty,
-            "OPTIMIZE ... WHERE requires a partitioned table " +
-              "(the predicate scopes by partition values)")
-          val keep = matchingFiles(
-            spark, snap.files, snap.schema, snap.partitionColumns, pred).toSet
-          snap.files.filter(f => keep(f.path))
-      }
-      val eligible =
-        if (incremental) clusterCandidates(scoped, layout, sizeFloorOf(spark),
-          maxRecordsPerFile)
-        else scoped
-      if (eligible.isEmpty) return snap.version
-      val totalRows = eligible.map(_.liveRecords).sum
-      val nOut = math.max(1, math.ceil(totalRows.toDouble / maxRecordsPerFile).toInt)
-      val df = rewriteSource(table, log, snap, eligible)
-      val zCol = "__graft_z"
-      val clustered = df
-        .withColumn(zCol, mortonKey(df, cols))
-        .repartitionByRange(nOut, col(zCol))
-        .sortWithinPartitions(col(zCol))
-        .drop(zCol)
-      val added = stageAndPromote(
-        spark, fs, conf, clustered, path, snap.partitionColumns, "zstd")
-        .map(_.copy(clusteredBy = Some(layout)))
-      log.commitOrRebase(maintenanceProfile(eligible), snap) { expected =>
-        log.commit(
-          operation = "OPTIMIZE",
-          mode = "zorder",
-          schemaDdl = snap.schema.toDDL,
-          partitionColumns = snap.partitionColumns,
-          metadata = Map("zorder_by" -> layout),
-          operationMetrics = Map(
-            "num_clustered_files" -> eligible.size.toLong,
-            "num_added_files" -> added.size.toLong),
-          add = added,
-          remove = eligible.map(f => RemoveFile(f.path)),
-          expectedVersion = Some(expected))
-      }
+      clusterOnce(spark, path, cols, maxRecordsPerFile, where, incremental,
+        zorder = true)
     }
 
   /** Copy-on-write commit: stage `df` as new data files and commit them
@@ -1510,13 +1444,16 @@ object GraftWriter {
     s.stripPrefix(b + "/")
   }
 
-  /** Parse hive-style `col=value` path segments (Spark's URL-ish escaping). */
+  /** Parse hive-style `col=value` path segments, undoing the
+    * `escapePathName` Spark's writer applies (a `+` stays a `+`).
+    */
   private[io] def partitionValuesOf(rel: String): Map[String, String] =
     rel.split('/').dropRight(1).iterator.flatMap { seg =>
       val i = seg.indexOf('=')
       if (i <= 0) None
       else Some(seg.substring(0, i) ->
-        java.net.URLDecoder.decode(seg.substring(i + 1), "UTF-8"))
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .unescapePathName(seg.substring(i + 1)))
     }.toMap
 
   /** Row count + per-column min/max/null stats from the parquet footer —
@@ -1602,33 +1539,27 @@ object GraftWriter {
     } finally r.close()
   }
 
-  /** Live files whose stringified partition values satisfy `pred` —
-    * evaluated through Catalyst on a tiny driver-built DataFrame so the
-    * predicate semantics are exactly Spark's (the reference narrows by DNF
-    * the same way, driver-side: handler.py:190-204).
+  /** Removals of a `replaceWhere` overwrite: the live files whose
+    * partition values satisfy `pred` ([[PartitionPredicate]]).
     */
-  private[graft] def matchingFiles(
-      spark: SparkSession,
-      files: Seq[graft.log.AddFile],
-      schema: StructType,
-      partitionCols: Seq[String],
-      pred: Column): Seq[String] = {
-    require(partitionCols.nonEmpty,
+  private def replaceWhereRemovals(
+      spark: SparkSession, snap: graft.log.Snapshot, pred: Column): Seq[RemoveFile] = {
+    require(snap.partitionColumns.nonEmpty,
       "replaceWhere requires a partitioned table")
-    import org.apache.spark.sql.Row
-    val rows = files.map(f =>
-      Row.fromSeq(f.path +: partitionCols.map(c => f.partitionValues.get(c).orNull)))
-    val rawSchema = StructType(
-      StructField("__path", StringType) +:
-        partitionCols.map(c => StructField(c, StringType)))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), rawSchema)
-    val typed = partitionCols.foldLeft(df) { (d, c) =>
-      val t = schema.find(_.name == c).map(_.dataType).getOrElse(StringType)
-      d.withColumn(c, col(c).cast(t))
-    }
-    typed.filter(pred).select("__path").collect().map(_.getString(0)).toSeq
+    PartitionPredicate.files(spark, snap, pred).map(f => RemoveFile(f.path))
   }
+
+  /** The files an OPTIMIZE pass may rewrite: all of them, or with a
+    * `where` the files of the partitions it selects.
+    */
+  private def scopedFiles(
+      spark: SparkSession, snap: graft.log.Snapshot, where: Option[Column]): Seq[AddFile] =
+    where.fold(snap.files) { pred =>
+      require(snap.partitionColumns.nonEmpty,
+        "OPTIMIZE ... WHERE requires a partitioned table " +
+          "(the predicate scopes by partition values)")
+      PartitionPredicate.files(spark, snap, pred)
+    }
 
   /** Append-mode schema union: existing field types win; new fields are
     * appended (nullable). Type conflicts error.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.io.{DataFilter, DataSkipping, GraftTable, GraftWriter, SkipOp}
+import graft.io.{DataFilter, DataSkipping, GraftTable, GraftWriter, PartitionPredicate, SkipOp}
 import graft.log.{AddFile, RemoveFile}
 
 /** Delta-style conditional merge clauses. Clause order is significant:
@@ -352,14 +352,15 @@ object MergeClausesExecutor {
   private val RidCols =
     Seq(graft.io.RowTracking.PhysicalCol, graft.io.RowTracking.PhysicalVersionCol)
 
-  /** Candidate files: prune whole partitions when the scope resolves
-    * against partition columns alone (non-aligned scopes fall back to
-    * all files, scoped per-row by the caller), then skip files whose
-    * footer min/max proves they cannot hold a source key: a pruned file
-    * provably contains no match, so no matched clause fires in it and
-    * it cannot suppress an insert. By-source clauses touch unmatched
-    * rows, so no stats pruning with them. This keeps the discovery scan
-    * O(overlapping files) on a 100 TB table with a narrow CDC batch.
+  /** Candidate files: prune whole partitions on the driver when the
+    * scope references partition columns alone ([[PartitionPredicate]];
+    * other scopes keep all files, scoped per-row by the caller), then
+    * skip files whose footer min/max proves they cannot hold a source
+    * key: a pruned file provably contains no match, so no matched clause
+    * fires in it and it cannot suppress an insert. By-source clauses
+    * touch unmatched rows, so no stats pruning with them. This keeps the
+    * discovery scan O(overlapping files) on a 100 TB table with a narrow
+    * CDC batch.
     */
   private def candidateFiles(
       spark: SparkSession,
@@ -368,13 +369,8 @@ object MergeClausesExecutor {
       m: Spec): Seq[AddFile] = {
     val partitionPruned: Seq[AddFile] = m.scope match {
       case Some(p) if snap.partitionColumns.nonEmpty =>
-        try {
-          val keep = GraftWriter.matchingFiles(
-            spark, snap.files, snap.schema, snap.partitionColumns, p).toSet
-          snap.files.filter(f => keep(f.path))
-        } catch {
-          case _: org.apache.spark.sql.AnalysisException => snap.files
-        }
+        PartitionPredicate.resolve(spark, snap, p)
+          .fold(snap.files)(PartitionPredicate.select(spark, snap, _))
       case _ => snap.files
     }
     if (m.bySource.nonEmpty) partitionPruned

@@ -4,12 +4,11 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, BoundReference, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, Predicate}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.io.{DataFilter, DataSkipping, SkipOp}
+import graft.io.{DataFilter, DataSkipping, PartitionPredicate, SkipOp}
 import graft.log.{AddFile, Snapshot}
 
 /** FileIndex over commit-log metadata: the snapshot's add actions already
@@ -20,8 +19,9 @@ import graft.log.{AddFile, Snapshot}
   * dominant planning cost — this is Delta's TahoeFileIndex role).
   *
   * `listFiles` also does two prunes driver-side:
-  *   - partition pruning: catalyst partition filters evaluated against
-  *     the typed partition values from the log;
+  *   - partition pruning: catalyst partition filters evaluated once per
+  *     distinct partition-value map by [[graft.io.PartitionPredicate]],
+  *     the evaluator the writer, OPTIMIZE and merge scopes share;
   *   - data skipping: comparison filters against footer min/max stats
   *     drop whole files (the commit-log skipping of
   *     [[graft.io.GraftTable.scanPruned]], now automatic for every SQL /
@@ -42,10 +42,7 @@ final class GraftFileIndex(
       */
     withBaseRowIdCol: Boolean = false) extends FileIndex {
 
-  private val declaredPartitionSchema: StructType =
-    StructType(snap.partitionColumns.map(c =>
-      snap.schema.find(_.name == c).getOrElse(
-        throw new IllegalStateException(s"partition column $c missing from schema"))))
+  private val declaredPartitionSchema: StructType = PartitionPredicate.schemaOf(snap)
 
   override val partitionSchema: StructType =
     if (!withBaseRowIdCol) declaredPartitionSchema
@@ -73,27 +70,8 @@ final class GraftFileIndex(
     * (per FILE under `withBaseRowIdCol` — each file's base is its own
     * constant).
     */
-  private lazy val dirs: Seq[(InternalRow, Seq[AddFile])] = {
-    def declaredValues(pv: Map[String, String]): Seq[Any] =
-      declaredPartitionSchema.map { f =>
-        pv.get(f.name) match {
-          case None | Some("__HIVE_DEFAULT_PARTITION__") => null
-          case Some(s) => Cast(Literal(s), f.dataType, Some(zone)).eval(null)
-        }
-      }
-    if (withBaseRowIdCol)
-      snap.files.map { f =>
-        (InternalRow.fromSeq(
-          declaredValues(f.partitionValues) ++ Seq(
-            f.baseRowId.map(java.lang.Long.valueOf).orNull,
-            f.addedVersion.map(java.lang.Long.valueOf).orNull)),
-          Seq(f))
-      }
-    else
-      snap.files.groupBy(_.partitionValues).toSeq.map { case (pv, files) =>
-        (InternalRow.fromSeq(declaredValues(pv)), files)
-      }
-  }
+  private lazy val dirs: Seq[(InternalRow, Seq[AddFile])] =
+    PartitionPredicate.rows(declaredPartitionSchema, snap.files, zone, withBaseRowIdCol)
 
   override def listFiles(
       partitionFilters: Seq[Expression],
@@ -112,19 +90,8 @@ final class GraftFileIndex(
   private[graft] def prunedAdds(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[(InternalRow, Seq[AddFile])] = {
-    val selected =
-      if (partitionFilters.isEmpty || partitionSchema.isEmpty) dirs
-      else {
-        val bound = partitionFilters.reduce(And).transform {
-          case a: AttributeReference =>
-            val i = partitionSchema.fieldIndex(a.name)
-            BoundReference(i, partitionSchema(i).dataType, nullable = true)
-        }
-        val pred = Predicate.create(bound)
-        pred.initialize(0)
-        dirs.filter { case (row, _) => pred.eval(row) }
-      }
-    val skips = dataFilters.flatMap(toSkip)
+    val selected = PartitionPredicate.filter(partitionSchema, dirs, partitionFilters)
+    val skips = dataFilters.flatMap(DataSkipping.toSkipFilters)
     val statKept = selected.map { case (row, files) =>
       val kept =
         if (skips.isEmpty) files
@@ -200,13 +167,6 @@ final class GraftFileIndex(
   private lazy val physSchema: StructType =
     graft.io.ColumnMapping.physicalSchema(
       snap.schema, graft.io.ColumnMapping.fromSnapshot(snap))
-
-  /** Catalyst comparison filters -> data-skipping shapes — shared with
-    * the conflict checker's predicate matcher via
-    * [[DataSkipping.toSkipFilters]].
-    */
-  private def toSkip(e: Expression): Seq[DataFilter] =
-    DataSkipping.toSkipFilters(e)
 
   private def status(f: AddFile): FileStatus =
     new FileStatus(f.sizeBytes, false, 1, 128L * 1024 * 1024,

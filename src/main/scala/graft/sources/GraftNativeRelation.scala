@@ -187,20 +187,16 @@ object GraftNativeRelation {
     }
 
   /** The table's bucket layout as a Spark BucketSpec — only when the
-    * snapshot is partitioned by the bucket column and every live file
-    * carries a parseable `_NNNNN` bucket suffix matching its bucket
-    * (older tables written before suffixing fall back to a plain scan).
-    * The partition-column check comes first: a table that is not
-    * bucketed at this snapshot (never was, or was replaced without
-    * bucketing) plans from the checkpoint and its replay suffix alone,
-    * without a commit-by-commit spec search (see
-    * [[graft.io.Bucketing.spec]]).
+    * snapshot is bucketed ([[graft.io.Bucketing.spec]], which answers a
+    * snapshot not partitioned by the bucket column without a commit
+    * search) and every live file carries a parseable `_NNNNN` bucket
+    * suffix matching its bucket (older tables written before suffixing
+    * fall back to a plain scan).
     */
   private[graft] def bucketSpecOf(
       table: graft.io.GraftTable, snap: graft.log.Snapshot): Option[BucketSpec] =
-    if (!snap.partitionColumns.contains(graft.io.Bucketing.BucketCol)) None
-    else for {
-      (key, n) <- graft.io.Bucketing.spec(table, Some(snap.version))
+    for {
+      (key, n) <- graft.io.Bucketing.spec(table, snap)
       if snap.files.forall(f =>
         bucketIdFromName(f.path) ==
           f.partitionValues.get(graft.io.Bucketing.BucketCol).map(_.toInt))

@@ -126,6 +126,18 @@ class BucketingSpec extends SparkSpec {
     assert(t.toDf(Some(0L)).count() == orders.count())
   }
 
+  test("a table replaced without bucketing has no bucket spec, so its old key renames") {
+    val p = tmpDir("bkrename")
+    val df = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
+    Bucketing.write(spark, df, p, "k", 4)
+    GraftWriter.write(spark, df, p, WriteOptions(mode = WriteMode.CreateOrReplace))
+    val t = GraftTable(spark, p)
+    assert(Bucketing.spec(t).isEmpty)
+    assert(Bucketing.spec(t, t.snapshot(Some(0L))).contains(("k", 4)))
+    Alter.alter(spark, p, renameCols = Seq("k" -> "k2"))
+    assert(GraftTable(spark, p).toDf().select("k2").as[Long].collect().toSet == Set(1L, 2L))
+  }
+
   test("mismatched bucket counts are rejected") {
     val pa = tmpDir("bka")
     val pb = tmpDir("bkb")
