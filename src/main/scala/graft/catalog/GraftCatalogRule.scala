@@ -71,10 +71,6 @@ class GraftCatalogRule(spark: SparkSession) extends Rule[LogicalPlan] {
     Project(out.map(o => Alias(byName(o.name), o.name)(exprId = o.exprId)), native)
   }
 
-  private def nativePlan(path: String, versionAsOf: Option[Long]): LogicalPlan =
-    GraftNativeRelation.plan(spark, path, versionAsOf).getOrElse(
-      LogicalRelation(GraftRelation(spark.sqlContext, path, versionAsOf)))
-
   /** Overwrite deleteExpr → replaceWhere Column: resolved attribute refs
     * are rebuilt name-based so the predicate re-resolves against the
     * writer's own scan.
@@ -173,7 +169,7 @@ class GraftCatalogRule(spark: SparkSession) extends Rule[LogicalPlan] {
           // The substitution rule upgrades it to the native plan.
           LogicalRelation(GraftRelation(
             spark.sqlContext, t.path, t.versionAsOf, withRowIds = true))
-        } else rebind(out, nativePlan(t.path, t.versionAsOf))
+        } else rebind(out, GraftNativeRelation.plan(spark, t.path, t.versionAsOf))
     }
 
   private def pathOf(c: GraftCatalog, ident: Identifier): String =

@@ -24,9 +24,11 @@ object SkipOp {
   case object In extends SkipOp
 }
 
-/** A simple `column op literal` filter usable for file pruning. Value
-  * types: Int/Long/Double/String/java.sql.Timestamp (Seq thereof for In;
-  * ignored for IsNull/IsNotNull).
+/** A simple `column op literal` filter: the caller-facing filter of
+  * [[GraftTable.scanPruned]] (any value `lit` accepts; a Seq of them for
+  * In; ignored for IsNull/IsNotNull) and the footer-stats shape
+  * [[DataSkipping.toSkipFilters]] compiles a conjunct to (Int/Long/
+  * Double/String, timestamps as micros or java.sql.Timestamp).
   */
 final case class DataFilter(column: String, op: SkipOp, value: Any = null) {
   def toColumn: Column = op match {
@@ -42,17 +44,88 @@ final case class DataFilter(column: String, op: SkipOp, value: Any = null) {
   }
 }
 
+/** Which files can hold a row matching a resolved condition: graft's one
+  * file pruner, [[pruner]]. A conjunct over partition columns alone is
+  * evaluated on the file's typed partition row by [[PartitionPredicate]]
+  * (the hive NULL sentinel, the session time zone, casts, OR, IN and
+  * `<=>` all hold there); every other conjunct is compiled to footer-stats
+  * filters ([[toSkipFilters]]) and checked against the file's min/max
+  * and null counts ([[mayMatch]]). The scan's index
+  * ([[graft.sources.GraftFileIndex]], and through it
+  * [[GraftTable.scanPruned]]), the writer's partition scopes, the DML and
+  * merge conflict checks ([[matcherFor]]) and merge key-range pruning
+  * all call it, so a scan and a conflict check cannot disagree about a
+  * file.
+  */
 private[graft] object DataSkipping {
 
   import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, SubqueryExpression}
   import org.apache.spark.unsafe.types.UTF8String
 
+  /** The files of `rows` (typed partition rows of layout `partSchema`,
+    * each with its files) that may hold a row satisfying every conjunct
+    * of `conds`. Conjuncts name partition columns as in `partSchema` and
+    * data columns as in `statsSchema`, the names footer stats are keyed
+    * by. A partition conjunct must be resolved, deterministic and
+    * subquery-free; anything else goes to the footer-stats check, which
+    * keeps every file it cannot rule out. Compiled once; the returned
+    * function keeps each row, possibly with no files left.
+    */
+  def pruner(
+      partSchema: StructType,
+      statsSchema: StructType,
+      conds: Seq[Expression])
+      : Seq[(InternalRow, Seq[AddFile])] => Seq[(InternalRow, Seq[AddFile])] = {
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val partNames = partSchema.fieldNames.toSet
+    val (onPartitions, onStats) = conds.flatMap(conjuncts).partition(c =>
+      c.resolved && c.deterministic && !SubqueryExpression.hasSubquery(c) &&
+        c.references.forall(a => partNames(a.name)))
+    val keepRow = PartitionPredicate.compile(partSchema, onPartitions)
+    val skips = onStats.flatMap(toSkipFilters)
+    rows => rows.collect { case (row, files) if keepRow(row) =>
+      (row,
+        if (skips.isEmpty) files
+        else files.filter(f => skips.forall(mayMatch(f, statsSchema, _))))
+    }
+  }
+
+  /** [[pruner]] as a test of one file, which need not be live in `snap`
+    * (a concurrent commit's append): `conds` are resolved against
+    * `snap`'s logical schema and read partition values in time zone
+    * `zone`.
+    */
+  def fileMatcher(
+      snap: graft.log.Snapshot,
+      zone: String,
+      conds: Seq[Expression]): AddFile => Boolean = {
+    val m = ColumnMapping.fromSnapshot(snap)
+    val partSchema = PartitionPredicate.schemaOf(snap)
+    // footer stats are keyed by physical name; partition columns are
+    // never renamed
+    val physConds = conds.map(_.transform {
+      case a: AttributeReference if !snap.partitionColumns.contains(a.name) =>
+        a.withName(ColumnMapping.physicalName(m, a.name))
+    })
+    val prune = pruner(partSchema,
+      ColumnMapping.physicalSchema(snap.schema, m), physConds)
+    // one typed row per distinct partition-value map, as in a scan
+    val rowOf = new java.util.concurrent.ConcurrentHashMap[Map[String, String], InternalRow]()
+    f => {
+      val row = rowOf.computeIfAbsent(f.partitionValues,
+        _ => PartitionPredicate.rows(partSchema, Seq(f), zone).head._1)
+      prune(Seq((row, Seq(f)))).exists(_._2.nonEmpty)
+    }
+  }
+
   /** Catalyst comparison filters → data-skipping shapes (conservative:
-    * anything unrecognized skips nothing). Shared by the scan-side file
-    * index ([[graft.sources.GraftFileIndex]]) and the conflict checker's
-    * predicate matcher ([[matcherFor]]) so the two can never disagree on
-    * what a predicate proves about a file.
+    * anything unrecognized skips nothing): the footer-stats half of
+    * [[pruner]].
     */
   def toSkipFilters(e: Expression): Seq[DataFilter] = {
     def value(v: Any): Any = v match {
@@ -88,29 +161,22 @@ private[graft] object DataSkipping {
   }
 
   /** Conservative file matcher for a transaction's read predicate
-    * ([[graft.log.TxnProfile.mayRead]]): `false` only when the file's
-    * partition values / footer stats PROVE `condition` matches nothing
-    * in it. The condition is resolved against the snapshot schema and
-    * compiled to skip filters on PHYSICAL column names (footer stats are
-    * keyed physically under column mapping); a condition that compiles
-    * to no usable filter yields an always-`true` matcher — every
-    * concurrent append then conflicts, which is the safe default.
+    * ([[graft.log.TxnProfile.mayRead]]): `false` only when [[pruner]]
+    * proves that `condition`, resolved against the snapshot schema,
+    * matches nothing in the file — the same answer the scan's index
+    * gives. An unresolvable condition yields an always-`true` matcher:
+    * every concurrent append then conflicts, which is the safe default.
     */
   def matcherFor(
       spark: SparkSession,
       snap: graft.log.Snapshot,
       condition: Column): AddFile => Boolean = {
-    val filters: Seq[DataFilter] =
-      try {
-        val m = ColumnMapping.fromSnapshot(snap)
-        toSkipFilters(PartitionPredicate.analyze(spark, snap.schema, condition))
-          .map(f => f.copy(column = ColumnMapping.physicalName(m, f.column)))
-      } catch {
+    val cond =
+      try Seq(PartitionPredicate.analyze(spark, snap.schema, condition))
+      catch {
         case scala.util.control.NonFatal(_) => Nil // unresolvable → conservative
       }
-    val physSchema = ColumnMapping.physicalSchema(
-      snap.schema, ColumnMapping.fromSnapshot(snap))
-    a => filters.forall(mayMatch(a, physSchema, _))
+    fileMatcher(snap, spark.sessionState.conf.sessionLocalTimeZone, cond)
   }
 
   private def micros(ts: Timestamp): BigDecimal =
@@ -135,65 +201,12 @@ private[graft] object DataSkipping {
     case _ => None
   }
 
-  /** True unless the file PROVABLY cannot match the filter. Partition
-    * columns compare against the file's exact partition value (they are
-    * not stored in the data files, so footer stats never cover them);
-    * data columns compare against the footer [min, max] interval.
+  /** True unless the file's footer stats PROVE it cannot match the
+    * filter: the data column's [min, max] interval and null count.
     * Missing/unusable information always keeps the file — the residual
     * filter guarantees correctness either way.
     */
-  def mayMatch(file: AddFile, schema: StructType, f: DataFilter): Boolean =
-    file.partitionValues.get(f.column) match {
-      case Some(pv) =>
-        partitionMayMatch(pv, schema.find(_.name == f.column).map(_.dataType), f)
-      case None => statMayMatch(file, schema, f)
-    }
-
-  /** Exact single-value semantics for a partition column: every row of
-    * the file carries `pv`.
-    */
-  private def partitionMayMatch(
-      pv: String, dtOpt: Option[DataType], f: DataFilter): Boolean = {
-    val isNullPv = pv == "__HIVE_DEFAULT_PARTITION__" // hive null sentinel
-    f.op match {
-      case SkipOp.IsNull    => isNullPv
-      case SkipOp.IsNotNull => !isNullPv
-      case _ if isNullPv    => false // comparisons never match null
-      case _ =>
-        // reuse the stat parser; values it cannot parse (e.g. timestamp
-        // partition dirs render as formatted strings, not micros) keep
-        // the file conservatively
-        val parsed = dtOpt.flatMap(dt =>
-          scala.util.Try(parseStat(pv, dt)).toOption.flatten)
-        if (parsed.isEmpty) true
-        else {
-          def compareTo(x: Any): Option[Int] = (parsed.get, x) match {
-            case (a: String, b: String) =>
-              Some(org.apache.spark.unsafe.types.UTF8String.fromString(a)
-                .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)))
-            case (a, b) => for { p <- num(a); q <- num(b) } yield p.compare(q)
-          }
-          f.op match {
-            case SkipOp.In => f.value match {
-              case vs: Seq[_] => vs.isEmpty || vs.exists(v => compareTo(v).contains(0))
-              case _          => true
-            }
-            case op => compareTo(f.value).map { c =>
-              op match {
-                case SkipOp.Eq => c == 0
-                case SkipOp.Lt => c < 0
-                case SkipOp.Le => c <= 0
-                case SkipOp.Gt => c > 0
-                case SkipOp.Ge => c >= 0
-                case _         => true
-              }
-            }.getOrElse(true)
-          }
-        }
-    }
-  }
-
-  private def statMayMatch(file: AddFile, schema: StructType, f: DataFilter): Boolean = {
+  def mayMatch(file: AddFile, schema: StructType, f: DataFilter): Boolean = {
     val statOpt = file.stats.get(f.column)
     val dtOpt = schema.find(_.name == f.column).map(_.dataType)
     (statOpt, dtOpt) match {

@@ -87,13 +87,6 @@ final class GraftTable(val spark: SparkSession, val path: String) {
       withRowId = true)
   }
 
-  /** Advanced: read a specific file subset of a snapshot (used by the
-    * streaming source and bucketing internals). Plans over the
-    * commit-log FileIndex — zero filesystem listing, with partition
-    * pruning and footer-stats skipping driven from log metadata (see
-    * [[graft.sources.GraftFileIndex]]); falls back to a plain parquet
-    * read if the native plan cannot represent the schema.
-    */
   /** [[dfForFiles]] for a REWRITE under row tracking: when `carryIds`,
     * the rows come back with their current ids renamed to the physical
     * materialization column (`__graft_row_id`), so writing the frame
@@ -114,6 +107,12 @@ final class GraftTable(val spark: SparkSession, val path: String) {
     else d
   }
 
+  /** Advanced: read a specific file subset of a snapshot (used by the
+    * streaming source and bucketing internals). Plans over the
+    * commit-log FileIndex — zero filesystem listing, with partition
+    * pruning and footer-stats skipping driven from log metadata (see
+    * [[graft.sources.GraftFileIndex]]).
+    */
   def dfForFiles(
       snap: Snapshot,
       files: Seq[AddFile],
@@ -124,61 +123,13 @@ final class GraftTable(val spark: SparkSession, val path: String) {
         */
       withRowMeta: Boolean = false,
       /** Also project `_graft_row_id` (row tracking — see
-        * [[RowTracking]]); requires the native plan.
+        * [[RowTracking]]).
         */
-      withRowId: Boolean = false): DataFrame = {
-    val schema = snap.schema
-    val sub = snap.copy(files = files)
-    graft.sources.GraftNativeRelation
-      .planFor(spark, path, sub, bucketSpec = bucketSpec, readOptions = readOptions,
-        withRowMeta = withRowMeta, withRowId = withRowId)
-      .map(p => org.apache.spark.sql.graft.GraftInternal.dfFromPlan(spark, p))
-      .getOrElse {
-        require(!withRowId,
-          s"row-id read of $path needs the native plan, which cannot " +
-            "represent this schema")
-        if (files.isEmpty)
-          return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        val partCols = snap.partitionColumns.toSet
-        // renamed columns: files carry physical names (ColumnMapping) —
-        // read physical, alias back to logical below
-        val mapping = ColumnMapping.fromSnapshot(snap)
-        val dataSchema = ColumnMapping.physicalSchema(
-          StructType(schema.filterNot(f => partCols(f.name))), mapping)
-        val abs = files.map(f => new Path(path, f.path).toString)
-        val raw0 = spark.read
-          .schema(dataSchema)
-          .options(readOptions)
-          .option("basePath", path)
-          .parquet(abs: _*)
-        // deletion vectors: same anti-filter as the native plan
-        val raw = DeletionVectors.indexFor(
-            path, spark.sessionState.newHadoopConf(), files) match {
-          case Some(idx) =>
-            raw0.filter(!org.apache.spark.sql.graft.GraftInternal.column(
-              DvDeleted(idx,
-                org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
-                  Seq("_metadata", "file_path")),
-                org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
-                  Seq("_metadata", "row_index")))))
-          case None => raw0
-        }
-        // pin column order + partition column types to the declared schema
-        val pinned = schema.map { f =>
-          val phys = if (partCols(f.name)) f.name
-            else ColumnMapping.physicalName(mapping, f.name)
-          col(phys).cast(f.dataType).as(f.name)
-        }
-        val metaCols =
-          if (withRowMeta) Seq(
-            col("_metadata.file_path").as(
-              graft.sources.GraftNativeRelation.RowMetaFileCol),
-            col("_metadata.row_index").as(
-              graft.sources.GraftNativeRelation.RowMetaIndexCol))
-          else Nil
-        raw.select(pinned ++ metaCols: _*)
-      }
-  }
+      withRowId: Boolean = false): DataFrame =
+    org.apache.spark.sql.graft.GraftInternal.dfFromPlan(spark,
+      graft.sources.GraftNativeRelation.planFor(spark, path, snap.copy(files = files),
+        bucketSpec = bucketSpec, readOptions = readOptions,
+        withRowMeta = withRowMeta, withRowId = withRowId))
 
   /** Sliced scan: partition predicate (read-side range semantics) +
     * projection — the reference's `load_input` path
@@ -187,43 +138,31 @@ final class GraftTable(val spark: SparkSession, val path: String) {
   def scan(slice: TableSlice, versionAsOf: Option[Long] = None): DataFrame =
     SliceCompiler(toDf(versionAsOf), slice)
 
-  /** Data-skipping scan: prune whole files whose footer min/max stats
-    * prove they cannot satisfy the filters (Delta-style skipping on
-    * NON-partition columns), then apply the filters as a residual. At
-    * 100 TB this turns a selective point/range query on a clustered
-    * column into an O(matching-files) read instead of a full scan —
-    * pruning happens on the driver against log metadata, no file IO.
+  /** Data-skipping scan: the table read with `filters` applied. The
+    * scan's own index ([[graft.sources.GraftFileIndex]]) prunes on the
+    * driver against log metadata, with no file IO beyond bloom footers:
+    * partition filters on the files' typed partition values, the rest on
+    * footer min/max and null counts, then `=`/`IN` on declared bloom
+    * columns — the pruner the conflict checks use too
+    * ([[DataSkipping.pruner]]). At 100 TB a selective point/range query
+    * on a clustered column reads O(matching files).
     */
   def scanPruned(
       filters: Seq[DataFilter],
       versionAsOf: Option[Long] = None): DataFrame = {
-    val snap = snapshot(versionAsOf)
-    val kept = snap.files.filter(f =>
-      physFilters(snap, filters).forall(
-        DataSkipping.mayMatch(f, physSchema(snap), _)))
-    val df = dfForFiles(snap, kept)
-    filters.map(_.toColumn).reduceOption(_ && _).map(df.filter).getOrElse(df)
+    val df = toDf(versionAsOf)
+    filters.map(_.toColumn).reduceOption(_ && _).fold(df)(df.filter)
   }
 
-  /** Number of files a filter set would read (for tests/diagnostics). */
-  def filesAfterPruning(filters: Seq[DataFilter]): Int = {
-    val snap = snapshot()
-    snap.files.count(f =>
-      physFilters(snap, filters).forall(
-        DataSkipping.mayMatch(f, physSchema(snap), _)))
-  }
-
-  // stats in the log are keyed by PHYSICAL column names (ColumnMapping):
-  // translate caller-facing logical filters before consulting them
-  private def physFilters(
-      snap: Snapshot, filters: Seq[DataFilter]): Seq[DataFilter] = {
-    val m = ColumnMapping.fromSnapshot(snap)
-    if (m.isEmpty) filters
-    else filters.map(f => f.copy(column = ColumnMapping.physicalName(m, f.column)))
-  }
-
-  private def physSchema(snap: Snapshot): StructType =
-    ColumnMapping.physicalSchema(snap.schema, ColumnMapping.fromSnapshot(snap))
+  /** Number of files [[scanPruned]]`(filters)` reads: the count its
+    * planned scan's index keeps (for tests/diagnostics; plans, runs no
+    * job).
+    */
+  def filesAfterPruning(filters: Seq[DataFilter]): Int =
+    scanPruned(filters).queryExecution.sparkPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.selectedPartitions.totalNumberOfFiles.toInt
+    }.getOrElse(0)
 
   /** Live-files ⋈ add-actions stats join + SUM — the reference's only
     * embedded relational computation (handler.py:490-516). Returns one row:

@@ -232,12 +232,12 @@ object GraftWriter {
       case Some(s)
           if opts.mode == WriteMode.Append || opts.mode == WriteMode.Overwrite =>
         (opts.schemaMode, opts.mode) match {
-          case (Some(SchemaMode.Overwrite), _) => df.schema
+          case (Some(SchemaMode.Overwrite), _) => uniqueIgnoringCase(df.schema)
           case (Some(SchemaMode.Merge), _)     => mergeSchemas(s.schema, df.schema)
           case (None, _) =>
             requireCompatible(s.schema, df.schema, path); s.schema
         }
-      case _ => df.schema // fresh table or create_or_replace
+      case _ => uniqueIgnoringCase(df.schema) // fresh table or create_or_replace
     }
 
     if (opts.dynamicPartitionOverwrite) {
@@ -1572,8 +1572,21 @@ object GraftWriter {
           s"schema merge conflict on '${f.name}': ${ex.dataType} vs ${f.dataType}")
       }
     }
-    StructType(old ++ incoming.filterNot(f => oldNames(f.name))
-      .map(_.copy(nullable = true)))
+    uniqueIgnoringCase(StructType(old ++ incoming.filterNot(f => oldNames(f.name))
+      .map(_.copy(nullable = true))))
+  }
+
+  /** `schema`, refused when two column names differ in case alone
+    * (Delta's rule, whatever `spark.sql.caseSensitive` says): a
+    * case-insensitive read merges such a data column into the partition
+    * column of the same name, and could serve only one of them.
+    */
+  private def uniqueIgnoringCase(schema: StructType): StructType = {
+    val clashes = schema.fieldNames.groupBy(_.toLowerCase(java.util.Locale.ROOT))
+      .values.filter(_.length > 1).map(_.mkString("/"))
+    require(clashes.isEmpty,
+      s"column names must differ in more than case: ${clashes.mkString(", ")}")
+    schema
   }
 
   private def requireCompatible(old: StructType, incoming: StructType, path: String): Unit = {

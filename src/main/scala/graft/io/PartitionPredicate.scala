@@ -9,9 +9,10 @@ import org.apache.spark.sql.types.StructType
 
 import graft.log.{AddFile, Snapshot}
 
-/** The one driver-side partition-predicate evaluator, with no Spark job:
-  * scan planning ([[graft.sources.GraftFileIndex]]), replaceWhere
-  * overwrites, OPTIMIZE ... WHERE and merge scopes all call it. The
+/** The one driver-side partition-predicate evaluator, with no Spark job,
+  * behind the file pruner [[DataSkipping.pruner]]: scan planning
+  * ([[graft.sources.GraftFileIndex]]), conflict checks, replaceWhere
+  * overwrites, OPTIMIZE ... WHERE and merge scopes all reach it. The
   * reference narrows a partition-scoped overwrite the same way, by
   * comparing partition values (dagster_delta/handler.py:190-225). A
   * predicate is bound to a typed partition row and evaluated once per
@@ -50,14 +51,12 @@ object PartitionPredicate {
       }
   }
 
-  /** The rows satisfying all of `conds`, resolved predicates whose
-    * attributes name fields of `schema` (the rows' layout).
+  /** A test of a row of layout `schema` against all of `conds`,
+    * resolved predicates whose attributes name fields of `schema`;
+    * compiled once.
     */
-  def filter(
-      schema: StructType,
-      rows: Seq[(InternalRow, Seq[AddFile])],
-      conds: Seq[Expression]): Seq[(InternalRow, Seq[AddFile])] =
-    if (conds.isEmpty) rows
+  def compile(schema: StructType, conds: Seq[Expression]): InternalRow => Boolean =
+    if (conds.isEmpty) _ => true
     else {
       val pred = Predicate.create(conds.reduce(And).transform {
         case a: AttributeReference =>
@@ -65,7 +64,7 @@ object PartitionPredicate {
           BoundReference(i, schema(i).dataType, nullable = true)
       })
       pred.initialize(0)
-      rows.filter { case (row, _) => pred.eval(row) }
+      pred.eval
     }
 
   /** `pred` analyzed against `schema` — a filter over an empty
@@ -102,8 +101,8 @@ object PartitionPredicate {
     */
   def select(spark: SparkSession, snap: Snapshot, cond: Expression): Seq[AddFile] = {
     val schema = schemaOf(snap)
-    val keep = filter(schema,
-      rows(schema, snap.files, spark.sessionState.conf.sessionLocalTimeZone), Seq(cond))
+    val keep = DataSkipping.pruner(schema, snap.schema, Seq(cond))(
+      rows(schema, snap.files, spark.sessionState.conf.sessionLocalTimeZone))
       .map(_._2.head.partitionValues).toSet
     snap.files.filter(f => keep(f.partitionValues))
   }

@@ -1,10 +1,11 @@
 package graft.merge
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, GreaterThanOrEqual, LessThanOrEqual, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.io.{DataFilter, DataSkipping, GraftTable, GraftWriter, PartitionPredicate, SkipOp}
+import graft.io.{DataSkipping, GraftTable, GraftWriter, PartitionPredicate}
 import graft.log.{AddFile, RemoveFile}
 
 /** Delta-style conditional merge clauses. Clause order is significant:
@@ -374,27 +375,40 @@ object MergeClausesExecutor {
       case _ => snap.files
     }
     if (m.bySource.nonEmpty) partitionPruned
-    else keyRangeMatcher(snap, agg).fold(partitionPruned)(partitionPruned.filter)
+    else keyRangeMatcher(spark, snap, agg).fold(partitionPruned)(partitionPruned.filter)
   }
 
-  /** For a plain equi-merge `s.K = t.C`: a footer-stats test of whether
-    * a file's [min,max] on the target key may hold one of the source's
-    * keys (always false when the source has no non-null key — nothing
-    * joins). None for any richer predicate.
+  /** For a plain equi-merge `s.K = t.C`: whether a file may hold one of
+    * the source's keys, `lo <= C <= hi`, asked of the file pruner — a
+    * partition key is tested on the file's partition value, any other
+    * key on its footer [min,max] (always false when the source has no
+    * non-null key — nothing joins). The bounds are built as literals, so
+    * no analysis pass runs. None for any richer predicate.
     */
   private def keyRangeMatcher(
+      spark: SparkSession,
       snap: graft.log.Snapshot,
       agg: SourceAgg): Option[AddFile => Boolean] =
     agg.keyRange.map {
       case (_, None) => (_: AddFile) => false
       case (tgtCol, Some((lo, hi))) =>
-        // stats are keyed by physical column names (ColumnMapping)
-        val cm = graft.io.ColumnMapping.fromSnapshot(snap)
-        val phys = graft.io.ColumnMapping.physicalName(cm, tgtCol)
-        val filters = Seq(DataFilter(phys, SkipOp.Ge, lo),
-          DataFilter(phys, SkipOp.Le, hi))
-        val physSchema = graft.io.ColumnMapping.physicalSchema(snap.schema, cm)
-        (f: AddFile) => filters.forall(DataSkipping.mayMatch(f, physSchema, _))
+        val zone = spark.sessionState.conf.sessionLocalTimeZone
+        val bounds = for {
+          f <- snap.schema.find(_.name == tgtCol)
+          (l, h) <- scala.util.Try((Literal(lo), Literal(hi))).toOption
+        } yield {
+          // a bound takes the key's type when the source's casts up to
+          // it; otherwise it stays as it came: footer stats compare it
+          // across numeric types, and an ill-typed partition bound is
+          // not evaluated, so it prunes nothing
+          def typed(l: Literal): Literal =
+            if (!Cast.canUpCast(l.dataType, f.dataType)) l
+            else Literal(Cast(l, f.dataType, Some(zone)).eval(), f.dataType)
+          val key = AttributeReference(f.name, f.dataType)()
+          Seq(GreaterThanOrEqual(key, typed(l)), LessThanOrEqual(key, typed(h)))
+        }
+        bounds.fold[AddFile => Boolean](_ => true)(
+          DataSkipping.fileMatcher(snap, zone, _))
     }
 
   /** `(sourceKey, targetKey)` of a plain equi-merge predicate
@@ -438,7 +452,7 @@ object MergeClausesExecutor {
     }
     lazy val keyMatcher: AddFile => Boolean =
       if (m.bySource.nonEmpty) _ => true
-      else keyRangeMatcher(snap, agg).getOrElse(_ => true)
+      else keyRangeMatcher(spark, snap, agg).getOrElse(_ => true)
     graft.log.TxnProfile(readPaths, touched.map(_.path).toSet,
       a => partMatcher(a) && keyMatcher(a))
   }

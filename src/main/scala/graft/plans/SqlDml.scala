@@ -629,7 +629,7 @@ class GraftSqlDml(spark: SparkSession) extends Rule[LogicalPlan] {
             }
             graft.io.GraftTable(spark, u.path).versionAtTimestamp(micros / 1000L)
         }
-        readPlan(u.path, Some(v))
+        graft.sources.GraftNativeRelation.plan(spark, u.path, Some(v))
 
       // ALTER TABLE on path targets (the Delta-style `ALTER TABLE
       // graft.`/path`` surface); UnresolvedTable keeps the raw two-part
@@ -846,9 +846,9 @@ class GraftSqlDml(spark: SparkSession) extends Rule[LogicalPlan] {
 
       // plain read context (`SELECT ... FROM graft.`path``): substitute
       // the native columnar plan (codegen parquet scan over the
-      // commit-log file index; V1 row-based relation as the fallback
-      // for tables the native plan can't represent)
-      case u: UnresolvedGraftRelation => readPlan(u.path, None)
+      // commit-log file index)
+      case u: UnresolvedGraftRelation =>
+        graft.sources.GraftNativeRelation.plan(spark, u.path, None)
     }
 
   /** Graft path inside an ADD CONSTRAINT read child: the parse-time
@@ -900,10 +900,4 @@ class GraftSqlDml(spark: SparkSession) extends Rule[LogicalPlan] {
       Some(r.table.asInstanceOf[graft.catalog.GraftCatalogTable].path)
     case _ => None
   }
-
-  private def readPlan(path: String, versionAsOf: Option[Long]): LogicalPlan =
-    graft.sources.GraftNativeRelation.plan(spark, path, versionAsOf).getOrElse {
-      org.apache.spark.sql.execution.datasources.LogicalRelation(
-        graft.sources.GraftRelation(spark.sqlContext, path, versionAsOf))
-    }
 }

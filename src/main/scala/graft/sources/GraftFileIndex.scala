@@ -18,16 +18,14 @@ import graft.log.{AddFile, Snapshot}
   * file up front; on an object store with millions of files that is the
   * dominant planning cost — this is Delta's TahoeFileIndex role).
   *
-  * `listFiles` also does two prunes driver-side:
+  * `listFiles` prunes driver-side through [[graft.io.DataSkipping.pruner]],
+  * the pruner the conflict checks and merge key ranges share:
   *   - partition pruning: catalyst partition filters evaluated once per
-  *     distinct partition-value map by [[graft.io.PartitionPredicate]],
-  *     the evaluator the writer, OPTIMIZE and merge scopes share;
+  *     distinct partition-value map by [[graft.io.PartitionPredicate]];
   *   - data skipping: comparison filters against footer min/max stats
-  *     drop whole files (the commit-log skipping of
-  *     [[graft.io.GraftTable.scanPruned]], now automatic for every SQL /
-  *     DataFrame read through `format("graft")`). Unsupported filter
-  *     shapes simply skip nothing — Spark re-applies all filters above
-  *     the scan.
+  *     drop whole files, then declared bloom columns answer `=`/`IN`
+  *     probes. Unsupported filter shapes simply skip nothing — Spark
+  *     re-applies all filters above the scan.
   */
 final class GraftFileIndex(
     spark: SparkSession,
@@ -90,14 +88,9 @@ final class GraftFileIndex(
   private[graft] def prunedAdds(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[(InternalRow, Seq[AddFile])] = {
-    val selected = PartitionPredicate.filter(partitionSchema, dirs, partitionFilters)
+    val statKept = DataSkipping.pruner(partitionSchema, physSchema,
+      partitionFilters ++ dataFilters)(dirs)
     val skips = dataFilters.flatMap(DataSkipping.toSkipFilters)
-    val statKept = selected.map { case (row, files) =>
-      val kept =
-        if (skips.isEmpty) files
-        else files.filter(f => skips.forall(DataSkipping.mayMatch(f, physSchema, _)))
-      (row, kept)
-    }
     // point-lookup skipping: `=`/`IN` filters on DECLARED bloom columns
     // consult the surviving files' parquet footer bloom filters (min/max
     // can't prune a uniform high-cardinality key; the bloom filter can)

@@ -32,14 +32,13 @@ import org.apache.spark.sql.types.StructType
 object GraftNativeRelation {
 
   /** Native logical plan for the table at `path` (declared column order
-    * and types, like `GraftTable.toDf`), or None if the relation cannot
-    * represent the declared schema (the V1 relation stays correct).
+    * and types, like `GraftTable.toDf`).
     */
   def plan(
       spark: SparkSession,
       path: String,
       versionAsOf: Option[Long],
-      withRowId: Boolean = false): Option[LogicalPlan] = {
+      withRowId: Boolean = false): LogicalPlan = {
     val table = graft.io.GraftTable(spark, path)
     val snap = table.snapshot(versionAsOf)
     planFor(spark, path, snap, bucketSpecOf(table, snap), withRowId = withRowId)
@@ -66,7 +65,7 @@ object GraftNativeRelation {
         * files), else `baseRowId + _metadata.row_index`, else NULL
         * (pre-feature files).
         */
-      withRowId: Boolean = false): Option[LogicalPlan] = {
+      withRowId: Boolean = false): LogicalPlan = {
     // read as nullable regardless of the declared schema — files cannot
     // be trusted to honor NOT NULL (Spark's own file sources do the
     // same; a non-nullable read schema lets the optimizer fold
@@ -108,13 +107,21 @@ object GraftNativeRelation {
       options = readOptions + ("basePath" -> path))(spark)
     val lr = LogicalRelation(relation)
     val byName = lr.output.map(a => a.name -> a).toMap
-    // pin declared column order + partition column types; bail out (None)
-    // if the inferred relation is missing a declared column — the V1
-    // fallback stays correct
+    // pin declared column order + partition column types. The relation
+    // drops a declared data column only when a case-insensitive session
+    // merges it into a partition column whose name differs from it in
+    // case alone — a schema the writer refuses (GraftWriter's
+    // case-insensitive uniqueness check); a table written before that
+    // check reads only under spark.sql.caseSensitive=true
     def physOf(f: org.apache.spark.sql.types.StructField): String =
       if (partCols(f.name)) f.name
       else graft.io.ColumnMapping.physicalName(mapping, f.name)
-    if (!snap.schema.forall(f => byName.contains(physOf(f)))) return None
+    val dropped = snap.schema.filterNot(f => byName.contains(physOf(f)))
+    if (dropped.nonEmpty)
+      throw new IllegalStateException(s"graft table $path: column(s) " +
+        s"${dropped.map(_.name).mkString(", ")} differ from a partition column " +
+        "in case alone, so a case-insensitive read cannot tell them apart; " +
+        "read it with spark.sql.caseSensitive=true")
     val projections: Seq[NamedExpression] = snap.schema.map { f =>
       val attr = byName(physOf(f))
       if (attr.dataType == f.dataType && attr.name == f.name) attr
@@ -164,7 +171,7 @@ object GraftNativeRelation {
           Alias(rid, graft.io.RowTracking.Col)(),
           Alias(rver, graft.io.RowTracking.VersionCol)())
       }
-    Some(Project(allProjections, filtered))
+    Project(allProjections, filtered)
   }
 
   /** Column names of the `withRowMeta = true` projection. */
@@ -220,15 +227,12 @@ object GraftNativeRelation {
   */
 class GraftRelationSubstitution(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case lr @ LogicalRelation(g: GraftRelation, out, _, _, _) =>
-      GraftNativeRelation.plan(
-        spark, g.path, g.versionAsOf, withRowId = g.withRowIds) match {
-        case Some(native) =>
-          val byName = native.output.map(a => a.name -> a).toMap
-          Project(
-            out.map(o => Alias(byName(o.name), o.name)(exprId = o.exprId)),
-            native)
-        case None => lr // empty/unrepresentable table: V1 path is correct
-      }
+    case LogicalRelation(g: GraftRelation, out, _, _, _) =>
+      val native = GraftNativeRelation.plan(
+        spark, g.path, g.versionAsOf, withRowId = g.withRowIds)
+      val byName = native.output.map(a => a.name -> a).toMap
+      Project(
+        out.map(o => Alias(byName(o.name), o.name)(exprId = o.exprId)),
+        native)
   }
 }

@@ -224,6 +224,36 @@ class ConflictSpec extends SparkSpec {
     }
   }
 
+  test("DELETE on a date partition rebases over an append to another date (writeCow profile)") {
+    val p = tmpDir("rebase_date") + "/t"
+    val (d1, d2) = (java.sql.Date.valueOf("2024-01-01"), java.sql.Date.valueOf("2024-01-02"))
+    GraftWriter.write(spark, Seq((1L, d1)).toDF("k", "d"), p,
+      WriteOptions(mode = WriteMode.Overwrite, partitionBy = Seq("d")))
+    val table = GraftTable(spark, p)
+    val cond = expr("d = DATE'2024-01-01'")
+    def deleteFrom(base: Snapshot): Long =
+      GraftWriter.writeCow(spark, table.dfForFiles(base, base.files).filter(!cond), p, base,
+        base.files.map(f => RemoveFile(f.path)),
+        operation = "DELETE", metadata = Map.empty,
+        profile = Some(TxnProfile(
+          base.files.map(_.path).toSet,
+          base.files.map(_.path).toSet,
+          graft.io.DataSkipping.matcherFor(spark, base, cond))))
+
+    // a concurrent append to the other date: the DELETE rebases
+    val base = table.snapshot()
+    GraftWriter.write(spark, Seq((2L, d2)).toDF("k", "d"), p,
+      WriteOptions(mode = WriteMode.Append))
+    assert(deleteFrom(base) == 2L)
+    assert(table.toDf().as[(Long, java.sql.Date)].collect().toSet == Set((2L, d2)))
+
+    // an append to the deleted date conflicts instead
+    val base2 = table.snapshot()
+    GraftWriter.write(spark, Seq((3L, d1)).toDF("k", "d"), p,
+      WriteOptions(mode = WriteMode.Append))
+    intercept[ConcurrentAppendException](deleteFrom(base2))
+  }
+
   test("concurrent DELETE and appends stay correct end-to-end (typed conflicts retry)") {
     val p = tmpDir("conc_dml") + "/t"
     GraftWriter.write(spark,

@@ -298,4 +298,65 @@ class DataSkippingSpec extends SparkSpec {
     assert(t.toDf().count() == 5)
     assert(t.toDf().select("a").as[Long].collect().toSet == Set(0L, 1L, 2L, 3L, 4L))
   }
+
+  test("date and timestamp partitions prune in filesAfterPruning, scanPruned and matcherFor") {
+    import org.apache.spark.sql.DataFrame
+    def check(df: DataFrame, c: String, typed: Any): Unit = {
+      val p = tmpDir(s"part_$c") + "/t"
+      GraftWriter.write(spark, df, p,
+        WriteOptions(mode = WriteMode.Overwrite, partitionBy = Seq(c)))
+      val t = GraftTable(spark, p)
+      val snap = t.snapshot()
+      assert(snap.files.size == 2)
+      // the value as the log spells it: the string-literal form
+      val asString = snap.files.map(_.partitionValues(c)).min
+      for (v <- Seq(typed, asString)) {
+        val f = Seq(DataFilter(c, SkipOp.Eq, v))
+        assert(t.filesAfterPruning(f) == 1, s"$c = $v")
+        assert(t.scanPruned(f).count() == 1, s"$c = $v")
+        val m = DataSkipping.matcherFor(spark, snap, col(c) === lit(v))
+        assert(snap.files.filter(m).map(_.partitionValues(c)) == Seq(asString),
+          s"matcherFor $c = $v")
+      }
+    }
+    check(Seq((1L, java.sql.Date.valueOf("2024-01-01")),
+      (2L, java.sql.Date.valueOf("2024-01-02"))).toDF("k", "d"),
+      "d", java.sql.Date.valueOf("2024-01-01"))
+    check(Seq((1L, Timestamp.valueOf("2024-01-01 00:00:00")),
+      (2L, Timestamp.valueOf("2024-01-02 00:00:00"))).toDF("k", "ts"),
+      "ts", Timestamp.valueOf("2024-01-01 00:00:00"))
+  }
+
+  test("filesAfterPruning counts exactly the files scanPruned's executed scan reads") {
+    import org.apache.spark.sql.graft.ExecutionRecorder
+    val p = tmpDir("prune_oracle") + "/t"
+    // two files per date partition c (one of them the NULL partition);
+    // the data column k is disjoint per file, so footer stats prune too
+    val (a, b) = (java.sql.Date.valueOf("2024-01-01"), java.sql.Date.valueOf("2024-01-02"))
+    for ((c, i) <- Seq(Some(a), Some(b), None).zipWithIndex; j <- 0 until 2) {
+      val base = 100L * (3 * j + i)
+      GraftWriter.write(spark,
+        (base until base + 10).map(k => (k, c)).toDF("k", "c").coalesce(1), p,
+        WriteOptions(mode = if (i + j == 0) WriteMode.Overwrite else WriteMode.Append,
+          partitionBy = Seq("c")))
+    }
+    val t = GraftTable(spark, p)
+    assert(t.snapshot().files.size == 6)
+    val cases: Seq[(Seq[DataFilter], Int)] = Seq(
+      Seq(DataFilter("c", SkipOp.Eq, a)) -> 2,
+      Seq(DataFilter("c", SkipOp.Gt, "2024-01-01")) -> 2,
+      Seq(DataFilter("c", SkipOp.IsNull)) -> 2,
+      Seq(DataFilter("c", SkipOp.IsNotNull)) -> 4,
+      Seq(DataFilter("k", SkipOp.Ge, 300L)) -> 3,
+      Seq(DataFilter("c", SkipOp.In, Seq(a, b)), DataFilter("k", SkipOp.Le, 105L)) -> 2,
+      Seq(DataFilter("c", SkipOp.IsNull), DataFilter("k", SkipOp.Lt, 300L)) -> 1,
+      Seq(DataFilter("k", SkipOp.Eq, 999999L)) -> 0)
+    for ((fs, want) <- cases) {
+      val (rows, runs) = ExecutionRecorder.record(spark)(t.scanPruned(fs).collect())
+      assert(runs.map(ExecutionRecorder.filesScanned).sum == t.filesAfterPruning(fs), fs)
+      assert(t.filesAfterPruning(fs) == want, fs)
+      val residual = fs.map(_.toColumn).reduce(_ && _)
+      assert(rows.toSet == t.toDf().filter(residual).collect().toSet, fs)
+    }
+  }
 }

@@ -162,4 +162,23 @@ class MergeAlgebraSpec extends SparkSpec {
     assert(before.subsetOf(GraftTable(spark, p).snapshot().files.map(_.path).toSet))
     assert(GraftTable(spark, p).toDf().count() == 12L)
   }
+
+  test("a merge keyed on a date partition column scans only the partitions its source keys span") {
+    import graft.io.{GraftTable, GraftWriter, WriteMode, WriteOptions}
+    import org.apache.spark.sql.graft.ExecutionRecorder
+    val p = tmpDir("merge_date_key") + "/t"
+    val days = (1 to 4).map(i => java.sql.Date.valueOf(s"2024-01-0$i"))
+    GraftWriter.write(spark, days.zipWithIndex.map { case (d, i) => (d, i.toLong) }
+      .toDF("d", "v"), p, WriteOptions(mode = WriteMode.Overwrite, partitionBy = Seq("d")))
+    assert(GraftTable(spark, p).snapshot().files.size == 4)
+    val src = Seq((days(1), 10L), (days(2), 20L)).toDF("d", "v")
+    val (_, runs) = ExecutionRecorder.record(spark) {
+      MergeExecutor.merge(spark, src, p, MergeConfig(MergeType.Upsert, "s.d = t.d"))
+    }
+    // the key range [01-02, 01-03] keeps two of the four partitions: no
+    // scan lists the other two
+    assert(runs.flatMap(ExecutionRecorder.filesPerScan).max == 2L)
+    assert(GraftTable(spark, p).toDf().as[(java.sql.Date, Long)].collect().toSet ==
+      Set((days(0), 0L), (days(1), 10L), (days(2), 20L), (days(3), 3L)))
+  }
 }

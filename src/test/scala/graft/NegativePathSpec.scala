@@ -91,4 +91,37 @@ class NegativePathSpec extends SparkSpec {
     assert(t.version() == 0L) // no new commit
     assert(t.toDf().count() == 1) // contents unchanged
   }
+
+  test("column names that differ in case alone are refused; an older such table fails loudly on a case-insensitive read") {
+    val p = tmpDir("case_clash") + "/t"
+    // a case-sensitive session cannot create one...
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try intercept[IllegalArgumentException](GraftWriter.write(spark,
+      Seq((1L, 10L)).toDF("P", "p"), p,
+      WriteOptions(mode = WriteMode.Overwrite, partitionBy = Seq("p"))))
+    finally spark.conf.set("spark.sql.caseSensitive", "false")
+    assert(!new graft.log.CommitLog(p, spark.sessionState.newHadoopConf()).tableExists())
+
+    // ...nor can a schema-merging append add one
+    GraftWriter.write(spark, Seq((1L, 10L)).toDF("x", "P"), p,
+      WriteOptions(mode = WriteMode.Overwrite, partitionBy = Seq("P")))
+    intercept[IllegalArgumentException](GraftWriter.write(spark,
+      Seq((2L, 20L)).toDF("x", "p"), p,
+      WriteOptions(mode = WriteMode.Append, schemaMode = Some(SchemaMode.Merge))))
+    val t = GraftTable(spark, p)
+    assert(t.snapshot().schema.fieldNames.toSeq == Seq("x", "P"))
+
+    // a table whose log already holds such a schema: a case-insensitive
+    // read cannot tell `p` from the partition column `P`
+    t.log.commit(operation = "ALTER TABLE", mode = "metadata",
+      schemaDdl = "x BIGINT, p BIGINT, P BIGINT", partitionColumns = Seq("P"),
+      metadata = t.log.tableProperties(), operationMetrics = Map.empty,
+      add = Nil, remove = Nil)
+    val e = intercept[IllegalStateException](t.toDf())
+    assert(e.getMessage.contains("spark.sql.caseSensitive=true"))
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try assert(t.toDf().collect().map(r => (r.getLong(0), r.isNullAt(1), r.getLong(2))).toSeq ==
+      Seq((1L, true, 10L)))
+    finally spark.conf.set("spark.sql.caseSensitive", "false")
+  }
 }

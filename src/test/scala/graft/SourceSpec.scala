@@ -170,4 +170,31 @@ class SourceSpec extends SparkSpec {
     assert(r.filter(col("s").isin("a", "b")).count() == 2)
     assert(r.filter(col("k") === 2 || col("s") === "a").count() == 2)
   }
+
+  test("the V1 relation's buildScan serves pushed filters on a date-partitioned table with a deletion vector") {
+    import org.apache.spark.sql.sources.{EqualTo, Filter, In, IsNull}
+    val p = tmpDir("v1_scan") + "/t"
+    val (d1, d2) = (java.sql.Date.valueOf("2024-01-01"), java.sql.Date.valueOf("2024-01-02"))
+    GraftWriter.write(spark,
+      Seq((1L, Some(d1)), (2L, Some(d1)), (3L, Some(d2)), (4L, Some(d2)),
+        (5L, None), (6L, None)).toDF("k", "d"), p,
+      WriteOptions(mode = WriteMode.Overwrite, partitionBy = Seq("d"),
+        metadata = Map(DeletionVectors.PropKey -> "true")))
+    graft.merge.Dml.delete(spark, p, col("k") === 2L || col("k") === 5L)
+    assert(GraftTable(spark, p).snapshot().files.exists(_.dv.isDefined))
+
+    val rel = graft.sources.GraftRelation(spark.sqlContext, p, None)
+    def rows(it: Iterable[org.apache.spark.sql.Row]): Set[(Long, Option[java.sql.Date])] =
+      it.map(r => (r.getLong(0), Option(r.getDate(1)))).toSet
+    val cases: Seq[(Filter, org.apache.spark.sql.Column)] = Seq(
+      EqualTo("d", d1) -> (col("d") === d1),
+      In("d", Array(d1, d2)) -> col("d").isin(d1, d2),
+      IsNull("d") -> col("d").isNull)
+    for ((pushed, same) <- cases) {
+      val got = rows(rel.buildScan(Array("k", "d"), Array(pushed)).collect())
+      val want = rows(GraftTable(spark, p).toDf().filter(same).select("k", "d").collect())
+      assert(got == want, pushed)
+      assert(want.nonEmpty && !want.exists(r => r._1 == 2L || r._1 == 5L), pushed)
+    }
+  }
 }

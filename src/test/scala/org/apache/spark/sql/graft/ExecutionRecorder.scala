@@ -58,10 +58,13 @@ object ExecutionRecorder {
   /** Data files the execution's file scans listed (the sum of their
     * `numFiles` metrics, through adaptive query stages).
     */
-  def filesScanned(qe: QueryExecution): Long = {
+  def filesScanned(qe: QueryExecution): Long = filesPerScan(qe).sum
+
+  /** The `numFiles` metric of each of the execution's file scans. */
+  def filesPerScan(qe: QueryExecution): Seq[Long] = {
     object Plans extends AdaptiveSparkPlanHelper
     Plans.collect(qe.executedPlan) {
       case s: FileSourceScanExec => s.metrics.get("numFiles").map(_.value).getOrElse(0L)
-    }.sum
+    }
   }
 }
