@@ -452,7 +452,7 @@ object SparkEntry {
     */
   /** Generated columns (`graft.generated.*` properties): the first write
     * omits them (auto-computed), the append supplies them explicitly
-    * (validated against the generating expressions post-write).
+    * (checked against the generating expressions as they are written).
     */
   private def qGeneratedCols(spark: SparkSession, dir: String): DataFrame = {
     val o = t(spark, dir, "orders")

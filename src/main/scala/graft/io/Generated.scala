@@ -13,10 +13,10 @@ import graft.log.AddFile
   *
   *   - `graft.generated.<col>`  = SQL expression over the table's other
   *     columns. A batch write that omits the column gets it computed;
-  *     a write that supplies it is VALIDATED row-by-row against the
-  *     expression post-write (same single read-back pass as CHECK
-  *     constraints — see `GraftWriter.enforceOnWritten`), which also
-  *     covers UPDATE/MERGE rewrites through `writeCow`.
+  *     a write that supplies it has each row checked against the
+  *     expression as it is written, in the same guard as CHECK
+  *     constraints ([[Invariants]]), which also covers UPDATE/MERGE
+  *     rewrites through `writeCow`.
   *   - `graft.identity.<col>`   = "start,step". A batch write that
   *     omits the column gets unique, strictly-increasing (per `step`'s
   *     sign) values above the table's high-water mark; values are NOT
@@ -37,7 +37,8 @@ import graft.log.AddFile
   *
   * The streaming sink commits files through its own epoch protocol and
   * does not auto-fill either feature — a streaming query must compute
-  * generated/identity values in its projection.
+  * generated/identity values in its projection (the DSv2 streaming
+  * write checks the generated ones).
   */
 private[graft] object Generated {
 
@@ -47,7 +48,7 @@ private[graft] object Generated {
     * when a write OMITS the column (Delta's `DEFAULT` surface). Unlike
     * generated columns there is no row invariant — a default only
     * affects writes that leave the column out, so it may be declared or
-    * changed at any time and never triggers read-back validation.
+    * changed at any time and is never checked on write.
     */
   val DefaultPrefix: String = graft.log.CommitLog.ReservedPrefix + "default."
   /** Shared with the log layer: commit-time hwm advance protection and
@@ -164,7 +165,7 @@ private[graft] object Generated {
         s"generated column '$c' references non-base columns: " +
           s"${bad.mkString(", ")} (generating expressions may only use " +
           "the table's non-generated columns)")
-      if (hasColumn(d, c)) d // supplied: validated post-write
+      if (hasColumn(d, c)) d // supplied: checked as it is written
       else {
         val declared = declaredSchema.flatMap(s =>
           s.find(_.name == c).map(_.dataType))
@@ -255,12 +256,12 @@ private[graft] object Generated {
     * whose BASE columns just changed it is what keeps the invariant true
     * (Delta parity: UPDATE/MERGE recompute generated columns that are
     * not explicitly set). Explicitly assigned ones are left alone and
-    * validated post-write instead.
+    * checked as they are written instead.
     */
   /** Row-level variant of [[recompute]] for clause merges: a generated
     * column keeps its dispatched value on rows where `flagOf(col)` is
-    * true (the dispatched clause EXPLICITLY assigned it — validated
-    * post-write) and is recomputed from its expression everywhere else.
+    * true (the dispatched clause EXPLICITLY assigned it — checked as it
+    * is written) and is recomputed from its expression everywhere else.
     * The frame must already carry final base-column values under their
     * plain names (post-dispatch output), so the expression resolves
     * unambiguously.

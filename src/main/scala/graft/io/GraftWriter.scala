@@ -53,8 +53,6 @@ final case class WriteOptions(
       * dagster_delta_tests/test_metadata_inputs.py:65).
       */
     compression: String = "zstd",
-    /** Verify incoming rows satisfy `replaceWhere` (Delta enforces this). */
-    enforceReplaceWhere: Boolean = true,
     /** Dynamic partition overwrite (Spark's
       * `partitionOverwriteMode=dynamic` / Hive `INSERT OVERWRITE`
       * semantics): replace exactly the partitions the incoming rows land
@@ -249,33 +247,30 @@ object GraftWriter {
 
     // replaceWhere: removals from partition values, derived before the
     // write so a predicate with no per-partition answer fails before
-    // anything is staged; then the incoming rows must satisfy it.
+    // anything is staged; the write itself checks that every incoming
+    // row satisfies it.
+    val overwriteWhere = opts.replaceWhere.filter(_ => opts.mode == WriteMode.Overwrite)
     val replaced = for {
-      pred <- opts.replaceWhere if opts.mode == WriteMode.Overwrite
+      pred <- overwriteWhere
       snap <- snapOpt // replaceWhere on a fresh table = plain create
     } yield replaceWhereRemovals(spark, snap, pred)
-    for (pred <- opts.replaceWhere
-         if opts.mode == WriteMode.Overwrite && opts.enforceReplaceWhere)
-      require(df.filter(!pred).limit(1).count() == 0,
-        s"rows violate replaceWhere predicate $pred")
 
     // Physical write to staging, then rename into place.
     val writeDf =
       if (partitionCols.nonEmpty && opts.clusterByPartition)
         df.repartition(partitionCols.map(col): _*)
       else df
-    val added =
-      stageAndPromote(spark, fs, conf, writeDf, path, partitionCols,
-        opts.compression, opts.maxRecordsPerFile, extraProps = declProps)
     // declProps, not tableProperties(): a CREATING write's declarations
-    // (constraints, generated columns) must be enforced on the very
-    // rows that create the table, and the pre-commit log has none yet.
-    // Only generated columns the CALLER supplied need validating — the
-    // ones fillGenerated computed satisfy their expressions by
-    // construction, so the common computed-write pays no read-back.
-    enforceOnWritten(spark, fs, path, newSchema, partitionCols, added,
-      declProps,
-      validateGenerated = Some(dfIn.columns.toSet))
+    // (constraints, generated columns) hold for the very rows that
+    // create the table, and the pre-commit log has none yet. Only
+    // generated columns the CALLER supplied are checked — the ones
+    // fillGenerated computed satisfy their expressions by construction.
+    val added =
+      stageAndPromote(spark, fs, conf,
+        Invariants.guard(writeDf, newSchema, Invariants.violation(
+          declProps, newSchema, overwriteWhere, Some(dfIn.columns.toSet))),
+        path, partitionCols, opts.compression, opts.maxRecordsPerFile,
+        extraProps = declProps)
 
     // The removal set a snapshot implies: the replaceWhere partitions;
     // under dynamic partition overwrite exactly the live files in the
@@ -495,110 +490,11 @@ object GraftWriter {
         cols.take(n).toSet
       }
 
-  private def constraintsOf(props: Map[String, String]): Map[String, String] = {
-    val prefix = graft.log.CommitLog.constraintKey("")
-    props.collect { case (k, sql) if k.startsWith(prefix) =>
-      k.stripPrefix(prefix) -> sql
-    }
-  }
-
-  /** CHECK-constraint enforcement over the rows ACTUALLY WRITTEN: reads
-    * the just-promoted files back (one columnar scan, all constraints in
-    * one aggregate pass, only when the table has constraints) and, on
-    * violation, deletes them before throwing — so a non-deterministic
-    * input (e.g. a rand() column) cannot pass a pre-write validation and
-    * then write different, violating rows, and the write's lineage is
-    * never executed twice.
-    */
-  private def enforceOnWritten(
-      spark: SparkSession,
-      fs: FileSystem,
-      path: String,
-      schema: StructType,
-      partitionCols: Seq[String],
-      added: Seq[AddFile],
-      props: Map[String, String],
-      /** Generated columns whose values the caller SUPPLIED (only those
-        * can violate their expressions; filled ones hold by
-        * construction). None = validate every declared one — the
-        * rewrite paths (DML/merge), where any column may have been set.
-        */
-      validateGenerated: Option[Set[String]] = None): Unit = {
-    // supplied-name matching is case-insensitive, like Spark's resolver
-    // (a caller supplying 'TOTAL_CENTS' for declared 'total_cents' HAS
-    // supplied the column and must be validated)
-    val genCheck = validateGenerated match {
-      case Some(supplied) =>
-        val ci = supplied.map(_.toLowerCase(java.util.Locale.ROOT))
-        Generated.generatedOf(props).keySet
-          .filter(g => ci(g.toLowerCase(java.util.Locale.ROOT)))
-      case None => Generated.generatedOf(props).keySet
-    }
-    if (added.isEmpty || (constraintsOf(props).isEmpty && genCheck.isEmpty))
-      return
-    // written files carry physical column names (ColumnMapping) — read
-    // physical, alias back to logical so constraint SQL resolves
-    val mapping = ColumnMapping.fromProps(props)
-    val dataSchema = ColumnMapping.physicalSchema(
-      StructType(schema.filterNot(f => partitionCols.contains(f.name))), mapping)
-    val abs = added.map(f => new Path(path, f.path).toString)
-    val written = spark.read
-      .schema(dataSchema)
-      .option("basePath", path)
-      .parquet(abs: _*)
-      .select(schema.map { f =>
-        val phys = if (partitionCols.contains(f.name)) f.name
-          else ColumnMapping.physicalName(mapping, f.name)
-        col(phys).cast(f.dataType).as(f.name)
-      }: _*)
-    try enforceConstraints(written, props, Some(genCheck))
-    catch {
-      case t: Throwable =>
-        added.foreach(f => fs.delete(new Path(path, f.path), false))
-        throw t
-    }
-  }
-
-  /** One aggregate pass over the written rows covering BOTH invariants:
-    * CHECK constraints (SQL semantics — a row violates only when the
-    * expression is FALSE; NULL passes) and supplied generated-column
-    * values (must null-safe-EQUAL their generating expression — a
-    * rewrite or explicit write cannot silently break the invariant
-    * readers rely on). The error names every violation.
-    */
-  private def enforceConstraints(
-      df: DataFrame,
-      props: Map[String, String],
-      generatedCols: Option[Set[String]] = None): Unit = {
-    val genCols = generatedCols.getOrElse(Generated.generatedOf(props).keySet)
-    val checks: Seq[(String, Column)] =
-      constraintsOf(props).toSeq.map { case (name, sql) =>
-        (s"CHECK constraint $name ($sql)", coalesce(!expr(sql), lit(false)))
-      } ++
-        Generated.generatedOf(props).toSeq
-          .filter { case (c, _) =>
-            genCols(c) && df.columns.exists(_.equalsIgnoreCase(c)) }
-          .map { case (c, sql) =>
-            (s"generated column $c != ($sql)", !(col(c) <=> expr(sql)))
-          }
-    if (checks.isEmpty) return
-    val flags = checks.zipWithIndex.map { case ((_, bad), i) =>
-      max(when(bad, 1).otherwise(0)).as(s"c_$i")
-    }
-    val row = df.agg(flags.head, flags.tail: _*).first()
-    val violated = checks.zipWithIndex.collect {
-      case ((label, _), i) if !row.isNullAt(i) && row.getInt(i) == 1 => label
-    }
-    if (violated.nonEmpty)
-      throw new IllegalArgumentException(
-        s"write invariant${if (violated.size > 1) "s" else ""} violated: " +
-          violated.mkString("; "))
-  }
-
   /** Add a named CHECK constraint (Delta `ALTER TABLE ADD CONSTRAINT`):
     * verifies the EXISTING data satisfies it, then records it as a table
     * property in a metadata-only commit. Every subsequent write — append,
-    * overwrite, merge, DML — enforces it on the incoming rows.
+    * overwrite, merge, DML, streaming — checks it on the rows it writes
+    * ([[Invariants]]).
     */
   def addCheckConstraint(
       spark: SparkSession, path: String, name: String, sqlExpr: String): Long = {
@@ -627,7 +523,7 @@ object GraftWriter {
   def dropCheckConstraint(spark: SparkSession, path: String, name: String): Long = {
     val log = new CommitLog(path, spark.sessionState.newHadoopConf())
     val snap = log.snapshot()
-    require(constraintsOf(log.tableProperties()).contains(name),
+    require(Invariants.constraintsOf(log.tableProperties()).contains(name),
       s"no CHECK constraint named $name on $path")
     log.commit(
       operation = "DROP CONSTRAINT", mode = "metadata",
@@ -638,7 +534,7 @@ object GraftWriter {
 
   /** Active CHECK constraints by name. */
   def checkConstraints(spark: SparkSession, path: String): Map[String, String] =
-    constraintsOf(new CommitLog(path, spark.sessionState.newHadoopConf())
+    Invariants.constraintsOf(new CommitLog(path, spark.sessionState.newHadoopConf())
       .tableProperties())
 
   /** Compact small files (Delta `OPTIMIZE`): rewrite every partition
@@ -863,10 +759,6 @@ object GraftWriter {
     }
   }
 
-  /** Bounded retry for maintenance commands whose removal sets derive
-    * from a snapshot: a concurrent commit CASes them out and the command
-    * re-derives from scratch.
-    */
   /** Remove every live file in ONE metadata-only commit (TRUNCATE): no
     * data is read or rewritten, history stays time-travelable until
     * vacuum ages the files out. Returns the new version.
@@ -896,12 +788,17 @@ object GraftWriter {
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
       .getOrElse(256L * 1024 * 1024)
 
-  private[io] def retryDerived(f: => Long): Long = {
-    var attempt = 0
+  /** The one bounded conflict retry, for every command whose actions
+    * derive from a snapshot (merge, DML, OPTIMIZE, ALTER, RESTORE, ADD
+    * CONSTRAINT, TRUNCATE): a concurrent commit CASes them out and `f`
+    * re-derives from a fresh snapshot, at most four attempts in all.
+    */
+  private[graft] def retryDerived[T](f: => T): T = {
+    var attempt = 1
     while (true) {
       try return f
       catch {
-        case _: java.util.ConcurrentModificationException if attempt < 3 =>
+        case _: java.util.ConcurrentModificationException if attempt < 4 =>
           attempt += 1
       }
     }
@@ -1149,8 +1046,8 @@ object GraftWriter {
       schemaOverride: Option[StructType] = None,
       /** Pre-built add actions committed alongside the staged files
         * (deletion-vector repoints of existing files — see
-        * [[graft.merge.Dml]]); not subject to CHECK enforcement, which
-        * already validated their rows when they were first written.
+        * [[graft.merge.Dml]]); their rows were checked against the
+        * invariants when they were first written.
         */
       extraAdds: Seq[AddFile] = Nil,
       /** Transaction read/write profile: when set, a lost CAS is
@@ -1166,8 +1063,8 @@ object GraftWriter {
         * clause targets). Generated columns outside this set were
         * recomputed by the caller ([[Generated.recompute]]) and satisfy
         * their expressions by construction — only the explicitly
-        * assigned ones need the post-write read-back validation. None =
-        * legacy posture: validate every declared generated column.
+        * assigned ones are checked as the rows are written. None =
+        * check every declared generated column.
         */
       assignedCols: Option[Set[String]] = None): Long = {
     val conf = spark.sessionState.newHadoopConf()
@@ -1187,10 +1084,12 @@ object GraftWriter {
       if (snap.partitionColumns.nonEmpty)
         df.repartition(snap.partitionColumns.map(col): _*)
       else df
+    val props = log.tableProperties()
     val added =
-      stageAndPromote(spark, fs, conf, writeDf, path, snap.partitionColumns, compression)
-    enforceOnWritten(spark, fs, path, schema, snap.partitionColumns, added,
-      log.tableProperties(), validateGenerated = assignedCols)
+      stageAndPromote(spark, fs, conf,
+        Invariants.guard(writeDf, schema,
+          Invariants.violation(props, schema, None, assignedCols)),
+        path, snap.partitionColumns, compression)
     // CAS on the snapshot the rewrite was derived from: a concurrent
     // commit conflicts (the merge/DML retry re-derives) instead of
     // having its changes silently clobbered by stale carried-over rows.
@@ -1227,7 +1126,9 @@ object GraftWriter {
     * the table root. INT96 (the legacy default) carries no usable footer
     * statistics; MICROS makes timestamp columns data-skippable. Session
     * conf is restored afterwards — it must not leak into the caller's
-    * writes.
+    * writes. A write that fails leaves no staged file behind; one that
+    * hit an invariant ([[Invariants]]) fails with its
+    * IllegalArgumentException.
     */
   private def stageAndPromote(
       spark: SparkSession,
@@ -1265,7 +1166,13 @@ object GraftWriter {
       if (maxRecordsPerFile > 0)
         w = w.option("maxRecordsPerFile", maxRecordsPerFile)
       if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
-      w.parquet(stage.toString)
+      try w.parquet(stage.toString)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          fs.delete(stage, true)
+          throw Invariants.violated(e)
+            .map(new IllegalArgumentException(_, e)).getOrElse(e)
+      }
       // stats cap (Delta's dataSkippingNumIndexedCols): on wide tables
       // keep footer stats only for the first N data columns — the log
       // stays O(N) per file instead of O(width)
@@ -1349,9 +1256,9 @@ object GraftWriter {
   }
 
   /** Promote a staging directory written by an external writer (the
-    * DSv2 streaming write) and append its files in one commit —
-    * footer stats, CHECK-constraint enforcement, and operation metrics
-    * identical to the batch append path.
+    * DSv2 streaming write, which checked the invariants as it wrote the
+    * rows) and append its files in one commit — footer stats and
+    * operation metrics identical to the batch append path.
     */
   private[graft] def commitPromoted(
       spark: SparkSession,
@@ -1366,8 +1273,6 @@ object GraftWriter {
     val added = promoteStaged(fs, conf, stage, new Path(path),
       statsCapCols(log.tableProperties(), Some(snap), Nil,
         snap.partitionColumns))
-    enforceOnWritten(spark, fs, path, snap.schema, snap.partitionColumns, added,
-      log.tableProperties())
     log.commit(
       operation = operation,
       mode = "append",

@@ -32,9 +32,10 @@ package graft.log
   *
   * All the typed exceptions extend
   * `java.util.ConcurrentModificationException`, so the existing bounded
-  * re-derive loops (`Cow.retryOnConflict`, `GraftWriter.retryDerived`,
-  * `RetryingCoordinator`) handle them unchanged — rebase is a fast path
-  * layered UNDER those loops, not a replacement.
+  * re-derive loops (`GraftWriter.retryDerived`, behind merge, DML,
+  * OPTIMIZE, ALTER and RESTORE, and `RetryingCoordinator`) handle them
+  * unchanged — rebase is a fast path layered UNDER those loops, not a
+  * replacement.
   */
 abstract class GraftConcurrencyException(message: String)
     extends java.util.ConcurrentModificationException(message)

@@ -4,27 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.log.AddFile
 
-/** Shared copy-on-write plumbing for the merge / clause-merge / DML
-  * executors: physical-file discovery from `input_file_name()` output
-  * and the bounded optimistic-conflict retry. One implementation so
-  * path decoding and retry policy cannot drift between the commands.
+/** Shared copy-on-write plumbing for the merge and DML executors:
+  * physical-file discovery from `input_file_name()` output, one
+  * implementation so path decoding cannot drift between the commands.
+  * Both retry conflicts with [[graft.io.GraftWriter.retryDerived]].
   */
 private[merge] object Cow {
-
-  /** Re-run `f` on optimistic-commit conflicts, at most `maxAttempts`
-    * times (the body re-derives its file sets from a fresh snapshot).
-    */
-  def retryOnConflict[T](maxAttempts: Int = 4)(f: => T): T = {
-    var attempt = 1
-    while (true) {
-      try return f
-      catch {
-        case _: java.util.ConcurrentModificationException
-            if attempt < maxAttempts => attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** The subset of `candidates` whose physical file appears in `df`'s
     * `fileCol` (absolute `input_file_name()` URIs are normalized back to

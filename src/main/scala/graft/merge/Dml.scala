@@ -49,7 +49,7 @@ object Dml {
       op: String,
       keepMatched: Option[Map[String, Column]]): DmlStats = {
     val table = GraftTable(spark, path)
-    Cow.retryOnConflict() {
+    GraftWriter.retryDerived {
       rewriteOnce(spark, table, path, condition, op, keepMatched)
     }
   }

@@ -144,7 +144,7 @@ object MergeClausesExecutor {
       val agg = aggregateSource(src, m)
       // a concurrent commit invalidates the derived removal set;
       // re-derive against a fresh snapshot and retry (bounded)
-      Cow.retryOnConflict() {
+      GraftWriter.retryDerived {
         mergeOnce(spark, table, src, agg, path, m)
       }
     } finally src.unpersist()
@@ -164,7 +164,7 @@ object MergeClausesExecutor {
 
   private def aggregateSource(src: DataFrame, m: Spec): SourceAgg = {
     val key = equiKey(m.predicate, m.sa, m.ta)
-      .filter { case (srcCol, _) => src.columns.contains(srcCol) }
+      .filter { case (srcCol, _) => src.columns.exists(_.equalsIgnoreCase(srcCol)) }
     val r = src.agg(count(lit(1)), key.toSeq.flatMap { case (srcCol, _) =>
       Seq(min(col(srcCol)), max(col(srcCol))) }: _*).first()
     SourceAgg(r.getLong(0), key.map { case (_, tgtCol) =>
@@ -317,7 +317,7 @@ object MergeClausesExecutor {
         genCols.map(g => lit(true).as(genFlagName(g))): _*))
     // generated columns are recomputed ROW-LEVEL: each row's
     // dispatched clause decides (a clause that explicitly assigns the
-    // column keeps its value for post-write validation; any other
+    // column keeps its value, checked as it is written; any other
     // clause recomputes — Delta parity even when DIFFERENT clauses
     // assign different columns)
     val newData = dropGenFlags(graft.io.Generated.recomputeGated(
@@ -394,7 +394,7 @@ object MergeClausesExecutor {
       case (tgtCol, Some((lo, hi))) =>
         val zone = spark.sessionState.conf.sessionLocalTimeZone
         val bounds = for {
-          f <- snap.schema.find(_.name == tgtCol)
+          f <- snap.schema.find(_.name.equalsIgnoreCase(tgtCol))
           (l, h) <- scala.util.Try((Literal(lo), Literal(hi))).toOption
         } yield {
           // a bound takes the key's type when the source's casts up to
@@ -412,15 +412,17 @@ object MergeClausesExecutor {
     }
 
   /** `(sourceKey, targetKey)` of a plain equi-merge predicate
-    * `s.K = t.C` / `t.C = s.K`; None for anything richer.
+    * `s.K = t.C` / `t.C = s.K`; None for anything richer. Aliases and,
+    * in the callers, column names match case-insensitively, as Spark
+    * resolves them.
     */
   private def equiKey(
       predicate: String, sa: String, ta: String): Option[(String, String)] = {
     val re = """(?i)\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*""".r
     predicate match {
       case re(a1, c1, a2, c2) =>
-        if (a1 == sa && a2 == ta) Some((c1, c2))
-        else if (a1 == ta && a2 == sa) Some((c2, c1))
+        if (a1.equalsIgnoreCase(sa) && a2.equalsIgnoreCase(ta)) Some((c1, c2))
+        else if (a1.equalsIgnoreCase(ta) && a2.equalsIgnoreCase(sa)) Some((c2, c1))
         else None
       case _ => None
     }

@@ -8,7 +8,10 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal, Murmur3Hash, Pmod, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq, BindReferences, BoundReference, Cast, Expression, Literal, Murmur3Hash, Pmod, UnsafeProjection}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
@@ -97,19 +100,47 @@ final class GraftStreamingWrite(
     */
   @volatile private var lastCommittedCache: Option[Long] = None
 
+  /** Invariant-defining table properties (`graft.io.Invariants`) that
+    * the current epoch's writers check, read when Spark builds them.
+    */
+  @volatile private var checked: Map[String, String] = Map.empty
+
+  private def invariantProps(spark: SparkSession): Map[String, String] =
+    graft.io.Invariants.definedBy(new graft.log.CommitLog(
+      tablePath, spark.sessionState.newHadoopConf()).tableProperties())
+
+  // the batch writer's invariant check, resolved against the incoming
+  // rows and bound by position (a stream supplies every column)
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
+    val spark = SparkSession.active
+    checked = invariantProps(spark)
+    val attrs = DataTypeUtils.toAttributes(schema)
+    val violation = graft.io.Invariants.violation(checked, schema, None, None).map { v =>
+      val analyzed = GraftInternal.dfFromPlan(spark, LocalRelation(attrs))
+        .select(v).queryExecution.analyzed
+      val Project(Seq(Alias(e, _)), _) = ReplaceExpressions(analyzed): @unchecked
+      BindReferences.bindReference(e, AttributeSeq(attrs))
+    }
     new GraftStreamWriterFactory(
       stageRoot, schema, dataSchema, partitionCols, bucket, timeZone,
-      factory, serConf)
+      violation, factory, serConf)
+  }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val written = messages.toSeq.flatMap {
       case m: GraftStreamCommitMessage => m.paths
       case _                           => Nil
     }
+    val spark = SparkSession.active
+    // rows checked against invariants the table no longer has: fail
+    // (Spark aborts the epoch); a restarted query checks the new ones
+    if (written.nonEmpty && invariantProps(spark) != checked)
+      throw new graft.log.MetadataChangedException(
+        s"the write invariants of $tablePath changed while epoch $epochId " +
+          "was written; restart the query to check its rows against them")
     graft.streaming.StreamingEpochs.commit(
-      SparkSession.active, tablePath, s"$stageRoot/$epochId", written,
+      spark, tablePath, s"$stageRoot/$epochId", written,
       queryId, epochId, lastCommittedCache)
     lastCommittedCache = Some(epochId)
   }
@@ -126,20 +157,22 @@ private final class GraftStreamWriterFactory(
     partitionCols: Seq[String],
     bucket: Option[(String, Int)],
     timeZone: String,
+    violation: Option[Expression],
     owf: OutputWriterFactory,
     serConf: SerializableConfiguration) extends StreamingDataWriterFactory {
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     new GraftStreamDataWriter(s"$stageRoot/$epochId", schema, dataSchema,
-      partitionCols, bucket, timeZone, owf, serConf, partitionId, taskId,
-      epochId)
+      partitionCols, bucket, timeZone, violation, owf, serConf, partitionId,
+      taskId, epochId)
 }
 
 /** Per-task writer: one lazily-opened parquet writer per hive partition
   * fragment seen in this task's rows (an empty partition leaves no file
-  * behind). Partition values render through Spark's cast-to-string +
-  * path escaping, and the data file carries only the non-partition
-  * columns, so the layout matches the batch writer's bit for bit.
+  * behind), which fails on the first row that breaks an invariant.
+  * Partition values render through Spark's cast-to-string + path
+  * escaping, and the data file carries only the non-partition columns,
+  * so the layout matches the batch writer's bit for bit.
   */
 private final class GraftStreamDataWriter(
     dir: String,
@@ -148,6 +181,7 @@ private final class GraftStreamDataWriter(
     partitionCols: Seq[String],
     bucket: Option[(String, Int)],
     timeZone: String,
+    violation: Option[Expression],
     owf: OutputWriterFactory,
     serConf: SerializableConfiguration,
     partitionId: Int,
@@ -222,8 +256,13 @@ private final class GraftStreamDataWriter(
     })
   }
 
-  override def write(row: InternalRow): Unit =
+  // a violating row fails the task before it is written; the epoch
+  // aborts and its staged files are deleted
+  override def write(row: InternalRow): Unit = {
+    violation.map(_.eval(row)).filter(_ != null)
+      .foreach(msg => throw new IllegalArgumentException(msg.toString))
     writerFor(row).write(dataProjection(row))
+  }
 
   override def commit(): WriterCommitMessage = {
     writers.values.foreach(_.close())

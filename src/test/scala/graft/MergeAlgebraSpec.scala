@@ -163,6 +163,25 @@ class MergeAlgebraSpec extends SparkSpec {
     assert(GraftTable(spark, p).toDf().count() == 12L)
   }
 
+  test("merge key names match case-insensitively: s.k = t.K still prunes by key range") {
+    import graft.io.{GraftTable, GraftWriter, WriteMode, WriteOptions}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graft.ExecutionRecorder
+    val p = tmpDir("merge_ci_key") + "/t"
+    GraftWriter.write(spark, (0L until 40L).map(k => (k, k * 10)).toDF("k", "v")
+      .repartitionByRange(4, col("k")), p, WriteOptions(mode = WriteMode.Overwrite))
+    assert(GraftTable(spark, p).snapshot().files.size == 4)
+    val src = Seq((5L, 1L)).toDF("k", "v")
+    val (_, runs) = ExecutionRecorder.record(spark) {
+      MergeExecutor.merge(spark, src, p, MergeConfig(MergeType.Upsert, "s.k = t.K"))
+    }
+    // key 5 lies in one file's footer range: no scan lists another
+    assert(runs.flatMap(ExecutionRecorder.filesPerScan).max == 1L)
+    val got = GraftTable(spark, p).toDf().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(got(5L) == 1L && got.size == 40)
+  }
+
   test("a merge keyed on a date partition column scans only the partitions its source keys span") {
     import graft.io.{GraftTable, GraftWriter, WriteMode, WriteOptions}
     import org.apache.spark.sql.graft.ExecutionRecorder

@@ -130,7 +130,7 @@ class PartitionPredicateSpec extends SparkSpec {
     assert(dataCol.getMessage.contains("non-partition column"), dataCol.getMessage)
     val random = intercept[IllegalArgumentException] {
       GraftWriter.write(spark, Seq(("a", 9L)).toDF("p", "v"), p,
-        WriteOptions(mode = WriteMode.Overwrite, enforceReplaceWhere = false,
+        WriteOptions(mode = WriteMode.Overwrite,
           replaceWhere = Some(col("p") === "a" && rand() < 0.5)))
     }
     assert(random.getMessage.contains("deterministic"), random.getMessage)
@@ -146,12 +146,12 @@ class PartitionPredicateSpec extends SparkSpec {
     val p = tmpDir("pp_execs") + "/t"
     GraftWriter.write(spark, (0L until 8L).map(k => (k, (k % 2).toInt)).toDF("k", "p"), p,
       WriteOptions(mode = WriteMode.Overwrite, partitionBy = Seq("p")))
-    // the enforced replaceWhere's violation pre-scan, then the write
+    // the write alone: it checks the replaceWhere on the rows it writes
     val (_, overwrite) = ExecutionRecorder.record(spark) {
       GraftWriter.write(spark, Seq((10L, 1)).toDF("k", "p"), p,
         WriteOptions(mode = WriteMode.Overwrite, replaceWhere = Some(col("p") === 1)))
     }
-    assert(overwrite.size == 2, overwrite.map(_.logical.nodeName).mkString(", "))
+    assert(overwrite.size == 1, overwrite.map(_.logical.nodeName).mkString(", "))
     // partition 1 holds one file, so the scoped OPTIMIZE has nothing to do
     val (_, optimize) = ExecutionRecorder.record(spark) {
       GraftWriter.optimize(spark, p, where = Some(col("p") === 1))
