@@ -24,7 +24,7 @@ import graft.io.{GraftTable, GraftWriter, WriteMode, WriteOptions}
   * STREAMING_WRITE: `writeStream.toTable` resolves the write through
   * the table itself (no analyzer hook exists there), backed by the
   * exactly-once epoch protocol in
-  * [[org.apache.spark.sql.graft.GraftStreamingWriteShim]].
+  * [[org.apache.spark.sql.graft.GraftStreamingWrite]].
   */
 final case class GraftCatalogTable(
     catalogName: String,
@@ -89,9 +89,8 @@ final case class GraftCatalogTable(
         new org.apache.spark.sql.connector.write.Write {
           override def toStreaming
               : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-            org.apache.spark.sql.graft.GraftStreamingWriteShim.create(
-              SparkSession.active, path, info.schema, info.queryId(),
-              partitionCols, bucket)
+            new org.apache.spark.sql.graft.GraftStreamingWrite(
+              path, info.schema, info.queryId(), partitionCols, bucket)
         }
     }
   }

@@ -1039,7 +1039,12 @@ object GraftWriter {
       operation: String,
       metadata: Map[String, String],
       compression: String = "zstd",
-      cdc: Seq[AddFile] = Nil,
+      /** Change-data-feed rows (data columns + `_change_type`) of a
+        * `graft.cdf` table, written as the commit's change files once
+        * the data files are staged — a write refused by an invariant
+        * leaves no change file behind.
+        */
+      changes: Option[DataFrame] = None,
       /** Evolved schema for the commit (merge schema evolution): the
         * rewrite's columns, a superset of the snapshot's.
         */
@@ -1090,6 +1095,7 @@ object GraftWriter {
         Invariants.guard(writeDf, schema,
           Invariants.violation(props, schema, None, assignedCols)),
         path, snap.partitionColumns, compression)
+    val cdc = changes.map(Cdc.writeChangeFiles(spark, path, _)).getOrElse(Nil)
     // CAS on the snapshot the rewrite was derived from: a concurrent
     // commit conflicts (the merge/DML retry re-derives) instead of
     // having its changes silently clobbered by stale carried-over rows.
@@ -1257,15 +1263,20 @@ object GraftWriter {
 
   /** Promote a staging directory written by an external writer (the
     * DSv2 streaming write, which checked the invariants as it wrote the
-    * rows) and append its files in one commit — footer stats and
-    * operation metrics identical to the batch append path.
+    * rows) and append its files in one commit carrying the idempotent
+    * `txn` marker (see [[WriteOptions.txnAppId]]) — footer stats and
+    * operation metrics identical to the batch append path. A lost
+    * version claim retries at the new head like the append loop of
+    * `writeAttempt`; a txn already applied deletes the promoted files
+    * and no-ops at the table's current version.
     */
   private[graft] def commitPromoted(
       spark: SparkSession,
       path: String,
       stage: Path,
       operation: String,
-      metadata: Map[String, String]): Long = {
+      metadata: Map[String, String],
+      txn: (String, Long)): Long = {
     val conf = spark.sessionState.newHadoopConf()
     val log = new CommitLog(path, conf)
     val fs = new Path(path).getFileSystem(conf)
@@ -1273,17 +1284,34 @@ object GraftWriter {
     val added = promoteStaged(fs, conf, stage, new Path(path),
       statsCapCols(log.tableProperties(), Some(snap), Nil,
         snap.partitionColumns))
-    log.commit(
-      operation = operation,
-      mode = "append",
-      schemaDdl = snap.schema.toDDL,
-      partitionColumns = snap.partitionColumns,
-      metadata = metadata,
-      operationMetrics = Map(
-        "num_added_files" -> added.size.toLong,
-        "num_output_rows" -> added.map(_.numRecords).sum),
-      add = added,
-      remove = Nil)
+    var head = snap
+    var attempt = 0
+    while (true) {
+      try return log.commit(
+        operation = operation,
+        mode = "append",
+        schemaDdl = head.schema.toDDL,
+        partitionColumns = head.partitionColumns,
+        metadata = metadata,
+        operationMetrics = Map(
+          "num_added_files" -> added.size.toLong,
+          "num_output_rows" -> added.map(_.numRecords).sum),
+        add = added,
+        remove = Nil,
+        txn = Some(txn))
+      catch {
+        case e: graft.log.TxnAlreadyApplied =>
+          added.foreach(f => fs.delete(new Path(path, f.path), false))
+          return e.tableVersion
+        case _: java.util.ConcurrentModificationException if attempt < 5 =>
+          attempt += 1
+          head = log.snapshot()
+          require(head.partitionColumns == snap.partitionColumns,
+            s"concurrent writer changed partitioning to ${head.partitionColumns}")
+          requireCompatible(head.schema, snap.schema, path)
+      }
+    }
+    throw new IllegalStateException("unreachable")
   }
 
   /** Move staged parquet files into the table root, preserving partition

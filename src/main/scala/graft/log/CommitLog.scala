@@ -176,8 +176,7 @@ final class CommitLog(
       * than this writes as a manifest + N gzipped shards parsed in
       * PARALLEL at read time (one multi-GB single-threaded JSON parse
       * per cold snapshot was the driver bottleneck at ~10M files).
-      * Sets at or under the threshold keep the single-file form, which
-      * older builds can read.
+      * Sets at or under the threshold keep the single-file form.
       */
     checkpointShardRecords: Int = CommitLog.DefaultCheckpointShardRecords) {
 
@@ -190,12 +189,9 @@ final class CommitLog(
 
   // checkpoints are gzipped (a 100 TB table's checkpoint carries every
   // live file's metadata — ~10× smaller on the wire and on listing-
-  // heavy stores); plain .json checkpoints from older builds still read
+  // heavy stores)
   private def checkpointFile(v: Long): Path =
     new Path(logDir, f"ckpt-v$v%010d.json.gz")
-
-  private def legacyCheckpointFile(v: Long): Path =
-    new Path(logDir, f"ckpt-v$v%010d.json")
 
   // suffixes deliberately NOT ending in .json/.json.gz: pre-sharding
   // builds glob exactly those, so they skip sharded artifacts entirely
@@ -248,8 +244,8 @@ final class CommitLog(
       .toSet
   }
 
-  /** Sorted checkpoint versions present in the log dir (any form:
-    * sharded manifest, single gzip, legacy plain JSON). Shard files do
+  /** Sorted checkpoint versions present in the log dir (either form:
+    * sharded manifest or single gzip). Shard files do
     * not mark a checkpoint — only their manifest does (shards land
     * first; the manifest is the atomic commit point).
     */
@@ -264,8 +260,7 @@ final class CommitLog(
       }
       .collect {
         case (digits, suffix) if digits.nonEmpty &&
-            (suffix == ".json" || suffix == ".json.gz" ||
-              suffix == ".manifest") =>
+            (suffix == ".json.gz" || suffix == ".manifest") =>
           digits.toLong
       }
       .toSeq
@@ -275,9 +270,7 @@ final class CommitLog(
 
   def readCheckpoint(v: Long): Checkpoint = {
     if (fs.exists(manifestFile(v))) return readShardedCheckpoint(v)
-    LogJson.decode[Checkpoint](
-      if (fs.exists(checkpointFile(v))) gunzip(checkpointFile(v))
-      else fs.open(legacyCheckpointFile(v)))
+    LogJson.decode[Checkpoint](gunzip(checkpointFile(v)))
   }
 
   /** Parse a sharded checkpoint's shards in PARALLEL (one thread per
@@ -395,30 +388,10 @@ final class CommitLog(
     boundary match {
       case None => Nil
       case Some(b) =>
-        // once commits below the boundary are gone, the boundary
-        // checkpoint becomes LOAD-BEARING: a pre-gzip build that cannot
-        // see `.json.gz` would replay the surviving suffix from an
-        // empty live map and silently drop every pre-boundary file —
-        // so materialize a plain-JSON copy of the boundary checkpoint
-        // before deleting anything (one small file, boundaries only)
-        // writeFileAtomic THROWS if no complete copy lands — the
-        // cleanup below must not run without it (deleting pre-boundary
-        // commits with no legacy-visible checkpoint is exactly the
-        // silent-data-loss case this copy exists to prevent).
-        // A SHARDED boundary checkpoint skips the copy: its legacy form
-        // would be one multi-GB document (the bottleneck sharding
-        // removes), and pre-sharding builds reading past it fail LOUDLY
-        // via snapshot()'s no-readable-checkpoint require — never
-        // silently.
-        if (!fs.exists(manifestFile(b)) &&
-            !fs.exists(legacyCheckpointFile(b)))
-          writeFileAtomic(LogJson.encode(readCheckpoint(b)),
-            legacyCheckpointFile(b))
         // retention-folded metadata (COPY INTO identity records): union
         // the doomed commits' values into the per-boundary sidecar
-        // BEFORE deleting — same crash rule as the checkpoint copy
-        // above: writeFileAtomic throws rather than lose the fold, and
-        // the cleanup below must not run without it (pruning the
+        // BEFORE deleting — writeFileAtomic throws rather than lose the
+        // fold, and the cleanup below must not run without it (pruning the
         // commits with no fold is exactly the silent re-ingest case).
         // A fresh file per boundary (monotone) sidesteps rename-over-
         // existing-target semantics differing across filesystems;
@@ -441,7 +414,7 @@ final class CommitLog(
           writeFileAtomic(LogJson.encode(foldable),
             new Path(logDir, s"folded-meta-v$b.json"))
         // checkpoint artifacts are matched by prefix so every form goes
-        // (single gzip, legacy JSON, sharded manifest + shard files)
+        // (single gzip, sharded manifest + shard files)
         val oldCkptArtifacts = fs.listStatus(logDir).iterator
           .map(_.getPath)
           .filter { p =>
@@ -515,7 +488,7 @@ final class CommitLog(
 
   /** Stage `bytes` and rename into `target` — atomic publication for
     * files whose content is a PURE FUNCTION of the log (checkpoints,
-    * legacy-format copies): a reader never sees a partial write, and a
+    * folded-metadata sidecars): a reader never sees a partial write, and a
     * rename losing to an existing `target` is success (any complete
     * copy is equivalent — the existing one is kept, never deleted, so
     * there is no window with no file at all). Throws when the rename

@@ -129,11 +129,14 @@ object ConflictCheck {
       // hot-append identity and row-tracked tables it serves (stale-hwm
       // safety is commit-time: CommitLog.advanceHwms never lets a rebase
       // regress an identity hwm, and CommitLog.commit assigns base row
-      // ids from the head's row-id hwm on every attempt)
+      // ids from the head's row-id hwm on every attempt). Idempotent-txn
+      // markers are per-application counters too: every streaming
+      // append advances one, and CommitLog.commit checks a txn against
+      // the head, never against a rebased base
       def opProps(m: Map[String, String]): Map[String, String] =
         m.filter { case (k, _) =>
           k.startsWith(CommitLog.ReservedPrefix) && !CommitLog.isHwmKey(k) &&
-            k != CommitLog.RowIdHwmKey
+            k != CommitLog.RowIdHwmKey && !k.startsWith(CommitLog.TxnPrefix)
         }
       val props = opProps(c.metadata)
       if (props != opProps(baseProperties)) {

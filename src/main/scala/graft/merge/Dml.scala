@@ -113,37 +113,45 @@ object Dml {
     }
     // change-data feed (opt-in `graft.cdf`): record the matched rows as
     // pre/postimages — one extra pass over the TOUCHED files only
-    val cdcFiles: Seq[graft.log.AddFile] =
-      if (!graft.io.Cdc.enabled(table.log.tableProperties())) Nil
-      else {
-        // change rows carry the DECLARED schema only — the materialized
-        // row-id/version plumbing columns must not leak into the feed
-        val hit = aff.drop(graft.io.RowTracking.PhysicalCol,
-          graft.io.RowTracking.PhysicalVersionCol).filter(matched)
-        val changes = keepMatched match {
-          case None =>
-            hit.withColumn(graft.io.Cdc.ChangeCol, lit("delete"))
-          case Some(set) =>
-            hit.withColumn(graft.io.Cdc.ChangeCol, lit("update_preimage"))
-              .unionByName(
-                graft.io.Generated.recompute(
-                  hit.select(cols.map(c =>
-                    set.get(c).map(_.as(c)).getOrElse(col(c))): _*),
-                  snap.schema, props, except = set.keys.toSet)
-                  .withColumn(graft.io.Cdc.ChangeCol, lit("update_postimage")))
-        }
-        graft.io.Cdc.writeChangeFiles(spark, path, changes)
-      }
+    // (change rows carry the DECLARED schema only — the materialized
+    // row-id/version plumbing columns must not leak into the feed)
+    val changes: Option[DataFrame] =
+      if (!graft.io.Cdc.enabled(props)) None
+      else Some(changeRows(aff.drop(graft.io.RowTracking.PhysicalCol,
+        graft.io.RowTracking.PhysicalVersionCol).filter(matched),
+        snap, props, keepMatched))
     val v = GraftWriter.writeCow(spark, newData, path, snap,
       touched.map(f => RemoveFile(f.path)),
       operation = op,
       metadata = Map("operation" -> op),
-      cdc = cdcFiles,
+      changes = changes,
       profile = Some(dmlProfile(spark, snap, touched, condition)),
       // DELETE changes no values; UPDATE recomputed all but the SET ones
       assignedCols = Some(keepMatched.map(_.keys.toSet).getOrElse(Set.empty)))
     DmlStats(v, touched.size.toLong)
   }
+
+  /** Change-data-feed rows of the matched rows `hit`: deletes for a
+    * DELETE, pre- and postimages for an UPDATE (generated columns not
+    * SET recomputed, like the rewrite itself).
+    */
+  private def changeRows(
+      hit: DataFrame,
+      snap: graft.log.Snapshot,
+      props: Map[String, String],
+      keepMatched: Option[Map[String, Column]]): DataFrame =
+    keepMatched match {
+      case None =>
+        hit.withColumn(graft.io.Cdc.ChangeCol, lit("delete"))
+      case Some(set) =>
+        hit.withColumn(graft.io.Cdc.ChangeCol, lit("update_preimage"))
+          .unionByName(
+            graft.io.Generated.recompute(
+              hit.select(snap.schema.map(f =>
+                set.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))): _*),
+              snap.schema, props, except = set.keys.toSet)
+              .withColumn(graft.io.Cdc.ChangeCol, lit("update_postimage")))
+    }
 
   /** Conflict profile of a DELETE/UPDATE: only the touched files' rows
     * influenced the output (an untouched candidate provably held no
@@ -207,24 +215,10 @@ object Dml {
     // change-data feed (opt-in `graft.cdf`): one extra pass over the
     // TOUCHED files only, same shape as the COW path
     val props = table.log.tableProperties()
-    val cdcFiles: Seq[graft.log.AddFile] =
-      if (!graft.io.Cdc.enabled(props)) Nil
-      else {
-        val hit = table.dfForFiles(snap, touched).filter(matched)
-        val changes = keepMatched match {
-          case None =>
-            hit.withColumn(graft.io.Cdc.ChangeCol, lit("delete"))
-          case Some(set) =>
-            hit.withColumn(graft.io.Cdc.ChangeCol, lit("update_preimage"))
-              .unionByName(
-                graft.io.Generated.recompute(
-                  hit.select(cols.map(c =>
-                    set.get(c).map(_.as(c)).getOrElse(col(c))): _*),
-                  snap.schema, props, except = set.keys.toSet)
-                  .withColumn(graft.io.Cdc.ChangeCol, lit("update_postimage")))
-        }
-        graft.io.Cdc.writeChangeFiles(spark, path, changes)
-      }
+    val changes: Option[DataFrame] =
+      if (!graft.io.Cdc.enabled(props)) None
+      else Some(changeRows(table.dfForFiles(snap, touched).filter(matched),
+        snap, props, keepMatched))
 
     val removals = touched.map(f => RemoveFile(f.path))
     val dvAdds = updated.flatMap(_._2)
@@ -235,6 +229,8 @@ object Dml {
     val profile = dmlProfile(spark, snap, touched, condition)
     val v = keepMatched match {
       case None => // DELETE: metadata-only commit, no data write at all
+        val cdcFiles =
+          changes.map(graft.io.Cdc.writeChangeFiles(spark, path, _)).getOrElse(Nil)
         table.log.commitOrRebase(profile, snap) { expected =>
           table.log.commit(
             operation = op,
@@ -266,7 +262,7 @@ object Dml {
           removals,
           operation = op,
           metadata = Map("operation" -> op),
-          cdc = cdcFiles,
+          changes = changes,
           extraAdds = dvAdds,
           profile = Some(profile),
           assignedCols = Some(set.keys.toSet))

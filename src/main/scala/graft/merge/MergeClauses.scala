@@ -329,9 +329,9 @@ object MergeClausesExecutor {
     // volume scales with the clauses' hits, never the table. A merge
     // that touches no file commits a pure append, whose inserts the CDF
     // reader takes from the add actions.
-    val cdcFiles: Seq[AddFile] =
-      if (touched.isEmpty || !graft.io.Cdc.enabled(props)) Nil
-      else graft.io.Cdc.writeChangeFiles(spark, path,
+    val changes: Option[DataFrame] =
+      if (touched.isEmpty || !graft.io.Cdc.enabled(props)) None
+      else Some(
         changeRows(affScoped, src, cond, cols, m, mergedSchema, props, genCols)
           .unionByName(insertChanges(insertTarget, src, cond, mergedSchema, m,
             props, genCols, defaults)))
@@ -340,7 +340,7 @@ object MergeClausesExecutor {
       touched.map(f => RemoveFile(f.path)),
       operation = "MERGE",
       metadata = m.metadata,
-      cdc = cdcFiles,
+      changes = changes,
       schemaOverride = if (m.schemaEvolution) Some(mergedSchema) else None,
       profile = Some(conflictProfile(spark, snap, agg, m, candidates, touched)),
       // validation set = every generated column SOME clause assigns
@@ -608,9 +608,9 @@ object MergeClausesExecutor {
 
     // CDF: identical change semantics to the COW path, over the touched
     // in-scope rows of the PRE-merge snapshot
-    val cdcFiles: Seq[AddFile] =
-      if (touched.isEmpty || !graft.io.Cdc.enabled(props)) Nil
-      else graft.io.Cdc.writeChangeFiles(spark, path,
+    val changes: Option[DataFrame] =
+      if (touched.isEmpty || !graft.io.Cdc.enabled(props)) None
+      else Some(
         changeRows(evolve(m.scoped(table.dfForFiles(snap, touched))), src,
           cond, cols, m, mergedSchema, props, genCols)
           .unionByName(insertChanges(candDfM, src, cond, mergedSchema, m,
@@ -620,7 +620,7 @@ object MergeClausesExecutor {
       touched.map(f => RemoveFile(f.path)),
       operation = "MERGE",
       metadata = m.metadata,
-      cdc = cdcFiles,
+      changes = changes,
       schemaOverride = if (m.schemaEvolution) Some(mergedSchema) else None,
       extraAdds = updated.flatMap(_._2),
       profile = Some(conflictProfile(spark, snap, agg, m, candidates, touched)),

@@ -4,24 +4,26 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.SparkSession
 
-import graft.io.GraftWriter
-import graft.log.CommitLog
+import graft.io.{GraftTable, GraftWriter}
 
 /** Driver-side epoch commit protocol for the DSv2 streaming write
   * (`writeStream.toTable`): promote one epoch's staged parquet files
   * into the table root and append a single commit stamped with
-  * `(streaming_query_id, streaming_batch_id)`.
+  * `(streaming_query_id, streaming_batch_id)` audit fields.
   *
   * Exactly-once has two halves here:
   *
   *  - '''Replayed epochs.''' Structured Streaming replays an epoch
-  *    whose tasks succeeded but whose checkpoint didn't advance. A
-  *    replayed epoch's batch id is already `>=`-recorded for the
-  *    query, so its staged files are deleted instead of appended. The
-  *    detection scan walks the log newest-first and stops at this
-  *    query's most recent commit — O(foreign commits since then), and
-  *    the whole log once on a fresh query's first epoch; the caller's
-  *    per-run cache makes every later epoch O(1).
+  *    whose tasks succeeded but whose checkpoint didn't advance. Each
+  *    epoch commit carries the idempotent-txn marker
+  *    `graft.txn.<appId(queryId)>` = epoch id, the same marker the
+  *    foreachBatch sink ([[Streams.toGraftTable]]) commits through:
+  *    [[graft.log.CommitLog.commit]] checks and records it atomically
+  *    with the version claim. A replay the marker already covers
+  *    deletes its staged files before promoting anything (one read of
+  *    the head's properties); one racing the original to the log loses
+  *    inside the commit and deletes the files it promoted. No commit
+  *    history is read.
   *  - '''Zombie task attempts.''' Only the files named in the tasks'
   *    commit messages are promoted; anything else in the stage
   *    directory (a lost executor's orphan or truncated file, leftovers
@@ -33,17 +35,12 @@ object StreamingEpochs {
   val QueryIdKey = "streaming_query_id"
   val BatchIdKey = "streaming_batch_id"
 
-  /** Highest batch id this query has committed to the table, if any
-    * (newest-first scan, early exit on the first commit of this query).
+  /** The txn application id of one query's epoch commits: the query id
+    * survives restarts from the same checkpoint, and the prefix keeps
+    * these ids apart from the foreachBatch sink's
+    * `graft-stream-sink:<checkpoint>` ones.
     */
-  private def lastCommitted(log: CommitLog, queryId: String): Option[Long] =
-    log.versions().reverseIterator
-      .map(log.readCommit)
-      .collectFirst(Function.unlift { c =>
-        if (!c.metadata.get(QueryIdKey).contains(queryId)) None
-        else c.metadata.get(BatchIdKey).flatMap(b =>
-          scala.util.Try(b.toLong).toOption)
-      })
+  def appId(queryId: String): String = s"graft-stream-query:$queryId"
 
   def commit(
       spark: SparkSession,
@@ -51,16 +48,14 @@ object StreamingEpochs {
       stageDir: String,
       writtenFiles: Seq[String],
       queryId: String,
-      epochId: Long,
-      lastCommittedHint: Option[Long] = None): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val log = new CommitLog(tablePath, conf)
-    require(log.tableExists(),
+      epochId: Long): Unit = {
+    val table = GraftTable(spark, tablePath)
+    require(table.log.tableExists(),
       s"streaming write target is not a graft table: $tablePath")
-    val fs = new Path(tablePath).getFileSystem(conf)
+    val fs = table.log.fs
     val stage = new Path(stageDir)
-    val last = lastCommittedHint.orElse(lastCommitted(log, queryId))
-    if (last.exists(_ >= epochId)) {
+    val app = appId(queryId)
+    if (table.txnVersion(app).exists(_ >= epochId)) {
       fs.delete(stage, true) // replayed epoch: already committed
       return
     }
@@ -77,7 +72,8 @@ object StreamingEpochs {
     if (writtenFiles.isEmpty) { fs.delete(stage, true); return }
     GraftWriter.commitPromoted(spark, tablePath, stage,
       operation = "STREAMING WRITE",
-      metadata = Map(QueryIdKey -> queryId, BatchIdKey -> epochId.toString))
+      metadata = Map(QueryIdKey -> queryId, BatchIdKey -> epochId.toString),
+      txn = (app, epochId))
   }
 
   def abort(spark: SparkSession, stageDir: String): Unit = {

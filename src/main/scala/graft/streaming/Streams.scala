@@ -183,9 +183,14 @@ object Streams {
   }
 
   /** Stream into a graft table with exactly-once micro-batch commits:
-    * each batch appends under a recorded `streaming_batch_id`; on restart
-    * a replayed batch is skipped if the log already holds its id — the
-    * Delta-style transactional sink, on our own commit log.
+    * each batch appends through the writer's idempotent-txn marker
+    * `graft.txn.graft-stream-sink:<checkpoint>` = batch id, which
+    * [[graft.log.CommitLog.commit]] checks and records atomically with
+    * the version claim, so a replayed batch the marker already covers
+    * is a no-op — the Delta-style transactional sink, on our own commit
+    * log. The DSv2 sink ([[StreamingEpochs]]) commits through the same
+    * marker; neither reads the commit history. Batches also record a
+    * `streaming_batch_id` audit field.
     */
   def toGraftTable(
       stream: DataFrame,
@@ -208,54 +213,20 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        // exactly-once through the writer's idempotent-transaction
-        // commit: the replay check and the batch-id marker ride ONE
-        // compare-and-swapped commit (atomic, unlike a read-history-
-        // then-append guard), keyed by checkpoint so independent
-        // streams into the same table never collide
-        val appId = s"graft-stream-sink:$checkpoint"
-        // upgrade corner: a table whose LAST sink batch was written by a
-        // pre-txn build, now replayed by this build mid-stream. Honor the
-        // legacy streaming_batch_id ONLY for that exact replay (equality,
-        // not >=), only while NO sink has ever recorded a txn marker
-        // here, and only when THIS checkpoint has a committed-batch
-        // history (`commits/<batchId-1>` exists — a mid-stream replay of
-        // batch N always follows an engine-committed batch N-1; the
-        // replayed batch's own commit file is precisely the one that's
-        // missing). The identity bound is what keeps a brand-new stream
-        // (fresh checkpoint, batchId 0) into a table whose legacy
-        // history happens to end at batch 0 from silently dropping its
-        // first batch — skipping records nothing, so that loss would be
-        // permanent. The cost: an upgrade replay of a legacy stream's
-        // very FIRST batch double-writes instead of skipping — a
-        // duplicate you can see and repair beats silent loss.
-        val legacySkip = GraftTable.exists(spark, path) && {
-          val t = GraftTable(spark, path)
-          val anySinkTxn = t.log.tableProperties().keys
-            .exists(_.startsWith(graft.log.CommitLog.TxnPrefix + "graft-stream-sink:"))
-          !anySinkTxn && lastCommittedBatch(spark, path).contains(batchId) &&
-            batchId > 0 && {
-              val prevCommit = new org.apache.hadoop.fs.Path(
-                new org.apache.hadoop.fs.Path(checkpoint, "commits"),
-                (batchId - 1).toString)
-              val fs = prevCommit.getFileSystem(
-                spark.sessionState.newHadoopConf())
-              fs.exists(prevCommit)
-            }
-        }
-        if (!legacySkip) {
-          GraftWriter.write(spark, batch, path, WriteOptions(
-            mode = WriteMode.Append,
-            partitionBy = partitionBy,
-            metadata = Map("streaming_batch_id" -> batchId.toString),
-            txnAppId = Some(appId), txnVersion = Some(batchId)))
-          if (autoCompactMinFiles > 0) {
-            val files = GraftTable(spark, path).snapshot().files
-            val worst = files.groupBy(_.partitionValues)
-              .valuesIterator.map(_.size).maxOption.getOrElse(0)
-            if (worst >= autoCompactMinFiles)
-              GraftWriter.optimize(spark, path)
-          }
+        // keyed by checkpoint so independent streams into the same
+        // table never collide
+        GraftWriter.write(spark, batch, path, WriteOptions(
+          mode = WriteMode.Append,
+          partitionBy = partitionBy,
+          metadata = Map(StreamingEpochs.BatchIdKey -> batchId.toString),
+          txnAppId = Some(s"graft-stream-sink:$checkpoint"),
+          txnVersion = Some(batchId)))
+        if (autoCompactMinFiles > 0) {
+          val files = GraftTable(spark, path).snapshot().files
+          val worst = files.groupBy(_.partitionValues)
+            .valuesIterator.map(_.size).maxOption.getOrElse(0)
+          if (worst >= autoCompactMinFiles)
+            GraftWriter.optimize(spark, path)
         }
         ()
       }
@@ -319,11 +290,4 @@ object Streams {
         ()
       }
       .start()
-
-  private def lastCommittedBatch(spark: SparkSession, path: String): Option[Long] =
-    if (!GraftTable.exists(spark, path)) None
-    else GraftTable(spark, path).history()
-      .flatMap(_.metadata.get("streaming_batch_id"))
-      .map(_.toLong)
-      .maxOption
 }

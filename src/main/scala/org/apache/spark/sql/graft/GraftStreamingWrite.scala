@@ -32,36 +32,52 @@ import org.apache.spark.util.SerializableConfiguration
   * byte-for-byte the batch writer's layout. The driver-side epoch
   * commit promotes ONLY the files named in the tasks' commit messages
   * (a zombie task attempt's orphan file is discarded, not committed)
-  * and appends one commit-log entry stamped with
-  * `(streaming_query_id, streaming_batch_id)`. A replayed epoch finds
-  * its batch id already recorded and discards the staged files instead
-  * of double-appending — the same exactly-once contract as the
-  * foreachBatch sink ([[graft.streaming.Streams.toGraftTable]]), on
-  * the V2 API. The per-epoch commit protocol lives in
+  * and appends one commit-log entry carrying the query's
+  * `graft.txn` marker = epoch id. A replayed epoch finds the marker
+  * already at its epoch and discards the staged files instead of
+  * double-appending — the one exactly-once marker the foreachBatch
+  * sink ([[graft.streaming.Streams.toGraftTable]]) also commits
+  * through, on the V2 API. The per-epoch commit protocol lives in
   * [[graft.streaming.StreamingEpochs]]; this file holds only the parts
   * that need sql-private access (ParquetFileFormat.prepareWrite,
   * OutputWriterFactory, SerializableConfiguration).
+  *
+  * Spark builds this object several times per micro-batch, so it reads
+  * nothing from the table: each epoch's writer factory reads the table
+  * properties once, for both the physical (column-mapped) schema and
+  * the write invariants.
   */
-object GraftStreamingWriteShim {
-  def create(
-      spark: SparkSession,
-      tablePath: String,
-      schema: StructType,
-      queryId: String,
-      partitionCols: Seq[String],
-      bucket: Option[(String, Int)] = None): StreamingWrite = {
+final class GraftStreamingWrite(
+    tablePath: String,
+    schema: StructType,
+    queryId: String,
+    partitionCols: Seq[String],
+    bucket: Option[(String, Int)] = None) extends StreamingWrite {
+
+  private def stageRoot = s"$tablePath/_staging-stream-$queryId"
+
+  /** Invariant-defining table properties (`graft.io.Invariants`) that
+    * the current epoch's writers check, read when Spark builds them.
+    */
+  @volatile private var checked: Map[String, String] = Map.empty
+
+  private def tableProperties(spark: SparkSession): Map[String, String] =
+    new graft.log.CommitLog(
+      tablePath, spark.sessionState.newHadoopConf()).tableProperties()
+
+  override def createStreamingWriterFactory(
+      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
+    val spark = SparkSession.active
+    val props = tableProperties(spark)
+    checked = graft.io.Invariants.definedBy(props)
     // partition columns live in directory names only, like the batch
-    // writer's partitionBy
-    val logicalDataSchema = StructType(schema.fields.filterNot(f =>
-      partitionCols.exists(_.equalsIgnoreCase(f.name))))
-    // renamed columns write under their physical names, like the batch
-    // writer (graft.io.ColumnMapping invariant); field ORDER matches the
-    // logical schema, so the row projection below indexes by position
+    // writer's partitionBy; renamed columns write under their physical
+    // names (graft.io.ColumnMapping invariant). Field ORDER matches the
+    // logical schema, so the row projection indexes by position
     val dataSchema = graft.io.ColumnMapping.physicalSchema(
-      logicalDataSchema,
-      graft.io.ColumnMapping.fromProps(
-        new graft.log.CommitLog(
-          tablePath, spark.sessionState.newHadoopConf()).tableProperties()))
+      StructType(schema.fields.filterNot(f =>
+        partitionCols.exists(_.equalsIgnoreCase(f.name)))),
+      graft.io.ColumnMapping.fromProps(props))
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     // prepareWrite mutates the job conf (write support, schema); the
     // serialized conf must be captured AFTER it
@@ -73,48 +89,8 @@ object GraftStreamingWriteShim {
     // columns stay data-skippable
     job.getConfiguration.set(
       "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    val serConf = new SerializableConfiguration(job.getConfiguration)
-    new GraftStreamingWrite(tablePath, schema, dataSchema, queryId,
-      partitionCols, bucket, spark.sessionState.conf.sessionLocalTimeZone,
-      factory, serConf)
-  }
-}
-
-final class GraftStreamingWrite(
-    tablePath: String,
-    schema: StructType,
-    dataSchema: StructType,
-    queryId: String,
-    partitionCols: Seq[String],
-    bucket: Option[(String, Int)],
-    timeZone: String,
-    factory: OutputWriterFactory,
-    serConf: SerializableConfiguration) extends StreamingWrite {
-
-  private def stageRoot = s"$tablePath/_staging-stream-$queryId"
-
-  /** Last batch id this instance committed — epochs after the first
-    * skip the commit-log scan entirely (one instance serves one query
-    * run; the scan only pays on the run's first commit, where a replay
-    * after restart must be detected).
-    */
-  @volatile private var lastCommittedCache: Option[Long] = None
-
-  /** Invariant-defining table properties (`graft.io.Invariants`) that
-    * the current epoch's writers check, read when Spark builds them.
-    */
-  @volatile private var checked: Map[String, String] = Map.empty
-
-  private def invariantProps(spark: SparkSession): Map[String, String] =
-    graft.io.Invariants.definedBy(new graft.log.CommitLog(
-      tablePath, spark.sessionState.newHadoopConf()).tableProperties())
-
-  // the batch writer's invariant check, resolved against the incoming
-  // rows and bound by position (a stream supplies every column)
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val spark = SparkSession.active
-    checked = invariantProps(spark)
+    // the batch writer's invariant check, resolved against the incoming
+    // rows and bound by position (a stream supplies every column)
     val attrs = DataTypeUtils.toAttributes(schema)
     val violation = graft.io.Invariants.violation(checked, schema, None, None).map { v =>
       val analyzed = GraftInternal.dfFromPlan(spark, LocalRelation(attrs))
@@ -123,8 +99,9 @@ final class GraftStreamingWrite(
       BindReferences.bindReference(e, AttributeSeq(attrs))
     }
     new GraftStreamWriterFactory(
-      stageRoot, schema, dataSchema, partitionCols, bucket, timeZone,
-      violation, factory, serConf)
+      stageRoot, schema, dataSchema, partitionCols, bucket,
+      spark.sessionState.conf.sessionLocalTimeZone, violation, factory,
+      new SerializableConfiguration(job.getConfiguration))
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -135,14 +112,13 @@ final class GraftStreamingWrite(
     val spark = SparkSession.active
     // rows checked against invariants the table no longer has: fail
     // (Spark aborts the epoch); a restarted query checks the new ones
-    if (written.nonEmpty && invariantProps(spark) != checked)
+    if (written.nonEmpty &&
+        graft.io.Invariants.definedBy(tableProperties(spark)) != checked)
       throw new graft.log.MetadataChangedException(
         s"the write invariants of $tablePath changed while epoch $epochId " +
           "was written; restart the query to check its rows against them")
     graft.streaming.StreamingEpochs.commit(
-      spark, tablePath, s"$stageRoot/$epochId", written,
-      queryId, epochId, lastCommittedCache)
-    lastCommittedCache = Some(epochId)
+      spark, tablePath, s"$stageRoot/$epochId", written, queryId, epochId)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =

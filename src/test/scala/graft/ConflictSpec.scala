@@ -254,6 +254,31 @@ class ConflictSpec extends SparkSpec {
     intercept[ConcurrentAppendException](deleteFrom(base2))
   }
 
+  test("a concurrent txn-marked append outside the read range rebases a DELETE") {
+    val p = tmpDir("rebase_txn") + "/t"
+    GraftWriter.write(spark, Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), p,
+      WriteOptions(mode = WriteMode.Overwrite))
+    val table = GraftTable(spark, p)
+    val base = table.snapshot()
+    val newData = table.dfForFiles(base, base.files).filter(col("k") > 2L)
+    // the winner only advances a graft.txn.* marker (a streaming
+    // append's) and adds a file the DELETE's predicate cannot match
+    GraftWriter.write(spark, Seq((100L, 1000L)).toDF("k", "v"), p,
+      WriteOptions(mode = WriteMode.Append,
+        txnAppId = Some("stream-a"), txnVersion = Some(7L)))
+    val v = GraftWriter.writeCow(spark, newData, p, base,
+      base.files.map(f => RemoveFile(f.path)),
+      operation = "DELETE", metadata = Map.empty,
+      profile = Some(TxnProfile(
+        base.files.map(_.path).toSet,
+        base.files.map(_.path).toSet,
+        graft.io.DataSkipping.matcherFor(spark, base, col("k") <= 2L))))
+    assert(v == 2L)
+    assert(table.toDf().as[(Long, Long)].collect().toSet == Set((100L, 1000L)))
+    // the rebased commit carries the winner's marker forward
+    assert(table.log.tableProperties().get(CommitLog.txnKey("stream-a")).contains("7"))
+  }
+
   test("concurrent DELETE and appends stay correct end-to-end (typed conflicts retry)") {
     val p = tmpDir("conc_dml") + "/t"
     GraftWriter.write(spark,

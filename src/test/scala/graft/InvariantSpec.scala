@@ -51,37 +51,43 @@ class InvariantSpec extends SparkSpec {
   }
 
   test("a refused append, replaceWhere overwrite, merge or update leaves the table root as it was") {
-    val p = tmpDir("inv_refused") + "/t"
-    GraftWriter.write(spark, Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("k", "v", "p"), p,
-      WriteOptions(mode = WriteMode.Overwrite, partitionBy = Seq("p")))
-    GraftWriter.addCheckConstraint(spark, p, "v_positive", "v > 0")
-    val before = listing(p)
-    val v0 = GraftTable(spark, p).version()
-    def refused(what: String, needle: String)(f: => Unit): Unit = {
-      val e = intercept[IllegalArgumentException](f)
-      assert(e.getMessage.contains(needle), s"$what: ${e.getMessage}")
-      val after = listing(p)
-      assert(after == before, s"$what: ${after -- before} ${before -- after}")
-      assert(!after.exists(_.contains("_staging-")), what)
-      assert(GraftTable(spark, p).version() == v0, what)
+    // a change-data-feed table writes change files too: a refused
+    // merge or update must leave no `_cdc/` directory behind
+    for (cdf <- Seq(false, true)) {
+      val p = tmpDir(s"inv_refused_cdf_$cdf") + "/t"
+      GraftWriter.write(spark, Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("k", "v", "p"), p,
+        WriteOptions(mode = WriteMode.Overwrite, partitionBy = Seq("p"),
+          metadata = if (cdf) Map(graft.io.Cdc.PropKey -> "true") else Map.empty))
+      GraftWriter.addCheckConstraint(spark, p, "v_positive", "v > 0")
+      val before = listing(p)
+      val v0 = GraftTable(spark, p).version()
+      def refused(what0: String, needle: String)(f: => Unit): Unit = {
+        val what = s"$what0 (cdf=$cdf)"
+        val e = intercept[IllegalArgumentException](f)
+        assert(e.getMessage.contains(needle), s"$what: ${e.getMessage}")
+        val after = listing(p)
+        assert(after == before, s"$what: ${after -- before} ${before -- after}")
+        assert(!after.exists(_.contains("_staging-")), what)
+        assert(GraftTable(spark, p).version() == v0, what)
+      }
+      refused("append", "v_positive") {
+        GraftWriter.write(spark, Seq((3L, -3L, "a")).toDF("k", "v", "p"), p,
+          WriteOptions(mode = WriteMode.Append))
+      }
+      refused("replaceWhere overwrite", "rows violate replaceWhere predicate") {
+        GraftWriter.write(spark, Seq((3L, 30L, "a"), (4L, 40L, "b")).toDF("k", "v", "p"), p,
+          WriteOptions(mode = WriteMode.Overwrite, replaceWhere = Some(col("p") === "a")))
+      }
+      refused("merge", "v_positive") {
+        MergeExecutor.merge(spark, Seq((1L, -1L, "a")).toDF("k", "v", "p"), p,
+          MergeConfig(MergeType.Upsert, "s.k = t.k"))
+      }
+      refused("update", "v_positive") {
+        Dml.update(spark, p, col("k") === 2L, Map("v" -> lit(-2L)))
+      }
+      assert(GraftTable(spark, p).toDf().as[(Long, Long, String)].collect().toSet ==
+        Set((1L, 10L, "a"), (2L, 20L, "b")))
     }
-    refused("append", "v_positive") {
-      GraftWriter.write(spark, Seq((3L, -3L, "a")).toDF("k", "v", "p"), p,
-        WriteOptions(mode = WriteMode.Append))
-    }
-    refused("replaceWhere overwrite", "rows violate replaceWhere predicate") {
-      GraftWriter.write(spark, Seq((3L, 30L, "a"), (4L, 40L, "b")).toDF("k", "v", "p"), p,
-        WriteOptions(mode = WriteMode.Overwrite, replaceWhere = Some(col("p") === "a")))
-    }
-    refused("merge", "v_positive") {
-      MergeExecutor.merge(spark, Seq((1L, -1L, "a")).toDF("k", "v", "p"), p,
-        MergeConfig(MergeType.Upsert, "s.k = t.k"))
-    }
-    refused("update", "v_positive") {
-      Dml.update(spark, p, col("k") === 2L, Map("v" -> lit(-2L)))
-    }
-    assert(GraftTable(spark, p).toDf().as[(Long, Long, String)].collect().toSet ==
-      Set((1L, 10L, "a"), (2L, 20L, "b")))
   }
 
   test("a streaming append of a row violating a CHECK constraint fails and commits nothing") {
@@ -158,8 +164,8 @@ class InvariantSpec extends SparkSpec {
     GraftWriter.write(spark, Seq((1L, 10L)).toDF("k", "v"), p,
       WriteOptions(mode = WriteMode.Overwrite))
     val files0 = listing(p).filter(_.endsWith(".parquet"))
-    val sw = org.apache.spark.sql.graft.GraftStreamingWriteShim.create(
-      spark, p, GraftTable(spark, p).toDf().schema, "q-inv", Nil)
+    val sw = new org.apache.spark.sql.graft.GraftStreamingWrite(
+      p, GraftTable(spark, p).toDf().schema, "q-inv", Nil)
     val w = sw.createStreamingWriterFactory(null).createWriter(0, 0L, 0L)
     w.write(org.apache.spark.sql.catalyst.InternalRow(2L, 200L))
     val msg = w.commit()

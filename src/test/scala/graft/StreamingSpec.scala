@@ -454,12 +454,13 @@ class StreamingSpec extends SparkSpec {
       WriteOptions(mode = WriteMode.ErrorIfExists))
     val ckpt = tmpDir("graft_wcat_ckpt")
     val mem = MemoryStream[(Long, String)]
-    def drain(): Unit = {
+    def drain(): String = {
       val q = mem.toDF().toDF("k", "v").writeStream
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .toTable("wcat.ns.sink")
       q.awaitTermination()
+      q.id.toString
     }
     mem.addData((1L, "a"), (2L, "b"))
     drain()
@@ -470,11 +471,15 @@ class StreamingSpec extends SparkSpec {
     assert(t.toDf().count() == 2)
     // more data flows through as a new epoch commit
     mem.addData((3L, "c"))
-    drain()
+    val queryId = drain()
     assert(t.toDf().collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
-    // commits carry the exactly-once markers
+    // commits carry the audit fields, and the query's txn marker
+    // records its last epoch
     val metas = t.history().flatMap(_.metadata.get("streaming_batch_id"))
     assert(metas.nonEmpty)
+    assert(t.log.tableProperties()
+      .get(graft.log.CommitLog.txnKey(graft.streaming.StreamingEpochs.appId(queryId)))
+      .contains(metas.map(_.toLong).max.toString))
     // the result reads back through SQL and the native plan
     assert(spark.sql("SELECT count(*) FROM wcat.ns.sink").head().getLong(0) == 3L)
   }
@@ -538,6 +543,46 @@ class StreamingSpec extends SparkSpec {
     // replay of the same epoch is a no-op
     graft.streaming.StreamingEpochs.commit(
       spark, p, stage, Seq(goodFile), "q1", 0L)
+    assert(GraftTable(spark, p).toDf().count() == 2)
+  }
+
+  test("an epoch commit that loses its version to a foreign commit lands once at the next") {
+    import graft.io.{GraftWriter, WriteMode, WriteOptions}
+    import graft.log.{CommitLog, LogJson, LogStore}
+    import graft.streaming.StreamingEpochs
+    val p = tmpDir("graft_epoch_race") + "/t"
+    GraftWriter.write(spark, Seq((1L, "seed")).toDF("k", "v"), p,
+      WriteOptions(mode = WriteMode.Overwrite))
+    val stage = s"$p/_staging-stream-qr/0"
+    Seq((2L, "epoch")).toDF("k", "v").coalesce(1).write.parquet(stage)
+    val staged = new java.io.File(stage).listFiles().toSeq
+      .map(_.toString).filter(_.endsWith(".parquet"))
+    val log = new CommitLog(p, spark.sessionState.newHadoopConf())
+    val head = log.readCommit(log.latestVersion().get)
+    // a valid foreign commit (an empty append carrying the table's
+    // properties) lands at exactly the version the epoch commit claims
+    val foreign = head.copy(version = head.version + 1,
+      timestampMs = head.timestampMs + 1, operation = "FOREIGN",
+      mode = "append", operationMetrics = Map.empty, add = Nil, remove = Nil)
+    // session conf entries reach the Hadoop conf under their own key
+    PlantingStore.plantBytes = LogJson.encode(foreign)
+    spark.conf.set(LogStore.ConfKey, classOf[PlantingStore].getName)
+    try StreamingEpochs.commit(spark, p, stage, staged, "qr", 0L)
+    finally {
+      spark.conf.unset(LogStore.ConfKey)
+      PlantingStore.plantBytes = null
+    }
+    assert(log.latestVersion().contains(head.version + 2))
+    assert(log.readCommit(head.version + 1).operation == "FOREIGN")
+    val epoch = log.readCommit(head.version + 2)
+    assert(epoch.metadata.get(StreamingEpochs.BatchIdKey).contains("0"))
+    assert(epoch.add.size == 1)
+    assert(log.tableProperties().get(CommitLog.txnKey(StreamingEpochs.appId("qr")))
+      .contains("0"))
+    assert(GraftTable(spark, p).toDf().collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+    // a replay of the epoch is a no-op
+    StreamingEpochs.commit(spark, p, stage, staged, "qr", 0L)
+    assert(log.latestVersion().contains(head.version + 2))
     assert(GraftTable(spark, p).toDf().count() == 2)
   }
 

@@ -977,25 +977,6 @@ class TableLayerSpec extends SparkSpec {
       "snapshot through the checkpoint must equal the fully-replayed contents")
     // time travel within the surviving suffix also works
     assert(GraftTable(spark, p).toDf(Some(102L)).count() == 103)
-
-    // legacy-format compat: a plain .json checkpoint (pre-gzip build)
-    // replays identically — rewrite ckpt-100 uncompressed and re-read
-    val gz = new org.apache.hadoop.fs.Path(p, "_graft_log/ckpt-v0000000100.json.gz")
-    val plain = new org.apache.hadoop.fs.Path(p, "_graft_log/ckpt-v0000000100.json")
-    val in = new java.util.zip.GZIPInputStream(fs.open(gz))
-    val bytes = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toByteArray
-    } finally in.close()
-    val out = fs.create(plain, true)
-    try out.write(bytes) finally out.close()
-    fs.delete(gz, false)
-    assert(log.checkpointVersions().contains(100L))
-    val viaLegacy = GraftTable(spark, p).toDf().collect().map(_.getLong(0)).sorted
-    assert(viaLegacy.toSeq == (0L until 104L))
   }
 
   test("sharded checkpoints replay identically; a corrupt shard falls back loudly-or-older") {
@@ -1234,8 +1215,6 @@ class TableLayerSpec extends SparkSpec {
     assert(shardLog.versions() == (20L to 24L))
     // sub-boundary checkpoint artifacts (the gz at v10) went with them
     assert(!fs.exists(new Path(p, "_graft_log/ckpt-v0000000010.json.gz")))
-    // no multi-GB legacy copy is materialized for a SHARDED boundary
-    assert(!fs.exists(new Path(p, "_graft_log/ckpt-v0000000020.json")))
     // replay through the sharded boundary still serves everything
     assert(GraftTable(spark, p).toDf().count() == 25)
     assert(GraftTable(spark, p).toDf().collect().map(_.getLong(0)).sorted
@@ -1436,18 +1415,10 @@ class TableLayerSpec extends SparkSpec {
     intercept[Exception] { GraftTable(spark, p).toDf(Some(5L)) }
     // idempotent
     assert(log.cleanOldLogs(1000L, nowMs = future).isEmpty)
-    // the cleanup materialized a plain-JSON copy of the load-bearing
-    // boundary checkpoint, so a pre-gzip build still replays correctly
-    val fs = log.fs
-    val legacy = new org.apache.hadoop.fs.Path(p, "_graft_log/ckpt-v0000000020.json")
-    assert(fs.exists(legacy))
-    // and with the gz copy gone (simulated old build view), replay
-    // through the plain copy is identical
-    fs.delete(new org.apache.hadoop.fs.Path(p, "_graft_log/ckpt-v0000000020.json.gz"), false)
-    assert(GraftTable(spark, p).toDf().count() == 25)
     // a CORRUPT lone boundary checkpoint on a cleaned log fails loudly
     // instead of silently dropping pre-boundary files
-    val out = fs.create(legacy, true)
+    val boundary = new org.apache.hadoop.fs.Path(p, "_graft_log/ckpt-v0000000020.json.gz")
+    val out = log.fs.create(boundary, true)
     try out.write("{not json".getBytes("UTF-8")) finally out.close()
     val ex = intercept[IllegalArgumentException] {
       new CommitLog(p, spark.sessionState.newHadoopConf()).snapshot()
