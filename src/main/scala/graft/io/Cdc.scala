@@ -1,28 +1,56 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{array, coalesce, col, explode, lit}
+import org.apache.spark.sql.types.StringType
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-
-import graft.log.{AddFile, CommitLog}
+import graft.log.CommitLog
 
 /** Change-data-feed plumbing (Delta's `enableChangeDataFeed` pattern).
   *
   * CDF is opt-in per table via the carried-forward property
-  * `graft.cdf=true` — recording row-level changes costs an extra pass
-  * over the touched files at DML/merge time, so tables that never read
-  * a change feed shouldn't pay it. When enabled, COW commits write the
-  * changed rows (with a `_change_type` column:
-  * `update_preimage` / `update_postimage` / `delete` / `insert`) as
-  * parquet under `<table>/_cdc/<uuid>/` and record them on the commit's
-  * `cdc` action list. `_cdc` is an underscore-internal directory: never
-  * part of the live file set, invisible to scans, and skipped by every
-  * vacuum path. Change-file volume scales with the CHANGED rows, not
-  * the table — the posture that keeps CDC viable on a 100 TB table.
+  * `graft.cdf=true`. When enabled, a COW/DV DML or merge emits its change
+  * rows (`_change_type`: `update_preimage` / `update_postimage` /
+  * `delete` / `insert`) from the same dispatched rows as its data rows,
+  * in one frame where a NULL `_change_type` marks a data row
+  * ([[tag]]), and writes that frame once
+  * ([[GraftWriter.writeCow]]): the write partitions by `_change_type`
+  * ahead of the table's partition columns, the data rows' files land
+  * in the table root, and the change files land under
+  * `<table>/_cdc/<uuid>/_change_type=<kind>/<partition dirs>/` as the
+  * commit's `cdc` actions, whose partition values hold the change type
+  * and the table partition values (no change file holds those columns;
+  * the reader fills them from the partition values). So CDF costs no
+  * extra scan, join or SQL execution, only the change rows' bytes.
+  * `_cdc` is an underscore-internal directory: never part of the live
+  * file set, invisible to scans, and skipped by every vacuum path.
+  * Change-file volume scales with the CHANGED rows, not the table —
+  * the posture that keeps CDC viable on a 100 TB table.
   */
 object Cdc {
 
   val ChangeCol = "_change_type"
+  val Insert = "insert"
+  val Delete = "delete"
+  val Preimage = "update_preimage"
+  val Postimage = "update_postimage"
+
+  /** `df` with each row emitted once per entry of `kinds`, an array of
+    * change kinds, as [[ChangeCol]]: a NULL entry is the row the table
+    * keeps (a data row), any other entry a change row of that kind. One
+    * generator over rows the command computes anyway, so its change
+    * rows cost no second scan or join.
+    */
+  def tag(df: DataFrame, kinds: Column): DataFrame =
+    df.withColumn(ChangeCol, explode(kinds))
+
+  /** An array of change kinds for [[tag]]; None is the data row. */
+  def kinds(ks: Option[String]*): Column =
+    array(ks.map(k => lit(k.orNull).cast(StringType)): _*)
+
+  /** A tagged row is a preimage: it keeps the values the command read. */
+  def isPreimage: Column = coalesce(col(ChangeCol) === Preimage, lit(false))
+
   /** Commit provenance columns every change row carries (Delta's CDF
     * contract): the version that produced the change and its wall-clock
     * commit timestamp.
@@ -35,11 +63,9 @@ object Cdc {
     * per-commit feed, the whole-range diff fallback, and the streaming
     * source's initial-snapshot batch.
     */
-  def stamp(df: DataFrame, version: Long, timestampMs: Long): DataFrame = {
-    import org.apache.spark.sql.functions.lit
+  def stamp(df: DataFrame, version: Long, timestampMs: Long): DataFrame =
     df.withColumn(VersionCol, lit(version))
       .withColumn(TimestampCol, lit(new java.sql.Timestamp(timestampMs)))
-  }
 
   /** The row-multiplicity column of the signed net-change feed
     * ([[GraftTable.signedChanges]]): +1 for a row the range added, −1
@@ -52,7 +78,7 @@ object Cdc {
     */
   def signOf(changeType: Column): Column = {
     import org.apache.spark.sql.functions.when
-    when(changeType.isin("insert", "update_postimage"), 1L).otherwise(-1L)
+    when(changeType.isin(Insert, Postimage), 1L).otherwise(-1L)
   }
   val Dir = "_cdc"
 
@@ -61,39 +87,4 @@ object Cdc {
 
   def enabled(tableProperties: Map[String, String]): Boolean =
     tableProperties.get(PropKey).exists(_.equalsIgnoreCase("true"))
-
-  /** Write `changes` (data columns + `_change_type`) as this commit's
-    * change files and return their actions. Paths are relative to the
-    * table root, like add actions.
-    *
-    * Change files are staged under PHYSICAL column names (like data
-    * files — [[ColumnMapping.toPhysical]]): files written before and
-    * after a RENAME COLUMN then carry the SAME names, so one
-    * mapping-aware projection at read time covers every generation of a
-    * `tableChanges` range.
-    */
-  def writeChangeFiles(
-      spark: SparkSession,
-      path: String,
-      changes: DataFrame,
-      compression: String = "zstd"): Seq[AddFile] = {
-    val mapping = ColumnMapping.fromProps(
-      new CommitLog(path, spark.sessionState.newHadoopConf()).tableProperties())
-    val sub = s"$Dir/${java.util.UUID.randomUUID().toString.replace("-", "").take(16)}"
-    val dest = new Path(path, sub)
-    ColumnMapping.toPhysical(changes, mapping)
-      .write.option("compression", compression).parquet(dest.toString)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = dest.getFileSystem(conf)
-    fs.listStatus(dest).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        AddFile(
-          path = s"$sub/${st.getPath.getName}",
-          partitionValues = Map.empty,
-          sizeBytes = st.getLen,
-          numRecords = ParquetMeta.rowCount(spark, st.getPath.toString),
-          modificationTime = st.getModificationTime)
-      }
-  }
 }

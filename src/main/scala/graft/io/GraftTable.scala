@@ -414,23 +414,22 @@ final class GraftTable(val spark: SparkSession, val path: String) {
       else Cdc.stamp(data, c.version, c.timestampMs).select(dataCols ++
         Seq(col(cc), col(Cdc.VersionCol), col(Cdc.TimestampCol)): _*)
     }
-    // change files carry PHYSICAL column names (like data files) —
-    // project them back to the target snapshot's logical names; columns
-    // of since-dropped fields are discarded (finish pads/selects the rest)
-    val mapping = ColumnMapping.fromSnapshot(alignTo)
-    val physToLogical = alignTo.schema.map(f =>
-      ColumnMapping.physicalName(mapping, f.name)
-        .toLowerCase(java.util.Locale.ROOT) -> f.name).toMap
-    def logicalize(df: DataFrame): DataFrame =
-      df.select(df.columns.toIndexedSeq.flatMap { c =>
-        if (c == cc) Some(col(c))
-        else physToLogical.get(c.toLowerCase(java.util.Locale.ROOT))
-          .map(l => col(c).as(l))
-      }: _*)
+    // A change file lacks the columns its partition values hold (the
+    // change type and the table's partition columns, under a tagged
+    // write — see GraftWriter.writeCow): those are read as partition
+    // columns, typed like a scan's. A file holding every column inline
+    // has no partition values, so one rule reads both layouts. Data
+    // columns carry PHYSICAL names, which alignTo's mapping projects to
+    // the logical names; since-dropped columns are not read.
+    val tagged = StructType(alignTo.schema.fields :+ StructField(cc, StringType))
+    def changeFiles(c: graft.log.Commit): DataFrame = {
+      val keys = c.cdc.flatMap(_.partitionValues.keys).toSet
+      dfForFiles(alignTo.copy(schema = tagged,
+        partitionColumns = tagged.fieldNames.toSeq.filter(keys)), c.cdc)
+    }
     val parts = commits.flatMap { c =>
       if (c.cdc.nonEmpty)
-        Some(finish(logicalize(spark.read.parquet(
-          c.cdc.map(f => new Path(path, f.path).toString): _*)), c))
+        Some(finish(changeFiles(c), c))
       else if (pureAppend(c))
         // read through the TARGET snapshot: files of any generation carry
         // physical names, so alignTo's mapping projects them to the

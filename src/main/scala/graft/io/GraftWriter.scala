@@ -8,6 +8,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -265,12 +266,15 @@ object GraftWriter {
     // create the table, and the pre-commit log has none yet. Only
     // generated columns the CALLER supplied are checked — the ones
     // fillGenerated computed satisfy their expressions by construction.
+    // declProps already holds the snapshot's properties, so it is also
+    // the property map the staging reads (bloom columns, column mapping,
+    // stats cap) — for a creating write, the declarations alone.
     val added =
       stageAndPromote(spark, fs, conf,
         Invariants.guard(writeDf, newSchema, Invariants.violation(
           declProps, newSchema, overwriteWhere, Some(dfIn.columns.toSet))),
-        path, partitionCols, opts.compression, opts.maxRecordsPerFile,
-        extraProps = declProps)
+        path, partitionCols, opts.compression, declProps, snapOpt,
+        opts.maxRecordsPerFile)
 
     // The removal set a snapshot implies: the replaceWhere partitions;
     // under dynamic partition overwrite exactly the live files in the
@@ -719,8 +723,9 @@ object GraftWriter {
       }.toSeq
     if (toCompact.isEmpty) return snap.version
 
+    val props = log.tableProperties()
     val table = new GraftTable(spark, path)
-    val df = rewriteSource(table, log, snap, toCompact)
+    val df = rewriteSource(table, props, snap, toCompact)
     val totalRows = toCompact.map(_.liveRecords).sum
     val nOut = math.max(1, math.ceil(totalRows.toDouble / maxRecordsPerFile).toInt)
 
@@ -729,14 +734,12 @@ object GraftWriter {
       if (snap.partitionColumns.nonEmpty)
         df.repartition(snap.partitionColumns.map(col): _*)
       else df.repartition(nOut)
-    val physDf = ColumnMapping.toPhysical(writeDf,
-      ColumnMapping.fromProps(log.tableProperties()))
+    val physDf = ColumnMapping.toPhysical(writeDf, ColumnMapping.fromProps(props))
     var w = physDf.write.option("compression", "zstd")
     if (snap.partitionColumns.nonEmpty) w = w.partitionBy(snap.partitionColumns: _*)
     w.parquet(stage.toString)
     val added = promoteStaged(fs, conf, stage, new Path(path),
-      statsCapCols(log.tableProperties(), Some(snap), Nil,
-        snap.partitionColumns))
+      statsCapCols(props, Some(snap), Nil, snap.partitionColumns))
 
     // compaction reads ONLY the files it rewrites: concurrent appends
     // (e.g. the streaming sink this auto-compacts behind) and rewrites
@@ -846,11 +849,10 @@ object GraftWriter {
     */
   private def rewriteSource(
       table: GraftTable,
-      log: CommitLog,
+      props: Map[String, String],
       snap: graft.log.Snapshot,
       files: Seq[AddFile]): DataFrame =
-    table.dfForFilesCarryingIds(snap, files,
-      carryIds = RowTracking.enabled(log.tableProperties()))
+    table.dfForFilesCarryingIds(snap, files, carryIds = RowTracking.enabled(props))
 
   /** The candidate set of an incremental clustering pass over `scoped`
     * files: everything not yet written under `layout`, plus
@@ -914,7 +916,8 @@ object GraftWriter {
     if (toSort.isEmpty) return snap.version
     val totalRows = toSort.map(_.liveRecords).sum
     val nOut = math.max(1, math.ceil(totalRows.toDouble / maxRecordsPerFile).toInt)
-    val df = rewriteSource(table, log, snap, toSort)
+    val props = log.tableProperties()
+    val df = rewriteSource(table, props, snap, toSort)
     val clustered =
       if (zorder) {
         val zCol = "__graft_z"
@@ -926,8 +929,8 @@ object GraftWriter {
         df.repartitionByRange(nOut, cols.map(col): _*)
           .sortWithinPartitions(cols.map(col): _*)
     val added = stageAndPromote(
-      spark, fs, conf, clustered, path, snap.partitionColumns, "zstd")
-      .map(_.copy(clusteredBy = Some(layout)))
+      spark, fs, conf, clustered, path, snap.partitionColumns, "zstd", props,
+      Some(snap)).map(_.copy(clusteredBy = Some(layout)))
     // like compaction: a concurrent append commutes (its file is not in
     // the removal set, so its rows survive — merely unclustered) and
     // REBASES instead of re-running the rewrite
@@ -1029,6 +1032,11 @@ object GraftWriter {
     * the caller's removal set, so conflicts surface as
     * ConcurrentModificationException for the caller (or a
     * RetryingCoordinator) to re-derive and re-run.
+    *
+    * On a `graft.cdf` table `df` may also carry the command's change
+    * rows, tagged by [[Cdc.ChangeCol]] (NULL on the data rows): one
+    * write stages both, the invariants are checked on the data rows
+    * only, and the tagged files become the commit's `cdc` actions.
     */
   private[graft] def writeCow(
       spark: SparkSession,
@@ -1039,12 +1047,6 @@ object GraftWriter {
       operation: String,
       metadata: Map[String, String],
       compression: String = "zstd",
-      /** Change-data-feed rows (data columns + `_change_type`) of a
-        * `graft.cdf` table, written as the commit's change files once
-        * the data files are staged — a write refused by an invariant
-        * leaves no change file behind.
-        */
-      changes: Option[DataFrame] = None,
       /** Evolved schema for the commit (merge schema evolution): the
         * rewrite's columns, a superset of the snapshot's.
         */
@@ -1076,26 +1078,33 @@ object GraftWriter {
     val log = new CommitLog(path, conf)
     val fs = new Path(path).getFileSystem(conf)
     val schema = schemaOverride.getOrElse(snap.schema)
+    val props = log.tableProperties()
     // schema-evolution merges can introduce source columns into the
     // DECLARED schema — under row tracking the reserved names must be
     // refused here exactly like the append path refuses them, or a
     // user column named __graft_row_id would be silently hijacked by
     // the id plumbing AND brick every subsequent append
-    if (RowTracking.enabled(log.tableProperties()))
+    if (RowTracking.enabled(props))
       schema.fieldNames.foreach(c => require(
         !RowTracking.ReservedCols.exists(_.equalsIgnoreCase(c)),
         s"column name $c is reserved by row tracking"))
+    // a change-data-feed table's rewrite carries its change rows in the
+    // same frame, tagged by `_change_type` (NULL on the data rows)
+    val tagged = Cdc.enabled(props) && df.columns.contains(Cdc.ChangeCol)
+    require(!tagged || !schema.fieldNames.exists(_.equalsIgnoreCase(Cdc.ChangeCol)),
+      s"column name ${Cdc.ChangeCol} is reserved by the change-data feed")
     val writeDf =
       if (snap.partitionColumns.nonEmpty)
         df.repartition(snap.partitionColumns.map(col): _*)
       else df
-    val props = log.tableProperties()
-    val added =
+    val violation = Invariants.violation(props, schema, None, assignedCols)
+    val (added, cdc) =
       stageAndPromote(spark, fs, conf,
         Invariants.guard(writeDf, schema,
-          Invariants.violation(props, schema, None, assignedCols)),
-        path, snap.partitionColumns, compression)
-    val cdc = changes.map(Cdc.writeChangeFiles(spark, path, _)).getOrElse(Nil)
+          if (tagged) violation.map(when(col(Cdc.ChangeCol).isNull, _)) else violation),
+        path, snap.partitionColumns, compression, props, Some(snap),
+        changeCol = tagged)
+        .partition(f => !tagged || !f.partitionValues.contains(Cdc.ChangeCol))
     // CAS on the snapshot the rewrite was derived from: a concurrent
     // commit conflicts (the merge/DML retry re-derives) instead of
     // having its changes silently clobbered by stale carried-over rows.
@@ -1108,8 +1117,8 @@ object GraftWriter {
       // a merge insert may SUPPLY identity values (BY DEFAULT
       // semantics): keep the high-water mark ahead of them
       metadata = metadata ++
-        Generated.hwmUpdates(added, log.tableProperties(),
-          writtenFallback = Some(df)),
+        Generated.hwmUpdates(added, log.tableProperties(), writtenFallback =
+          Some(if (tagged) df.filter(col(Cdc.ChangeCol).isNull) else df)),
       operationMetrics = Map(
         "num_added_files" -> added.size.toLong,
         "num_removed_files" -> removals.size.toLong,
@@ -1135,6 +1144,12 @@ object GraftWriter {
     * writes. A write that fails leaves no staged file behind; one that
     * hit an invariant ([[Invariants]]) fails with its
     * IllegalArgumentException.
+    *
+    * With `changeCol` the frame carries change-data rows tagged by
+    * [[Cdc.ChangeCol]] beside its data rows (NULL tag): the write
+    * partitions by the tag ahead of `partitionCols`, so no file holds
+    * the column, and the change files come back as the adds whose
+    * partition values hold the tag (see [[promoteStaged]]).
     */
   private def stageAndPromote(
       spark: SparkSession,
@@ -1144,12 +1159,13 @@ object GraftWriter {
       path: String,
       partitionCols: Seq[String],
       compression: String,
-      maxRecordsPerFile: Long = 0L,
-      /** Properties not yet committed (a CREATING write's declarations)
-        * merged over the log's, so e.g. declared bloom columns apply to
-        * the very first write's files too.
+      /** The table's properties (a CREATING write's declarations), read
+        * once by the caller.
         */
-      extraProps: Map[String, String] = Map.empty): Seq[AddFile] = {
+      props: Map[String, String],
+      snapOpt: Option[graft.log.Snapshot],
+      maxRecordsPerFile: Long = 0L,
+      changeCol: Boolean = false): Seq[AddFile] = {
     val stage = new Path(path, s"_staging-${UUID.randomUUID()}")
     val tsConfKey = "spark.sql.parquet.outputTimestampType"
     val prevTsConf = spark.conf.getOption(tsConfKey)
@@ -1159,8 +1175,6 @@ object GraftWriter {
       // invariant: every data file and its footer stats are keyed by
       // the column's creation name, so reads and pushed filters resolve
       // uniformly across pre- and post-rename files)
-      val spLog = new CommitLog(path, conf)
-      val props = spLog.tableProperties() ++ extraProps
       val physDf = ColumnMapping.toPhysical(writeDf,
         ColumnMapping.fromProps(props))
       var w = physDf.write.option("compression", compression)
@@ -1171,7 +1185,8 @@ object GraftWriter {
       }
       if (maxRecordsPerFile > 0)
         w = w.option("maxRecordsPerFile", maxRecordsPerFile)
-      if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
+      val dirCols = (if (changeCol) Seq(Cdc.ChangeCol) else Nil) ++ partitionCols
+      if (dirCols.nonEmpty) w = w.partitionBy(dirCols: _*)
       try w.parquet(stage.toString)
       catch {
         case scala.util.control.NonFatal(e) =>
@@ -1182,10 +1197,10 @@ object GraftWriter {
       // stats cap (Delta's dataSkippingNumIndexedCols): on wide tables
       // keep footer stats only for the first N data columns — the log
       // stays O(N) per file instead of O(width)
-      val statsCols = statsCapCols(props,
-        if (spLog.tableExists()) Some(spLog.snapshot()) else None,
+      val statsCols = statsCapCols(props, snapOpt,
         writeDf.schema.fieldNames.toSeq, partitionCols)
-      promoteStaged(fs, conf, stage, new Path(path), statsCols)
+      promoteStaged(fs, conf, stage, new Path(path), statsCols,
+        changeDir = if (changeCol) Some(s"${Cdc.Dir}/${UUID.randomUUID()}") else None)
     } finally {
       prevTsConf match {
         case Some(v) => spark.conf.set(tsConfKey, v)
@@ -1316,6 +1331,13 @@ object GraftWriter {
 
   /** Move staged parquet files into the table root, preserving partition
     * subdirectories; return their add actions (with footer row counts).
+    *
+    * With `changeDir` the staged tree is partitioned by
+    * [[Cdc.ChangeCol]] first: files under its NULL partition are data
+    * files and move to the table root without that directory level;
+    * the others move under `changeDir` as they are, and their adds —
+    * the commit's `cdc` actions, without footer stats — keep the change
+    * type among their partition values.
     */
   private def promoteStaged(
       fs: FileSystem,
@@ -1329,10 +1351,18 @@ object GraftWriter {
         * and skipping on later columns degrades conservatively to
         * keep-the-file.
         */
-      statsCols: Option[Set[String]] = None): Seq[AddFile] = {
+      statsCols: Option[Set[String]] = None,
+      changeDir: Option[String] = None): Seq[AddFile] = {
     val staged = listRec(fs, stage).filter(_.getName.endsWith(".parquet"))
     val adds = staged.map { f =>
-      val rel0 = relativize(stage, f)
+      val staged0 = relativize(stage, f)
+      val kind = changeDir.flatMap(_ => partitionValuesOf(staged0).get(Cdc.ChangeCol))
+      val change = changeDir.filter(_ => kind.exists(_ != DEFAULT_PARTITION_NAME))
+      val rel0 = (change, kind) match {
+        case (Some(dir), _) => s"$dir/$staged0"
+        case (None, Some(_)) => staged0.substring(staged0.indexOf('/') + 1)
+        case _ => staged0
+      }
       // files under a __bucket=N dir get Spark's `_NNNNN` bucket-id name
       // suffix, so the native scan can read the table with a BucketSpec
       // (exchange-free co-bucketed joins; see GraftNativeRelation)
@@ -1353,6 +1383,7 @@ object GraftWriter {
       val st = fs.getFileStatus(target)
       val (rows, stats0) = footerInfo(conf, target)
       val stats = statsCols match {
+        case _ if change.isDefined => Map.empty[String, graft.log.FileColStat]
         case Some(keep) => stats0.filter { case (c, _) => keep(c) }
         case None       => stats0
       }

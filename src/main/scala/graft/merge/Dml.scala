@@ -2,10 +2,10 @@ package graft.merge
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.{GraftTable, GraftWriter}
+import graft.io.{Cdc, GraftTable, GraftWriter}
 import graft.log.{AddFile, RemoveFile}
 
 /** Row-level DELETE / UPDATE commands (the `DeltaTable.delete/update`
@@ -88,70 +88,52 @@ object Dml {
     val rowIds = graft.io.RowTracking.enabled(props)
     val aff = table.dfForFilesCarryingIds(snap, touched, carryIds = rowIds)
     val matched = coalesce(condition, lit(false)) // WHERE NULL = no-op
+    // change-data feed (opt-in `graft.cdf`): the matched rows also
+    // emit their change rows from the same scan — a DELETE's matched
+    // row becomes its delete row, an UPDATE's is kept and emits its
+    // pre- and postimage (see Cdc.tag)
+    val cdf = Cdc.enabled(props)
+    val hitKinds =
+      if (keepMatched.isEmpty) Cdc.kinds(Some(Cdc.Delete))
+      else Cdc.kinds(None, Some(Cdc.Preimage), Some(Cdc.Postimage))
+    val rows =
+      if (!cdf) aff
+      else Cdc.tag(aff, when(matched, hitKinds).otherwise(Cdc.kinds(None)))
+    // preimages keep the old values, like the rows no UPDATE matched
+    val assigned = if (cdf) matched && !Cdc.isPreimage else matched
     // UPDATE keeps every row's id but REFRESHES the matched rows' row
     // version: a NULL materialized version falls back to the new file's
     // commit version at read time (carried rows keep theirs)
     val carryCols =
       if (!rowIds) Nil
       else Seq(col(graft.io.RowTracking.PhysicalCol),
-        when(matched, lit(null).cast("long"))
+        when(assigned, lit(null).cast("long"))
           .otherwise(col(graft.io.RowTracking.PhysicalVersionCol))
           .as(graft.io.RowTracking.PhysicalVersionCol))
     val newData = keepMatched match {
-      case None => aff.filter(!matched) // DELETE
+      case None => if (cdf) rows else rows.filter(!matched) // DELETE
       case Some(set) =>
         // generated columns not explicitly SET are recomputed (identity
-        // on unmatched carried-over rows; keeps the invariant true on
-        // rows whose base columns just changed — Delta parity)
+        // on unmatched carried-over rows and preimages; keeps the
+        // invariant true on rows whose base columns just changed —
+        // Delta parity)
         graft.io.Generated.recompute(
-          aff.select(cols.map { c =>
+          rows.select(cols.map { c =>
             set.get(c)
-              .map(v => when(matched, v).otherwise(col(c)).as(c))
+              .map(v => when(assigned, v).otherwise(col(c)).as(c))
               .getOrElse(col(c))
-          } ++ carryCols: _*),
+          } ++ carryCols ++ (if (cdf) Seq(col(Cdc.ChangeCol)) else Nil): _*),
           snap.schema, props, except = set.keys.toSet)
     }
-    // change-data feed (opt-in `graft.cdf`): record the matched rows as
-    // pre/postimages — one extra pass over the TOUCHED files only
-    // (change rows carry the DECLARED schema only — the materialized
-    // row-id/version plumbing columns must not leak into the feed)
-    val changes: Option[DataFrame] =
-      if (!graft.io.Cdc.enabled(props)) None
-      else Some(changeRows(aff.drop(graft.io.RowTracking.PhysicalCol,
-        graft.io.RowTracking.PhysicalVersionCol).filter(matched),
-        snap, props, keepMatched))
     val v = GraftWriter.writeCow(spark, newData, path, snap,
       touched.map(f => RemoveFile(f.path)),
       operation = op,
       metadata = Map("operation" -> op),
-      changes = changes,
       profile = Some(dmlProfile(spark, snap, touched, condition)),
       // DELETE changes no values; UPDATE recomputed all but the SET ones
       assignedCols = Some(keepMatched.map(_.keys.toSet).getOrElse(Set.empty)))
     DmlStats(v, touched.size.toLong)
   }
-
-  /** Change-data-feed rows of the matched rows `hit`: deletes for a
-    * DELETE, pre- and postimages for an UPDATE (generated columns not
-    * SET recomputed, like the rewrite itself).
-    */
-  private def changeRows(
-      hit: DataFrame,
-      snap: graft.log.Snapshot,
-      props: Map[String, String],
-      keepMatched: Option[Map[String, Column]]): DataFrame =
-    keepMatched match {
-      case None =>
-        hit.withColumn(graft.io.Cdc.ChangeCol, lit("delete"))
-      case Some(set) =>
-        hit.withColumn(graft.io.Cdc.ChangeCol, lit("update_preimage"))
-          .unionByName(
-            graft.io.Generated.recompute(
-              hit.select(snap.schema.map(f =>
-                set.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))): _*),
-              snap.schema, props, except = set.keys.toSet)
-              .withColumn(graft.io.Cdc.ChangeCol, lit("update_postimage")))
-    }
 
   /** Conflict profile of a DELETE/UPDATE: only the touched files' rows
     * influenced the output (an untouched candidate provably held no
@@ -212,25 +194,13 @@ object Dml {
     if (updated.isEmpty) return DmlStats(snap.version, 0L)
     val touched = updated.map(_._1)
 
-    // change-data feed (opt-in `graft.cdf`): one extra pass over the
-    // TOUCHED files only, same shape as the COW path
     val props = table.log.tableProperties()
-    val changes: Option[DataFrame] =
-      if (!graft.io.Cdc.enabled(props)) None
-      else Some(changeRows(table.dfForFiles(snap, touched).filter(matched),
-        snap, props, keepMatched))
-
+    val cdf = Cdc.enabled(props)
     val removals = touched.map(f => RemoveFile(f.path))
     val dvAdds = updated.flatMap(_._2)
-    val metrics = Map(
-      "num_affected_files" -> touched.size.toLong,
-      "num_deletion_vectors" -> dvAdds.size.toLong,
-      "num_deleted_rows" -> numDeleted)
     val profile = dmlProfile(spark, snap, touched, condition)
     val v = keepMatched match {
-      case None => // DELETE: metadata-only commit, no data write at all
-        val cdcFiles =
-          changes.map(graft.io.Cdc.writeChangeFiles(spark, path, _)).getOrElse(Nil)
+      case None if !cdf => // DELETE: metadata-only commit, no data write at all
         table.log.commitOrRebase(profile, snap) { expected =>
           table.log.commit(
             operation = op,
@@ -238,31 +208,47 @@ object Dml {
             schemaDdl = snap.schema.toDDL,
             partitionColumns = snap.partitionColumns,
             metadata = Map("operation" -> op),
-            operationMetrics = metrics,
+            operationMetrics = Map(
+              "num_affected_files" -> touched.size.toLong,
+              "num_deletion_vectors" -> dvAdds.size.toLong,
+              "num_deleted_rows" -> numDeleted),
             add = dvAdds,
             remove = removals,
-            expectedVersion = Some(expected),
-            cdc = cdcFiles)
+            expectedVersion = Some(expected))
         }
+      case None => // change-data feed: the write stages the delete rows only
+        GraftWriter.writeCow(spark,
+          table.dfForFiles(snap, touched).filter(matched)
+            .withColumn(Cdc.ChangeCol, lit(Cdc.Delete)),
+          path, snap, removals,
+          operation = op,
+          metadata = Map("operation" -> op),
+          extraAdds = dvAdds,
+          profile = Some(profile),
+          assignedCols = Some(Set.empty))
       case Some(set) => // UPDATE: postimages append as new files. Row
         // tracking: the postimage carries its row's CURRENT id
         // materialized, so a DV update preserves ids exactly like the
-        // COW path (the preimage leaves via the bitmap)
+        // COW path (the preimage leaves via the bitmap). Change-data
+        // feed: each matched row also emits its pre- and postimage.
         val rowIds = graft.io.RowTracking.enabled(props)
         val postSrc =
-          table.dfForFilesCarryingIds(snap, touched, carryIds = rowIds)
+          table.dfForFilesCarryingIds(snap, touched, carryIds = rowIds).filter(matched)
+        val rows =
+          if (cdf) Cdc.tag(postSrc, Cdc.kinds(None, Some(Cdc.Preimage), Some(Cdc.Postimage)))
+          else postSrc
         val carryCols =
-          if (rowIds) Seq(col(graft.io.RowTracking.PhysicalCol)) else Nil
+          (if (rowIds) Seq(col(graft.io.RowTracking.PhysicalCol)) else Nil) ++
+            (if (cdf) Seq(col(Cdc.ChangeCol)) else Nil)
         val postimages = graft.io.Generated.recompute(
-          postSrc.filter(matched)
-            .select(cols.map(c =>
-              set.get(c).map(_.as(c)).getOrElse(col(c))) ++ carryCols: _*),
+          rows.select(cols.map(c => set.get(c)
+            .map(v => (if (cdf) when(!Cdc.isPreimage, v).otherwise(col(c)) else v).as(c))
+            .getOrElse(col(c))) ++ carryCols: _*),
           snap.schema, props, except = set.keys.toSet)
         GraftWriter.writeCow(spark, postimages, path, snap,
           removals,
           operation = op,
           metadata = Map("operation" -> op),
-          changes = changes,
           extraAdds = dvAdds,
           profile = Some(profile),
           assignedCols = Some(set.keys.toSet))

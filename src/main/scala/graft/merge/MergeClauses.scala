@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Grea
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.io.{DataSkipping, GraftTable, GraftWriter, PartitionPredicate}
+import graft.io.{Cdc, DataSkipping, GraftTable, GraftWriter, PartitionPredicate}
 import graft.log.{AddFile, RemoveFile}
 
 /** Delta-style conditional merge clauses. Clause order is significant:
@@ -57,11 +57,11 @@ final case class InsertValues(
   *      all — it appends the anti-joined inserts.
   *
   * With `graft.dv=true` step 3 becomes merge-on-read ([[dvMergeOnce]]).
-  * The source is persisted for the duration — the discovery, the
-  * rewrite and the change feed all read it. One aggregate over it (row
-  * count plus, for a plain equi-merge, the key's min/max) materializes
-  * the persisted source before the first attempt and serves stats
-  * pruning, the conflict profile and every retry.
+  * The source is persisted for the duration — the discovery and the
+  * rewrite (which also emits the change feed's rows) both read it. One
+  * aggregate over it (row count plus, for a plain equi-merge, the key's
+  * min/max) materializes the persisted source before the first attempt
+  * and serves stats pruning, the conflict profile and every retry.
   */
 object MergeClausesExecutor {
 
@@ -307,14 +307,20 @@ object MergeClausesExecutor {
     val insertTarget =
       if (m.bySource.nonEmpty || m.matched.exists(_.condition.isEmpty)) affScoped
       else candDf
+    // change-data feed (opt-in `graft.cdf`): the dispatched rows also
+    // emit their change rows, tagged (see dispatchOut) — change volume
+    // scales with the clauses' hits, never the table. A merge that
+    // touches no file commits a pure append, whose inserts the CDF
+    // reader takes from the add actions.
+    val cdf = touched.nonEmpty && Cdc.enabled(props)
     val merged = rowCore(affScoped, insertTarget, src, cond, mergedSchema, m,
-      rowLevel = needRowLevel, genCols = genCols, defaults = defaults)
+      rowLevel = needRowLevel, genCols = genCols, defaults = defaults, cdf = cdf)
     // out-of-scope rows of touched files are carried over. Null-safe
     // complement: rows where the scope evaluates to NULL are out of
     // scope (`!p` would be NULL for them and filter both ways)
     val carried = m.scope.map(p => affDf.filter(!coalesce(p, lit(false)))
       .select((cols ++ (if (rowIds) RidCols else Nil)).map(col) ++
-        genCols.map(g => lit(true).as(genFlagName(g))): _*))
+        genCols.map(g => lit(true).as(genFlagName(g))) ++ dataTag(cdf): _*))
     // generated columns are recomputed ROW-LEVEL: each row's
     // dispatched clause decides (a clause that explicitly assigns the
     // column keeps its value, checked as it is written; any other
@@ -324,23 +330,10 @@ object MergeClausesExecutor {
       carried.fold(merged)(merged.unionByName), mergedSchema, props, genFlagCol),
       genCols)
 
-    // change-data feed (opt-in `graft.cdf`): row-level pre/postimages
-    // for the touched in-scope rows plus the inserted rows — change
-    // volume scales with the clauses' hits, never the table. A merge
-    // that touches no file commits a pure append, whose inserts the CDF
-    // reader takes from the add actions.
-    val changes: Option[DataFrame] =
-      if (touched.isEmpty || !graft.io.Cdc.enabled(props)) None
-      else Some(
-        changeRows(affScoped, src, cond, cols, m, mergedSchema, props, genCols)
-          .unionByName(insertChanges(insertTarget, src, cond, mergedSchema, m,
-            props, genCols, defaults)))
-
     val v = GraftWriter.writeCow(spark, newData, path, snap,
       touched.map(f => RemoveFile(f.path)),
       operation = "MERGE",
       metadata = m.metadata,
-      changes = changes,
       schemaOverride = if (m.schemaEvolution) Some(mergedSchema) else None,
       profile = Some(conflictProfile(spark, snap, agg, m, candidates, touched)),
       // validation set = every generated column SOME clause assigns
@@ -581,24 +574,13 @@ object MergeClausesExecutor {
     // affected row re-emit the target image through the fold's default)
     val genCols = graft.io.Generated.generatedOf(props).keys.toSeq
     val defaults = graft.io.Generated.defaultsOf(props)
-    val dvRidKeep: Seq[Column] =
-      if (rowIds) Seq(
-        col(s"$ta.${graft.io.RowTracking.PhysicalCol}")
-          .as(graft.io.RowTracking.PhysicalCol),
-        // updated rows take the rewrite commit's version (NULL falls
-        // through); carried sibling re-emits keep theirs
-        when(d.kind === "update", lit(null).cast("long"))
-          .otherwise(col(s"$ta.${graft.io.RowTracking.PhysicalVersionCol}"))
-          .as(graft.io.RowTracking.PhysicalVersionCol))
-      else Nil
-    val rewrites = affected
-      .withColumn("__graft_keep", d.keep)
-      .filter(col("__graft_keep"))
-      .select(cols.map(d.outCol) ++ dvRidKeep ++
-        genCols.map(g => matchedAssignFlag(d, g).as(genFlagName(g))): _*)
+    // CDF: identical change semantics to the COW path, emitted from
+    // the same persisted affected rows
+    val cdf = touched.nonEmpty && Cdc.enabled(props)
+    val rewrites = dispatchOut(d, affected, cols, genCols, cdf)
     // anti join must see ALL in-scope candidate rows, not just touched files
-    val inserts0 = insertRows(candDfM, src, cond, mergedSchema, m.notMatched,
-      sa, ta, genCols = genCols, defaults = defaults)
+    val inserts0 = tagInserts(insertRows(candDfM, src, cond, mergedSchema, m.notMatched,
+      sa, ta, genCols = genCols, defaults = defaults), cdf)
     val inserts =
       if (rowIds) RidCols.foldLeft(inserts0)(_.withColumn(_, lit(null).cast("long")))
       else inserts0
@@ -606,21 +588,10 @@ object MergeClausesExecutor {
       rewrites.unionByName(inserts), mergedSchema, props, genFlagCol),
       genCols)
 
-    // CDF: identical change semantics to the COW path, over the touched
-    // in-scope rows of the PRE-merge snapshot
-    val changes: Option[DataFrame] =
-      if (touched.isEmpty || !graft.io.Cdc.enabled(props)) None
-      else Some(
-        changeRows(evolve(m.scoped(table.dfForFiles(snap, touched))), src,
-          cond, cols, m, mergedSchema, props, genCols)
-          .unionByName(insertChanges(candDfM, src, cond, mergedSchema, m,
-            props, genCols, defaults)))
-
     val v = GraftWriter.writeCow(spark, newData, path, snap,
       touched.map(f => RemoveFile(f.path)),
       operation = "MERGE",
       metadata = m.metadata,
-      changes = changes,
       schemaOverride = if (m.schemaEvolution) Some(mergedSchema) else None,
       extraAdds = updated.flatMap(_._2),
       profile = Some(conflictProfile(spark, snap, agg, m, candidates, touched)),
@@ -630,11 +601,12 @@ object MergeClausesExecutor {
     } finally affected.unpersist()
   }
 
-  /** The ordered clause-dispatch algebra shared by the COW rewrite, the
-    * CDF change rows, and the merge-on-read (DV) path: one left join of
-    * target and source, then per joined row the FIRST clause whose guard
-    * holds decides the output. Centralizing it guarantees the three
-    * consumers see bit-identical row semantics.
+  /** The ordered clause-dispatch algebra shared by the COW rewrite and
+    * the merge-on-read (DV) path, and the source of both paths' CDF
+    * change rows: one left join of target and source, then per joined
+    * row the FIRST clause whose guard holds decides the output.
+    * Centralizing it guarantees every consumer sees bit-identical row
+    * semantics.
     */
   private final case class Dispatch(
       target: DataFrame,
@@ -663,10 +635,11 @@ object MergeClausesExecutor {
       case UpdateSet(set, _) => set.getOrElse(name, col(s"$ta.$name"))
       case _: Delete         => col(s"$ta.$name") // filtered by keep
     }
-    def outCol(name: String): Column =
+    def outValue(name: String): Column =
       pairs.foldRight(col(s"$ta.$name")) { case ((g, c), rest) =>
         when(g, colValue(c, name)).otherwise(rest)
-      }.as(name)
+      }
+    def outCol(name: String): Column = outValue(name).as(name)
     /** False iff the dispatched clause is a Delete. */
     def keep: Column =
       pairs.foldRight(lit(true)) { case ((g, c), rest) =>
@@ -735,13 +708,14 @@ object MergeClausesExecutor {
       sa: String,
       ta: String,
       rowLevel: Boolean = false,
-      genCols: Seq[String] = Nil): DataFrame = {
+      genCols: Seq[String] = Nil,
+      cdf: Boolean = false): DataFrame = {
     if (matched.isEmpty && bySource.isEmpty)
       // no clause touches a target row: they pass through as they are
       // (the dispatch join would repeat a multi-matched row)
       return target.select(cols.map(col) ++
         RidCols.filter(target.columns.contains).map(col) ++
-        genCols.map(g => lit(true).as(genFlagName(g))): _*)
+        genCols.map(g => lit(true).as(genFlagName(g))) ++ dataTag(cdf): _*)
     val d = Dispatch(target, source, cond, matched, bySource, sa, ta)
     val pruned =
       if (!rowLevel) d.joined
@@ -758,6 +732,23 @@ object MergeClausesExecutor {
             row_number().over(w.orderBy(idxC)))
           .filter(col("__graft_aff_row") || col("__graft_rn") === 1)
       }
+    dispatchOut(d, pruned, cols, genCols, cdf)
+  }
+
+  /** The dispatched output of joined pairs `rows` (of `d.joined`): per
+    * kept pair the dispatched clause's values, the row-id plumbing when
+    * the target carries it, and the per-row generated-column flags.
+    * With `cdf` the pairs also emit their change rows, tagged
+    * ([[Cdc.tag]]): an update keeps its data row and adds its preimage
+    * and postimage, a delete becomes its delete row. Preimages keep the
+    * target's values and skip the generated-column recompute.
+    */
+  private def dispatchOut(
+      d: Dispatch,
+      rows: DataFrame,
+      cols: Seq[String],
+      genCols: Seq[String],
+      cdf: Boolean): DataFrame = {
     // row tracking: every emitted row is a target row — carry its id;
     // the row VERSION carries only when no UPDATE clause fired (an
     // updated row materializes NULL and falls through to the rewrite
@@ -765,69 +756,35 @@ object MergeClausesExecutor {
     val ridCol = graft.io.RowTracking.PhysicalCol
     val rverCol = graft.io.RowTracking.PhysicalVersionCol
     val ridKeep: Seq[Column] =
-      if (target.columns.contains(ridCol))
-        Seq(col(s"$ta.$ridCol").as(ridCol),
+      if (d.target.columns.contains(ridCol))
+        Seq(col(s"${d.ta}.$ridCol").as(ridCol),
           when(d.kind === "update", lit(null).cast("long"))
-            .otherwise(col(s"$ta.$rverCol")).as(rverCol))
+            .otherwise(col(s"${d.ta}.$rverCol")).as(rverCol))
       else Nil
-    pruned
-      .withColumn("__graft_keep", d.keep)
-      .filter(col("__graft_keep"))
-      .select(cols.map(d.outCol) ++ ridKeep ++
-        genCols.map(g => matchedAssignFlag(d, g).as(genFlagName(g))): _*)
+    if (!cdf)
+      return rows
+        .withColumn("__graft_keep", d.keep)
+        .filter(col("__graft_keep"))
+        .select(cols.map(d.outCol) ++ ridKeep ++
+          genCols.map(g => matchedAssignFlag(d, g).as(genFlagName(g))): _*)
+    Cdc.tag(rows,
+      when(d.kind === "update", Cdc.kinds(None, Some(Cdc.Preimage), Some(Cdc.Postimage)))
+        .when(d.kind === "delete", Cdc.kinds(Some(Cdc.Delete)))
+        .otherwise(Cdc.kinds(None)))
+      .select(cols.map(c =>
+        when(Cdc.isPreimage, col(s"${d.ta}.$c")).otherwise(d.outValue(c)).as(c)) ++
+        ridKeep ++
+        genCols.map(g => (matchedAssignFlag(d, g) || Cdc.isPreimage).as(genFlagName(g))) :+
+        col(Cdc.ChangeCol): _*)
   }
 
-  /** Change rows for the CDF: per touched-file row, the first applicable
-    * clause decides its change kind — `update` emits the old image
-    * (`update_preimage`) and the new image (`update_postimage`),
-    * `delete` emits the old image. Mirrors [[rewriteRows]]' dispatch
-    * exactly (same join, same ordered guards via [[Dispatch]]) so the
-    * images are bit-identical to what the rewrite wrote.
-    */
-  private def changeRows(
-      target: DataFrame,
-      source: DataFrame,
-      cond: Column,
-      cols: Seq[String],
-      m: Spec,
-      schema: StructType,
-      props: Map[String, String],
-      genCols: Seq[String]): DataFrame = {
-    val d = Dispatch(target, source, cond, m.matched, m.bySource, m.sa, m.ta)
-    val tagged = d.joined.withColumn("__graft_kind", d.kind)
-    val oldCols = cols.map(c => col(s"${m.ta}.$c").as(c))
-    val cc = graft.io.Cdc.ChangeCol
-    val updates = tagged.filter(col("__graft_kind") === "update")
-    updates.select(oldCols :+ lit("update_preimage").as(cc): _*)
-      .unionByName(
-        // postimages mirror the rewrite's ROW-LEVEL recompute so the
-        // feed's new images are bit-identical to what the table holds
-        dropGenFlags(graft.io.Generated.recomputeGated(
-          updates.select(cols.map(d.outCol) ++
-            genCols.map(g => matchedAssignFlag(d, g).as(genFlagName(g))): _*),
-          schema, props, genFlagCol), genCols)
-          .withColumn(cc, lit("update_postimage")))
-      .unionByName(tagged.filter(col("__graft_kind") === "delete")
-        .select(oldCols :+ lit("delete").as(cc): _*))
-  }
+  /** The change-type column of untouched data rows in a tagged frame. */
+  private def dataTag(cdf: Boolean): Seq[Column] =
+    if (cdf) Seq(lit(null).cast("string").as(Cdc.ChangeCol)) else Nil
 
-  /** The insert rows as `insert` change rows (declared schema, no id
-    * plumbing; generated columns recomputed like the written rows).
-    */
-  private def insertChanges(
-      target: DataFrame,
-      source: DataFrame,
-      cond: Column,
-      schema: StructType,
-      m: Spec,
-      props: Map[String, String],
-      genCols: Seq[String],
-      defaults: Map[String, String]): DataFrame =
-    dropGenFlags(graft.io.Generated.recomputeGated(
-      insertRows(target, source, cond, schema, m.notMatched, m.sa, m.ta,
-        genCols = genCols, defaults = defaults),
-      schema, props, genFlagCol), genCols)
-      .withColumn(graft.io.Cdc.ChangeCol, lit("insert"))
+  /** Insert rows, with `cdf` each also emitted as its `insert` change row. */
+  private def tagInserts(inserts: DataFrame, cdf: Boolean): DataFrame =
+    if (cdf) Cdc.tag(inserts, Cdc.kinds(None, Some(Cdc.Insert))) else inserts
 
   /** Generated columns at least one clause EXPLICITLY assigns (UPDATE
     * SET / INSERT VALUES naming them, or any full-row UPDATE ALL /
@@ -868,11 +825,13 @@ object MergeClausesExecutor {
       m: Spec,
       rowLevel: Boolean = false,
       genCols: Seq[String] = Nil,
-      defaults: Map[String, String] = Map.empty): DataFrame = {
-    val inserts = insertRows(insertTarget, source, cond, schema, m.notMatched,
-      m.sa, m.ta, genCols = genCols, defaults = defaults)
+      defaults: Map[String, String] = Map.empty,
+      /** Also emit the change rows, tagged (see [[dispatchOut]]). */
+      cdf: Boolean = false): DataFrame = {
+    val inserts = tagInserts(insertRows(insertTarget, source, cond, schema, m.notMatched,
+      m.sa, m.ta, genCols = genCols, defaults = defaults), cdf)
     rewriteRows(target, source, cond, schema.map(_.name), m.matched, m.bySource,
-      m.sa, m.ta, rowLevel = rowLevel, genCols = genCols)
+      m.sa, m.ta, rowLevel = rowLevel, genCols = genCols, cdf = cdf)
       .unionByName(RidCols.filter(target.columns.contains)
         .foldLeft(inserts)(_.withColumn(_, lit(null).cast("long"))))
   }

@@ -120,8 +120,8 @@ class LogStoreSpec extends SparkSpec {
   }
 
   test("end-to-end: writes through the session-conf-selected store round-trip") {
-    val key = s"spark.hadoop.${LogStore.ConfKey}"
-    spark.conf.set(key, classOf[ConditionalPutLogStore].getName)
+    // a session conf reaches the writers' Hadoop conf under its bare key
+    spark.conf.set(LogStore.ConfKey, classOf[CountingCondPutStore].getName)
     try {
       val p = tmpDir("lse2e") + "/t"
       GraftWriter.write(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), p,
@@ -130,8 +130,29 @@ class LogStoreSpec extends SparkSpec {
         WriteOptions(mode = WriteMode.Append))
       assert(GraftTable(spark, p).toDf().collect().map(_.getLong(0)).toSet ==
         Set(1L, 2L, 3L))
-    } finally spark.conf.unset(key)
+      // both commits went through the selected store
+      val logDir = new CommitLog(p, spark.sessionState.newHadoopConf())
+        .logDir.toUri.getPath
+      assert(CountingCondPutStore.published.toArray.map(_.toString)
+        .count(_.startsWith(logDir + "/")) == 2)
+    } finally spark.conf.unset(LogStore.ConfKey)
   }
+}
+
+/** A conditional-put store recording each path it published. */
+class CountingCondPutStore extends ConditionalPutLogStore {
+  override def publish(
+      fs: FileSystem,
+      conf: Configuration,
+      tmp: Path,
+      target: Path,
+      context: String): Unit = {
+    super.publish(fs, conf, tmp, target, context)
+    CountingCondPutStore.published.add(target.toUri.getPath)
+  }
+}
+object CountingCondPutStore {
+  val published = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
 
 /** A conditional-put whose exclusive create is ATOMIC (JVM lock around
