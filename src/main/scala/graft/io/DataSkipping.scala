@@ -70,8 +70,10 @@ private[graft] object DataSkipping {
     * data columns as in `statsSchema`, the names footer stats are keyed
     * by. A partition conjunct must be resolved, deterministic and
     * subquery-free; anything else goes to the footer-stats check, which
-    * keeps every file it cannot rule out. Compiled once; the returned
-    * function keeps each row, possibly with no files left.
+    * keeps every file it cannot rule out. Built once per call with no
+    * code generation (the partition test is interpreted, see
+    * [[PartitionPredicate.compile]]); the returned function keeps each
+    * row, possibly with no files left.
     */
   def pruner(
       partSchema: StructType,

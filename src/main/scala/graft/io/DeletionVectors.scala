@@ -41,6 +41,18 @@ object DeletionVectors {
   def enabled(tableProperties: Map[String, String]): Boolean =
     tableProperties.get(PropKey).exists(_.equalsIgnoreCase("true"))
 
+  /** The `operationMetrics` of a `dv`-mode commit, from
+    * [[bitmapUpdates]]' answer: the files whose deletion vector changed,
+    * the vectors written (a file left with no live row is removed
+    * instead) and the rows the new bits delete.
+    */
+  def commitMetrics(
+      updated: Seq[(AddFile, Option[AddFile])],
+      deletedRows: Long): Map[String, Long] = Map(
+    "num_affected_files" -> updated.size.toLong,
+    "num_deletion_vectors" -> updated.count(_._2.isDefined).toLong,
+    "num_deleted_rows" -> deletedRows)
+
   def serialize(bm: RoaringBitmap): Array[Byte] = {
     bm.runOptimize()
     val bos = new ByteArrayOutputStream(bm.serializedSizeInBytes())

@@ -204,15 +204,16 @@ final class GraftTable(val spark: SparkSession, val path: String) {
     log.tableProperties().get(graft.log.CommitLog.txnKey(appId)).map(_.toLong)
 
   /** History as a DataFrame (Delta `DESCRIBE HISTORY`): one row per
-    * commit, newest first.
+    * commit, newest first, ending with the commit's full
+    * `operation_metrics`.
     */
   def historyDf(): DataFrame = {
     import spark.implicits._
     history().map(c => (c.version, c.timestampMs, c.operation, c.mode,
       c.add.size.toLong, c.remove.size.toLong,
-      c.operationMetrics.getOrElse("num_output_rows", -1L)))
+      c.operationMetrics.getOrElse("num_output_rows", -1L), c.operationMetrics))
       .toDF("version", "timestamp_ms", "operation", "mode",
-        "num_added_files", "num_removed_files", "num_output_rows")
+        "num_added_files", "num_removed_files", "num_output_rows", "operation_metrics")
   }
 
   /** One-row table summary (Delta `DESCRIBE DETAIL`). */

@@ -1073,7 +1073,13 @@ object GraftWriter {
         * assigned ones are checked as the rows are written. None =
         * check every declared generated column.
         */
-      assignedCols: Option[Set[String]] = None): Long = {
+      assignedCols: Option[Set[String]] = None,
+      /** The commit's mode: `dv` for merge-on-read commits, which pass
+        * their counters ([[DeletionVectors.commitMetrics]]) in
+        * `extraMetrics` beside the rewrite's own.
+        */
+      mode: String = "cow",
+      extraMetrics: Map[String, Long] = Map.empty): Long = {
     val conf = spark.sessionState.newHadoopConf()
     val log = new CommitLog(path, conf)
     val fs = new Path(path).getFileSystem(conf)
@@ -1111,7 +1117,7 @@ object GraftWriter {
     // With a profile, commuting winners rebase instead of conflicting.
     def doCommit(expected: Long): Long = log.commit(
       operation = operation,
-      mode = "cow",
+      mode = mode,
       schemaDdl = schema.toDDL,
       partitionColumns = snap.partitionColumns,
       // a merge insert may SUPPLY identity values (BY DEFAULT
@@ -1122,7 +1128,7 @@ object GraftWriter {
       operationMetrics = Map(
         "num_added_files" -> added.size.toLong,
         "num_removed_files" -> removals.size.toLong,
-        "num_output_rows" -> added.map(_.numRecords).sum),
+        "num_output_rows" -> added.map(_.numRecords).sum) ++ extraMetrics,
       add = added ++ extraAdds,
       remove = removals,
       expectedVersion = Some(expected),

@@ -53,12 +53,15 @@ object PartitionPredicate {
 
   /** A test of a row of layout `schema` against all of `conds`,
     * resolved predicates whose attributes name fields of `schema`;
-    * compiled once.
+    * interpreted: a test runs once over few rows (one per partition or
+    * file), and generated code would inline each literal, so every new
+    * partition value would compile a class of its own. Spark's own
+    * partition pruners interpret for the same reason.
     */
   def compile(schema: StructType, conds: Seq[Expression]): InternalRow => Boolean =
     if (conds.isEmpty) _ => true
     else {
-      val pred = Predicate.create(conds.reduce(And).transform {
+      val pred = Predicate.createInterpreted(conds.reduce(And).transform {
         case a: AttributeReference =>
           val i = schema.fieldIndex(a.name)
           BoundReference(i, schema(i).dataType, nullable = true)

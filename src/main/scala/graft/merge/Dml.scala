@@ -198,6 +198,7 @@ object Dml {
     val cdf = Cdc.enabled(props)
     val removals = touched.map(f => RemoveFile(f.path))
     val dvAdds = updated.flatMap(_._2)
+    val dvMetrics = DeletionVectors.commitMetrics(updated, numDeleted)
     val profile = dmlProfile(spark, snap, touched, condition)
     val v = keepMatched match {
       case None if !cdf => // DELETE: metadata-only commit, no data write at all
@@ -208,10 +209,7 @@ object Dml {
             schemaDdl = snap.schema.toDDL,
             partitionColumns = snap.partitionColumns,
             metadata = Map("operation" -> op),
-            operationMetrics = Map(
-              "num_affected_files" -> touched.size.toLong,
-              "num_deletion_vectors" -> dvAdds.size.toLong,
-              "num_deleted_rows" -> numDeleted),
+            operationMetrics = dvMetrics,
             add = dvAdds,
             remove = removals,
             expectedVersion = Some(expected))
@@ -225,7 +223,9 @@ object Dml {
           metadata = Map("operation" -> op),
           extraAdds = dvAdds,
           profile = Some(profile),
-          assignedCols = Some(Set.empty))
+          assignedCols = Some(Set.empty),
+          mode = "dv",
+          extraMetrics = dvMetrics)
       case Some(set) => // UPDATE: postimages append as new files. Row
         // tracking: the postimage carries its row's CURRENT id
         // materialized, so a DV update preserves ids exactly like the
@@ -251,7 +251,9 @@ object Dml {
           metadata = Map("operation" -> op),
           extraAdds = dvAdds,
           profile = Some(profile),
-          assignedCols = Some(set.keys.toSet))
+          assignedCols = Some(set.keys.toSet),
+          mode = "dv",
+          extraMetrics = dvMetrics)
     }
     DmlStats(v, touched.size.toLong)
   }

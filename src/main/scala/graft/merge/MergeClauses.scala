@@ -566,7 +566,7 @@ object MergeClausesExecutor {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
 
-    val (updated, _) = DeletionVectors.bitmapUpdates(
+    val (updated, numDeleted) = DeletionVectors.bitmapUpdates(
       spark, path, snap, affected.select(fileC, idxC))
     val touched = updated.map(_._1)
 
@@ -595,7 +595,9 @@ object MergeClausesExecutor {
       schemaOverride = if (m.schemaEvolution) Some(mergedSchema) else None,
       extraAdds = updated.flatMap(_._2),
       profile = Some(conflictProfile(spark, snap, agg, m, candidates, touched)),
-      assignedCols = Some(explicitGenerated(props, m)))
+      assignedCols = Some(explicitGenerated(props, m)),
+      mode = "dv",
+      extraMetrics = DeletionVectors.commitMetrics(updated, numDeleted))
     val numOut = table.snapshot().files.map(_.liveRecords).sum
     MergeStats(v, agg.rows, numOut)
     } finally affected.unpersist()

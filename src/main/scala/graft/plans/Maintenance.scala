@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.{LongType, MapType, StringType}
 
 import graft.io.{GraftTable, GraftWriter}
 
@@ -877,13 +877,15 @@ final case class GraftDescribeHistoryCommand(
     AttributeReference("mode", StringType, nullable = false)(),
     AttributeReference("num_added_files", LongType, nullable = false)(),
     AttributeReference("num_removed_files", LongType, nullable = false)(),
-    AttributeReference("num_output_rows", LongType, nullable = false)())
+    AttributeReference("num_output_rows", LongType, nullable = false)(),
+    AttributeReference("operation_metrics",
+      MapType(StringType, LongType, valueContainsNull = false), nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
     val path = GraftMaintenance.resolvePath(spark, target)
     GraftTable(spark, path).history().map(c => Row(
       c.version, c.timestampMs, c.operation, c.mode,
       c.add.size.toLong, c.remove.size.toLong,
-      c.operationMetrics.getOrElse("num_output_rows", -1L)))
+      c.operationMetrics.getOrElse("num_output_rows", -1L), c.operationMetrics))
   }
 }
 

@@ -20,8 +20,9 @@ import graft.log.{AddFile, Snapshot}
   *
   * `listFiles` prunes driver-side through [[graft.io.DataSkipping.pruner]],
   * the pruner the conflict checks and merge key ranges share:
-  *   - partition pruning: catalyst partition filters evaluated once per
-  *     distinct partition-value map by [[graft.io.PartitionPredicate]];
+  *   - partition pruning: catalyst partition filters interpreted (no
+  *     generated class per literal) once per distinct partition-value
+  *     map by [[graft.io.PartitionPredicate]];
   *   - data skipping: comparison filters against footer min/max stats
   *     drop whole files, then declared bloom columns answer `=`/`IN`
   *     probes. Unsupported filter shapes simply skip nothing — Spark

@@ -98,6 +98,39 @@ class DeletionVectorSpec extends SparkSpec {
     assert(snap.files.exists(_.dv.isDefined))
   }
 
+  test("DV update, CDF DV delete and DV merge commit as mode dv with the DV counters") {
+    import graft.merge._
+    // the newest DESCRIBE HISTORY row of `p` must be a dv commit whose
+    // counters say `deleted` rows left through deletion vectors
+    def dvCommit(p: String, deleted: Long): Unit = {
+      val h = spark.sql(s"DESCRIBE HISTORY graft.`$p`").head()
+      assert(h.getAs[Long]("version") == GraftTable(spark, p).version())
+      assert(h.getAs[String]("mode") == "dv", h)
+      val m = h.getMap[String, Long](h.fieldIndex("operation_metrics"))
+      assert(m("num_deleted_rows") == deleted, m)
+      assert(m("num_affected_files") > 0, m)
+      assert(m("num_deletion_vectors") > 0 && m("num_deletion_vectors") <= m("num_affected_files"), m)
+    }
+    val byThree = col("o_orderkey") % 3 === 0
+    val pUpd = tmpDir("dv_hist_upd")
+    writeDvTable(pUpd)
+    Dml.update(spark, pUpd, byThree, Map("o_totalprice" -> (col("o_totalprice") * 2)))
+    dvCommit(pUpd, orders.filter(byThree).count())
+
+    val pDel = tmpDir("dv_hist_cdf_del")
+    writeDvTable(pDel, Map(Cdc.PropKey -> "true"))
+    Dml.delete(spark, pDel, byThree)
+    dvCommit(pDel, orders.filter(byThree).count())
+
+    val pMrg = tmpDir("dv_hist_mrg")
+    writeDvTable(pMrg)
+    val bySeven = col("o_orderkey") % 7 === 0
+    MergeExecutor.merge(spark,
+      orders.filter(bySeven).withColumn("o_totalprice", col("o_totalprice") + 1.0), pMrg,
+      MergeConfig(MergeType.Upsert, "s.o_orderkey = t.o_orderkey"))
+    dvCommit(pMrg, orders.filter(bySeven).count())
+  }
+
   test("time travel reads pre-delete state; CDF surfaces DV deletes") {
     val p = tmpDir("dv_tt")
     writeDvTable(p)

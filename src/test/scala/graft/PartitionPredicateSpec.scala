@@ -191,4 +191,99 @@ class PartitionPredicateSpec extends SparkSpec {
       case (s, i)     => (s, i.toLong)
     }.toSet)
   }
+
+  test("pruned listings, replaceWhere removal sets and file matchers compile no class per literal") {
+    import java.time.{Instant, LocalDate}
+    import org.apache.spark.sql.graft.CodegenCount
+    import graft.log.{AddFile, CommitLog}
+    import graft.sources.GraftFileIndex
+    val p = tmpDir("pp_codegen") + "/t"
+    // a metadata-only table, one file per k: the listings never open a
+    // data file. Literals of these four types are inlined by generated
+    // code, so a compiled predicate would be a new class per value.
+    val n = 20
+    def values(k: Int): Map[String, Any] = Map(
+      "i" -> (7300 + k),
+      "l" -> (7300000000L + k),
+      "d" -> LocalDate.of(2037, 3, 1).plusDays(k),
+      "t" -> Instant.parse("2037-03-01T00:00:00Z").plusSeconds(97L * k + 13))
+    def logValue(v: Any): String = v match {
+      case t: Instant => t.toString.replace("T", " ").stripSuffix("Z")
+      case other      => other.toString
+    }
+    val files = (0 to n).map { k =>
+      AddFile(s"part-$k.parquet", values(k).map { case (c, v) => c -> logValue(v) },
+        1024L, 10L, 1L)
+    }
+    new CommitLog(p, spark.sessionState.newHadoopConf()).commit("WRITE", "Append",
+      "v BIGINT, i INT, l BIGINT, d DATE, t TIMESTAMP", Seq("i", "l", "d", "t"),
+      Map.empty, Map.empty, files, Nil)
+    val snap = GraftTable(spark, p).snapshot()
+    val idx = new GraftFileIndex(spark, p, snap)
+    val zone = spark.sessionState.conf.sessionLocalTimeZone
+    // every path on every column finds exactly file k
+    def round(k: Int): Unit = Seq("i", "l", "d", "t").foreach { c =>
+      val pred = col(c) === lit(values(k)(c))
+      val cond = PartitionPredicate.analyze(spark, snap.schema, pred)
+      val listed = idx.listFiles(Seq(cond), Nil).flatMap(_.files).map(_.getPath.getName)
+      assert(listed == Seq(s"part-$k.parquet"), s"listing $pred")
+      assert(PartitionPredicate.files(spark, snap, pred).map(_.path) == Seq(s"part-$k.parquet"),
+        s"removal set $pred")
+      val matches = DataSkipping.fileMatcher(snap, zone, Seq(cond))
+      assert(snap.files.filter(matches).map(_.path) == Seq(s"part-$k.parquet"), s"matcher $pred")
+    }
+    round(n) // one-time set-up of the paths is not what this pins
+    val (_, compiled) = CodegenCount.compiles((0 until n).foreach(round))
+    assert(compiled == 0, s"$compiled classes compiled for ${4 * n} new partition literals")
+  }
+
+  test("pruned listings keep exactly the files Spark's own filter selects, per partition and per file") {
+    import graft.log.CommitLog
+    import graft.sources.GraftFileIndex
+    val p = tmpDir("pp_matrix") + "/t"
+    val schema = StructType(Seq(
+      StructField("v", LongType), StructField("s", StringType), StructField("i", IntegerType)))
+    val ss = Seq("a+b", "x y", "c%2Bd", "k=v", "é", "日本", null)
+    val is = Seq[Integer](1, 2, 3, null)
+    val data = (0 until 56).map(n => org.apache.spark.sql.Row(n.toLong, ss(n % 7), is(n % 4)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(data, 2), schema)
+    GraftWriter.write(spark, df, p, WriteOptions(mode = WriteMode.Overwrite,
+      partitionBy = Seq("s", "i"), metadata = Map(CommitLog.RowTrackingKey -> "true")))
+    // a second append puts several files in some partitions
+    GraftWriter.write(spark, df.filter(col("v") < 20), p, WriteOptions(mode = WriteMode.Append))
+    val snap = GraftTable(spark, p).snapshot()
+    assert(snap.files.forall(_.baseRowId.isDefined))
+
+    val plain = spark.read.schema(schema).parquet(p)
+    def norm(s: String): String = new Path(new java.net.URI(s)).toUri.getPath
+    val live = snap.files.map(f => norm(new Path(p, f.path).toUri.toString) -> f).toMap
+    val preds: Seq[Column] = Seq(
+      col("s").isNull,
+      col("i").isNull && col("s").isNotNull,
+      col("s").isin("é", "日本", "x y"),
+      col("i").isin(1, 3),
+      col("i").cast("string") === "2",
+      col("s") === "c%2Bd" || col("i").isNull,
+      col("s") > "k",
+      upper(col("s")) === "É",
+      col("s") <=> lit(null).cast("string") && col("i") === 1)
+    Seq(false, true).foreach { perFile =>
+      val idx = new GraftFileIndex(spark, p, snap, withBaseRowIdCol = perFile)
+      preds.foreach { pred =>
+        val want = plain.filter(pred).select(input_file_name()).distinct()
+          .as[String].collect().map(s => live(norm(s))).toSet
+        val dirs = idx.listFiles(
+          Seq(PartitionPredicate.analyze(spark, idx.partitionSchema, pred)), Nil)
+        val got = dirs.flatMap(_.files).map(f => live(norm(f.getPath.toUri.toString))).toSet
+        assert(got == want, s"$pred (per file: $perFile)")
+        assert(got.nonEmpty && got.size < snap.files.size, s"$pred selects a proper subset")
+        // per-file rows: one file each, whose row holds its own base row id
+        if (perFile) dirs.foreach { d =>
+          assert(d.files.length == 1)
+          val f = live(norm(d.files.head.getPath.toUri.toString))
+          assert(d.values.getLong(2) == f.baseRowId.get, s"$pred: ${f.path}")
+        }
+      }
+    }
+  }
 }

@@ -1044,6 +1044,72 @@ class TableLayerSpec extends SparkSpec {
       s"expected a shard-count error, got: ${ex.getMessage}")
   }
 
+  /** A metadata-only table of `n` add actions (no parquet behind them),
+    * committed 1,000 at a time with checkpoints off.
+    */
+  private def metadataTable(p: String, n: Int): graft.log.Snapshot = {
+    import graft.log.{AddFile, CommitLog, FileColStat}
+    val log = new CommitLog(p, spark.sessionState.newHadoopConf(), checkpointInterval = 0)
+    (0 until n).grouped(1000).foreach { g =>
+      log.commit("WRITE", "Append", "id BIGINT, p BIGINT", Seq("p"), Map.empty, Map.empty,
+        g.map(i => AddFile(f"p=${i % 10}/part-$i%06d.parquet", Map("p" -> (i % 10).toString),
+          1024L, 10L, 1L, stats = Map("id" -> FileColStat(Some(s"$i"), Some(s"$i"), 0L)))),
+        Nil)
+    }
+    log.snapshot()
+  }
+
+  /** The log's file names after checkpointing `snap` with `log`, then
+    * the table reopened by a default log with every commit below the
+    * checkpoint deleted, so the open must go through it.
+    */
+  private def checkpointAndReopen(
+      p: String,
+      snap: graft.log.Snapshot,
+      log: graft.log.CommitLog): (Seq[String], graft.log.Snapshot) = {
+    import org.apache.hadoop.fs.Path
+    val v = snap.version
+    log.writeCheckpoint(v)
+    val fs = log.fs
+    val names = fs.listStatus(log.logDir).toSeq.map(_.getPath.getName)
+    (0L until v).foreach(u => fs.delete(new Path(log.logDir, f"v$u%010d.json"), false))
+    val reopened = new graft.log.CommitLog(p, spark.sessionState.newHadoopConf()).snapshot()
+    assert(reopened.commits.map(_.version) == Seq(v), "the open replayed from the checkpoint")
+    assert(reopened.files == snap.files)
+    (names.filter(_.startsWith(f"ckpt-v$v%010d")), reopened)
+  }
+
+  test("a table past one checkpoint shard writes a manifest and at least 4 shards, and reopens identically") {
+    import graft.log.CommitLog
+    val p = tmpDir("ckpt_default_shards")
+    val snap = metadataTable(p, 4 * CommitLog.DefaultCheckpointShardRecords + 1)
+    val (ckpt, _) = checkpointAndReopen(p, snap,
+      new CommitLog(p, spark.sessionState.newHadoopConf()))
+    val v = snap.version
+    assert(ckpt.contains(f"ckpt-v$v%010d.manifest"))
+    assert(!ckpt.contains(f"ckpt-v$v%010d.json.gz"))
+    assert(ckpt.count(_.contains(".shard-")) >= 4, ckpt.mkString(", "))
+  }
+
+  test("a single-document checkpoint above the shard threshold, as the older default wrote, still opens") {
+    import graft.log.CommitLog
+    val p = tmpDir("ckpt_old_single")
+    val snap = metadataTable(p, 2 * CommitLog.DefaultCheckpointShardRecords)
+    // the pre-sharding default threshold: one document of every file
+    val (ckpt, _) = checkpointAndReopen(p, snap,
+      new CommitLog(p, spark.sessionState.newHadoopConf(), checkpointShardRecords = 100000))
+    assert(ckpt == Seq(f"ckpt-v${snap.version}%010d.json.gz"))
+  }
+
+  test("a table of at most one shard keeps the single-document checkpoint") {
+    import graft.log.CommitLog
+    val p = tmpDir("ckpt_one_shard")
+    val snap = metadataTable(p, CommitLog.DefaultCheckpointShardRecords)
+    val (ckpt, _) = checkpointAndReopen(p, snap,
+      new CommitLog(p, spark.sessionState.newHadoopConf()))
+    assert(ckpt == Seq(f"ckpt-v${snap.version}%010d.json.gz"))
+  }
+
   test("OPTIMIZE bin-packs: already-large files are never rewritten") {
     val p = tmpDir("binpack")
     // two "large" appends and three small ones (size floor forced tiny
